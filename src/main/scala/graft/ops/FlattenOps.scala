@@ -439,7 +439,7 @@ object FlattenOps {
     }
     case a: ArrayType => d match {
       case JArray(items) if items.isEmpty =>
-        lit(Array.empty[Int]).cast(SchemaConverters.toSparkType(s, a))
+        array().cast(SchemaConverters.toSparkType(s, a))
       case JArray(items) =>
         array(items.map(i => literalFor(s, s.resolve(a.items), i)): _*)
       case _ => lit(null).cast(SchemaConverters.toSparkType(s, a))

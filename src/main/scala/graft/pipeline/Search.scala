@@ -32,13 +32,21 @@ import org.apache.spark.sql.types.LongType
   * are corpus-sized — the big side streams map-only, no shuffle), the
   * per-term doc frequencies arrive through a second broadcast (df
   * restricted to query terms first, so the broadcast is bounded by
-  * the query vocabulary, never the corpus vocabulary), and the only
-  * exchange in the whole search is the `(query_id, doc_id)` score
-  * aggregation — partial map-side combine, keyed, never a hotspot.
-  * Top-k is a `query_id`-partitioned window, never a global sort. The
-  * persisted index is range-partitioned and sorted on `tok`, so a
+  * the query vocabulary, never the corpus vocabulary). The query-term
+  * set is de-duplicated on one partition before its broadcast, so set
+  * semantics cost no exchange. Scoring then takes two exchanges: the
+  * `(query_id, doc_id)` score aggregation (partial map-side combine,
+  * keyed, never a hotspot) and the `query_id` partitioning of the
+  * scored rows for the top-k window (never a global sort). One
+  * `query_id` exchange of the raw candidate rows would save a job but
+  * loses the map-side combine and puts a query's every matching
+  * posting on one partition; it was measured slower on the sf0.1
+  * BM25 workload and on a query of a large corpus's most common terms.
+  * The persisted index is range-partitioned and sorted on `tok`, so a
   * selective term probe skips non-matching files on parquet footer
-  * min/max alone.
+  * min/max alone; its sidecars are read with the schema from their
+  * own footers ([[SidecarIO.readWithFallback]]), so serving a search
+  * runs no schema-inference job.
   *
   * Collection stats contract: `N` counts documents with ≥ 1 token
   * (blank/NULL docs can never match, carry no length signal, and
@@ -110,7 +118,8 @@ object Search {
   /** Shared scoring tail: quantized components → exact integer sum →
     * per-query top-k window. `cand` carries
     * `query_id, doc_id, tf, dl, df` (+ whatever stats columns the
-    * `nD`/`avgDl` expressions read).
+    * `nD`/`avgDl` expressions read), one row per distinct query term
+    * ([[queryTerms]]).
     */
   private def scoreAndRank(cand: DataFrame, nD: Column, avgDl: Column,
       k: Int, k1: Double, b: Double, logIdf: Boolean): DataFrame = {
@@ -128,6 +137,17 @@ object Search {
         col("score_q"))
   }
 
+  /** The distinct `(query_id, tok)` pairs of a query frame (set
+    * semantics, across rows that share a query id too). The set is
+    * broadcast whole, so one partition costs nothing: a distinct over
+    * a single partition needs no exchange (and no job of its own).
+    */
+  private def queryTerms(queries: DataFrame, queryIdCol: String,
+      queryTextCol: String): DataFrame =
+    explodedTokens(queries, queryIdCol, queryTextCol)
+      .select(col("doc_id").as("query_id"), col("tok"))
+      .coalesce(1).distinct()
+
   /** Top-`k` documents per query: `(query_id, rank, doc_id, score_q)`
     * with `score_q` the exact quantized-long BM25 sum and `rank`
     * 1-based dense per query (ties break on `doc_id` ascending —
@@ -139,9 +159,7 @@ object Search {
       queryTextCol: String, k: Int, k1: Double = 1.2,
       b: Double = 0.75, logIdf: Boolean = false): DataFrame = {
     require(k >= 1, s"top-k size $k must be >= 1")
-    val qt = explodedTokens(queries, queryIdCol, queryTextCol)
-      .select(col("doc_id").as("query_id"), col("tok"))
-      .distinct()
+    val qt = queryTerms(queries, queryIdCol, queryTextCol)
     // df restricted to query terms BEFORE broadcasting: bounded by the
     // query vocabulary, not the corpus vocabulary
     val qdf = index.docFreq.join(broadcast(qt), "tok")
@@ -173,9 +191,7 @@ object Search {
       .agg(count(lit(1)).cast(LongType).as("df"))
     val stats = dl.agg(count(lit(1)).cast(LongType).as("n"),
       sum(col("dl")).cast(LongType).as("sumdl"))
-    val qt = explodedTokens(queries, queryIdCol, queryTextCol)
-      .select(col("doc_id").as("query_id"), col("tok"))
-      .distinct()
+    val qt = queryTerms(queries, queryIdCol, queryTextCol)
     val qdf = docFreq.join(broadcast(qt), "tok")
       .select(col("tok"), col("query_id"), col("df"))
     val cand = tf.join(dl, "doc_id").join(broadcast(qdf), "tok")
@@ -399,7 +415,7 @@ object Search {
       case None => s"$path/postings"
     }
     val floor = sentinels.getOrElse(SentFloor, -1L)
-    val base = spark.read.parquet(baseDir)
+    val base = SidecarIO.readWithFallback(spark, baseDir)
     val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/postings_delta")
     val fs = deltaRoot.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -413,7 +429,7 @@ object Search {
         .filter(_ > floor)
     else Seq.empty
     val postings = if (liveDeltas.nonEmpty)
-      base.unionAll(spark.read.parquet(deltaRoot.toString)
+      base.unionAll(SidecarIO.readWithFallback(spark, deltaRoot.toString)
         .filter(col("batch") > floor) // compacted-away deltas ignored
         .select(col("tok"), col("doc_id"), col("tf"), col("dl")))
     else base

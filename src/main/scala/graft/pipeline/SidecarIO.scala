@@ -1,8 +1,13 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.Try
 
 /** Crash-safe overwrite for the small persisted sidecars (bloom words,
   * count-min cells, bottom-k samples, …): `mode("overwrite")` on the
@@ -98,20 +103,80 @@ object SidecarIO {
     }
   }
 
-  /** Read `dest`, falling back to the `_prev` generation if a crashed
-    * swap left the live dir missing. Pass `schema` for sidecars whose
-    * live dir can legitimately hold ZERO data files (a partitionBy
-    * write of an empty frame — e.g. a sharded bloom seeded from an
-    * empty key set — commits only `_SUCCESS`): schema inference has
-    * nothing to read there and throws, while an explicit schema reads
-    * the empty generation as the empty frame it is.
+  /** Read the parquet sidecar `dest`, falling back to the `_prev`
+    * generation if a crashed swap left the live dir missing.
+    *
+    * The read runs no schema-inference job: Spark infers a parquet
+    * schema by reading footers in a distributed job, but every
+    * Spark-written data file already carries the row schema in its
+    * footer (key `org.apache.spark.sql.parquet.row.metadata`), so one
+    * footer read on the driver resolves it. Partition columns
+    * (`batch=<id>` directories) are still discovered from the paths
+    * exactly as an inferred read discovers them. A directory with no
+    * data file (or a file without Spark's key) falls back to inference.
+    *
+    * Pass `schema` for sidecars whose live dir can legitimately hold
+    * ZERO data files (a partitionBy write of an empty frame — e.g. a
+    * sharded bloom seeded from an empty key set — commits only
+    * `_SUCCESS`): inference has nothing to read there and throws, while
+    * an explicit schema reads the empty generation as the empty frame
+    * it is.
     */
   def readWithFallback(spark: SparkSession, dest: String,
       schema: Option[StructType] = None): DataFrame = {
+    val dir = liveOrPrev(spark, dest)
+    val conf = spark.sparkContext.hadoopConfiguration
+    schema.orElse(footerSchema(dir, conf))
+      .fold(spark.read)(s => spark.read.schema(s))
+      .parquet(dir.toString)
+  }
+
+  /** `dest`, or its `_prev` generation when a crashed swap left only
+    * that one on disk (a missing dir with no `_prev` stays `dest`, so
+    * the read fails naming the path the caller asked for).
+    */
+  private def liveOrPrev(spark: SparkSession, dest: String): Path = {
     val destPath = new Path(dest)
+    val prev = new Path(dest + "_prev")
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    if (fs.exists(destPath)) reader.parquet(dest)
-    else reader.parquet(dest + "_prev")
+    if (!fs.exists(destPath) && fs.exists(prev)) prev else destPath
+  }
+
+  /** The Spark row schema stored in the footer of the first data file
+    * under `dir` (recursing into partition directories), if any.
+    */
+  private def footerSchema(dir: Path,
+      conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
+    val fs = dir.getFileSystem(conf)
+    // the names Spark's file index skips: `.crc`, `_SUCCESS`, `_tmp`…
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains('='))
+    }
+    // listStatus, not listFiles: the located statuses listFiles builds
+    // load each file's permissions, which a local filesystem does by
+    // forking a process per file
+    def firstFile(d: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(d).filter(visible)
+        .partition(_.isDirectory)
+      files.headOption.orElse(
+        dirs.iterator.flatMap(st => firstFile(st.getPath)).nextOption())
+    }
+    if (!fs.exists(dir)) None
+    else firstFile(dir).flatMap { st =>
+      // the footer alone, without row-group metadata; a full
+      // ParquetFileReader costs an order of magnitude more to open
+      val file = HadoopInputFile.fromStatus(st, conf)
+      val in = file.newStream()
+      val footer = try ParquetFileReader.readFooter(file,
+          ParquetReadOptions.builder()
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            .build(), in)
+        finally in.close()
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(j => Try(DataType.fromJson(j).asInstanceOf[StructType])
+          .toOption)
+    }
   }
 }

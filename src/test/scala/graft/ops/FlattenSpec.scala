@@ -5,6 +5,7 @@ import graft.schema._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Flatten/unflatten golden behavior ported from the reference DDT corpus
   * (reference: test/ddt_suite/record.lua, record_version.lua, union.lua,
@@ -91,6 +92,49 @@ class FlattenSpec extends AnyFunSuite with SparkTestBase {
     val flat = c.flatten(df)
     assert(flat.columns.toSeq == Seq("A", "B"))
     assert(flat.head() == Row(1, 2))
+  }
+
+  test("F5: added fields with empty array/map defaults match Avro's reader") {
+    // regression: an empty-array default used to build `cast([] as
+    // array<int>)` from a typed literal, which analysis rejected
+    val wJson = """{"type":"record","name":"R","fields":[
+      {"name":"a","type":"int"}]}"""
+    val rJson = """{"type":"record","name":"R","fields":[
+      {"name":"a","type":"int"},
+      {"name":"n","type":{"type":"array","items":"int"},"default":[]},
+      {"name":"rs","type":{"type":"array","items":{"type":"record",
+        "name":"I","fields":[{"name":"x","type":"long"}]}},"default":[]},
+      {"name":"m","type":{"type":"map","values":"string"},"default":{}}]}"""
+    val c = FlattenOps.compile(Avro.create(wJson), Avro.create(rJson))
+      .fold(e => sys.error(e), identity)
+    val cr = FlattenOps.compile(Avro.create(rJson))
+      .fold(e => sys.error(e), identity)
+    val graft = cr.unflatten(c.flatten(Seq(1, 7).toDF("a")))
+      .orderBy("a").collect().toSeq
+    // Apache Avro's resolving reader over the same writer rows
+    val ws = new org.apache.avro.Schema.Parser().parse(wJson)
+    val rs = new org.apache.avro.Schema.Parser().parse(rJson)
+    def canon(v: Any): Any = v match {
+      case r: org.apache.avro.generic.GenericRecord =>
+        Row(r.getSchema.getFields.asScala.map(f => canon(r.get(f.pos))).toSeq: _*)
+      case m: java.util.Map[_, _] =>
+        m.asScala.map { case (k, x) => k.toString -> canon(x) }.toMap
+      case xs: java.util.Collection[_] => xs.asScala.map(canon).toSeq
+      case other => other
+    }
+    val avro = Seq(1, 7).map { a =>
+      val rec = new org.apache.avro.generic.GenericData.Record(ws)
+      rec.put("a", a)
+      val bytes = new java.io.ByteArrayOutputStream
+      val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(bytes, null)
+      new org.apache.avro.generic.GenericDatumWriter[AnyRef](ws).write(rec, enc)
+      enc.flush()
+      canon(new org.apache.avro.generic.GenericDatumReader[AnyRef](ws, rs)
+        .read(null, org.apache.avro.io.DecoderFactory.get()
+          .binaryDecoder(bytes.toByteArray, null)))
+    }
+    assert(graft == avro)
+    assert(graft.head == Row(1, Seq.empty, Seq.empty, Map.empty))
   }
 
   test("nested record inlines fields; nullable record is one slot") {

@@ -2,12 +2,19 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** BM25 search: hand-computed scores on a tiny corpus, ranking
   * properties (rarity and saturation), persisted-index parity,
-  * determinism under repartitioning, and the broadcast-probe plan.
+  * determinism under repartitioning, the broadcast-probe plan, and the
+  * job budget of serving a search from a folded index.
   */
 class SearchSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -79,6 +86,22 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
     assert(once == thrice)
     assert(Search.search(ix, q(10L, "zzz"), "qid", "qtext", k = 5)
       .count() == 0)
+    // the same term set split over rows of one query id, with repeats
+    // inside and across rows; query 11 rides along untouched
+    val key = (df: DataFrame) => df.collect().map(_.toSeq).toSet
+    val one = Search.search(ix, q(10L, "rare common zeta"), "qid", "qtext",
+      k = 5)
+    val split = Search.search(ix, Seq((10L, "rare common rare"),
+        (10L, "COMMON zeta"), (11L, "delta"), (10L, "zeta rare"))
+      .toDF("qid", "qtext"), "qid", "qtext", k = 5)
+    assert(key(split.filter($"query_id" === 10L)) == key(one))
+    assert(key(split.filter($"query_id" === 11L)) == key(
+      Search.search(ix, q(11L, "delta"), "qid", "qtext", k = 5)))
+    // searchCorpus (and so the TVF and hardNegatives) share the tail
+    val splitQ = Seq((10L, "rare rare common"), (10L, "zeta common"))
+      .toDF("qid", "qtext")
+    assert(key(Search.searchCorpus(docs, "doc_id", "text", splitQ,
+      "qid", "qtext", k = 5)) == key(one))
   }
 
   test("persisted index parity + determinism under repartitioning") {
@@ -164,5 +187,141 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
       .select("query_id", "doc_id", "score_q")
       .as[(Long, Long, Long)].collect().toSet
     assert(negs.map(r => (r._1, r._3, r._4)).toSet.subsetOf(search3))
+  }
+
+  // ---- folded (stream-maintained) indexes -------------------------------
+
+  private val more = Seq(
+    (5L, "rare omega common"), (6L, "sigma tau common tau"),
+    (7L, "omega omega upsilon"), (8L, "alpha beta rare phi"))
+    .toDF("doc_id", "text")
+  private lazy val allDocs = docs.unionAll(more)
+  private val foldQueries = Seq((1L, "rare common"), (2L, "omega tau"),
+    (3L, "alpha phi zzz"), (3L, "rare"))
+
+  /** A persisted index over `base`, then one replay-guarded fold (and
+    * so one live delta) per frame of `folds`.
+    */
+  private def foldedIndex(base: DataFrame, folds: Seq[DataFrame]): String = {
+    val path = java.nio.file.Files.createTempDirectory("bm25fold").toString
+    Search.writeIndex(base, "doc_id", "text", path, numFiles = 2)
+    folds.zipWithIndex.foreach { case (f, i) =>
+      Search.updateIndex(spark, path, f, "doc_id", "text", Some(i.toLong))
+    }
+    path
+  }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.select("query_id", "rank", "doc_id", "score_q").collect()
+      .map(_.toSeq).sortBy(_.take(2).mkString(",")).toSeq
+
+  private def atOnce(corpus: DataFrame, queries: DataFrame): Seq[Seq[Any]] =
+    rows(Search.search(Search.buildIndex(corpus, "doc_id", "text"),
+      queries, "qid", "qtext", k = 3))
+
+  test("Int and String doc ids: write → fold → read → search == build") {
+    val qs = foldQueries.toDF("qid", "qtext")
+    for (cast <- Seq("int", "string")) {
+      val typed = (df: DataFrame) =>
+        df.select(col("doc_id").cast(cast).as("doc_id"), col("text"))
+      val path = foldedIndex(typed(docs),
+        Seq(typed(more.filter($"doc_id" <= 6L)),
+          typed(more.filter($"doc_id" > 6L))))
+      val ix = Search.readIndex(spark, path)
+      assert(ix.postings.schema("doc_id").dataType.simpleString == cast)
+      val got = rows(Search.search(ix, qs, "qid", "qtext", k = 3))
+      assert(got.nonEmpty)
+      assert(got == atOnce(typed(allDocs), qs), s"doc_id as $cast")
+    }
+  }
+
+  test("footer-schema reads equal inferred reads, partition column included") {
+    val path = foldedIndex(docs, Seq(more.filter($"doc_id" <= 6L),
+      more.filter($"doc_id" > 6L)))
+    for (dir <- Seq("df", "postings", "postings_delta")) {
+      val persisted = SidecarIO.readWithFallback(spark, s"$path/$dir")
+      val inferred = spark.read.parquet(s"$path/$dir")
+      assert(persisted.schema == inferred.schema, dir)
+      assert(persisted.collect().map(_.toSeq).toSet ==
+        inferred.collect().map(_.toSeq).toSet, dir)
+    }
+  }
+
+  test("zero live deltas: fresh and compacted indexes serve build-at-once") {
+    val qs = foldQueries.toDF("qid", "qtext")
+    val fresh = foldedIndex(allDocs, Nil)
+    assert(rows(Search.searchFromIndex(spark, fresh, qs, "qid", "qtext",
+      k = 3)) == atOnce(allDocs, qs))
+    val compacted = foldedIndex(docs, Seq(more))
+    Search.compactIndex(spark, compacted)
+    val fs = new Path(compacted).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new Path(s"$compacted/postings_delta"))
+      .forall(!_.getPath.getName.startsWith("batch=")))
+    assert(rows(Search.searchFromIndex(spark, compacted, qs, "qid",
+      "qtext", k = 3)) == atOnce(allDocs, qs))
+  }
+
+  test("df sidecar missing after a crashed swap: the read serves _prev") {
+    val qs = foldQueries.toDF("qid", "qtext")
+    val path = foldedIndex(docs, Seq(more))
+    val fs = new Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // the swap renamed live → _prev and died before tmp → live
+    assert(fs.rename(new Path(s"$path/df"), new Path(s"$path/df_prev")))
+    assert(rows(Search.searchFromIndex(spark, path, qs, "qid", "qtext",
+      k = 3)) == atOnce(allDocs, qs))
+  }
+
+  /** Jobs `body` submits, filed by job group on the listener bus. A
+    * marker job in a group of its own then flushes the bus (events
+    * arrive in order), so no sleep decides the count.
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"search-budget-${System.nanoTime}"
+    val marker = s"$group-flush"
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(`marker`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus stalled")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: readIndex 1 job, search 5 jobs and two exchanges") {
+    val path = foldedIndex(docs, Seq(more.filter($"doc_id" <= 6L),
+      more.filter($"doc_id" > 6L)))
+    val qs = foldQueries.toDF("qid", "qtext")
+    // schema inference of the df, base and delta sidecars would each
+    // add a job: only the sentinel collect may run
+    val (ix, readJobs) = jobsOf(Search.readIndex(spark, path))
+    assert(readJobs <= 1, s"readIndex ran $readJobs jobs; budget 1")
+    // two broadcasts, the score aggregation, the top-k window, the
+    // result: a shuffled query-term distinct would add an exchange and
+    // a job
+    val result = Search.search(ix, qs, "qid", "qtext", k = 3)
+    val (got, searchJobs) = jobsOf(result.collect())
+    assert(searchJobs <= 5, s"search ran $searchJobs jobs; budget 5")
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(result.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+    assert(exchanges.size == 2,
+      s"expected two exchanges:\n${result.queryExecution.executedPlan}")
+    assert(got.nonEmpty)
   }
 }
