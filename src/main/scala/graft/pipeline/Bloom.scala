@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -148,8 +148,8 @@ object Bloom {
       numHashes: Int, path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    sketch(df, keyCol, numBits, numHashes).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/words")
+    SidecarIO.atomicOverwriteDf(sketch(df, keyCol, numBits, numHashes),
+      s"$path/words")
     Seq((numBits, numHashes, keyCol)).toDF("num_bits", "num_hashes",
         "key_col").coalesce(1)
       .write.mode("overwrite").json(s"$path/params")
@@ -168,49 +168,24 @@ object Bloom {
   /** Fold a new batch of keys into the stored sidecar at batch cost:
     * sketch the batch at the STORED operating point, merge by
     * `bit_or` (union semantics — re-folding the same batch is exactly
-    * a no-op), rewrite through a bounded collect and the
-    * [[SidecarIO.atomicOverwrite]] swap (a crash mid-rewrite can no
-    * longer lose the only accumulated copy).
+    * a no-op) and swap the merged words in ([[SidecarFold]]; a crash
+    * mid-rewrite cannot lose the accumulated copy). Pass the returned
+    * state back as `carried` to skip the next fold's reads.
     */
   def updateFilter(spark: SparkSession, path: String, batch: DataFrame,
-      keyCol: String): Unit = {
-    updateFilterCarried(spark, path, batch, keyCol, carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): the operating point
-    * plus the exact row set of the last written `words` generation —
-    * equals the on-disk sidecar by induction; drop on any failed fold.
-    */
-  final case class BloomFoldState(numBits: Int, numHashes: Int,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateFilter]] with the carried fold state — no params read, no
-    * stored-words read per micro-batch; identical on-disk result.
-    */
-  def updateFilterCarried(spark: SparkSession, path: String,
-      batch: DataFrame, keyCol: String,
-      carried: Option[BloomFoldState] = None): BloomFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/words")
-      BloomFoldState(p.getAs[Long]("num_bits").toInt,
-        p.getAs[Long]("num_hashes").toInt, stored.collect().toSeq,
-        stored.schema)
+      keyCol: String, carried: Option[SidecarFold[Row]] = None)
+      : SidecarFold[Row] =
+    SidecarFold.fold(s"$path/words", None, carried) {
+      SidecarFold(spark.read.json(s"$path/params").head(),
+        SidecarIO.readWithFallback(spark, s"$path/words"), None)
+    } { st =>
+      Some(st.copy(stored = st.stored
+        .unionAll(sketch(batch, keyCol,
+          st.params.getAs[Long]("num_bits").toInt,
+          st.params.getAs[Long]("num_hashes").toInt))
+        .groupBy("word_idx")
+        .agg(bit_or(col("bits")).as("bits"))))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .unionAll(sketch(batch, keyCol, st.numBits, st.numHashes))
-      .groupBy("word_idx")
-      .agg(bit_or(col("bits")).as("bits"))
-    val rows = merged.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*), merged.schema,
-      s"$path/words")
-    BloomFoldState(st.numBits, st.numHashes, rows, merged.schema)
-  }
 
   /** Bloom-pruned exact equi-join: prune the FACT side map-only with
     * a filter built from the dim keys, then run the exact join — the

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bottom-k hash sample — the mergeable-sketch member for QUANTILES and
@@ -83,63 +83,37 @@ object BottomK {
       k: Int, path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    sketch(df, keyCol, valueCol, k).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sample")
+    SidecarIO.atomicOverwriteDf(sketch(df, keyCol, valueCol, k),
+      s"$path/sample")
     Seq((k, keyCol, valueCol)).toDF("k", "keyCol", "valueCol").coalesce(1)
       .write.mode("overwrite").json(s"$path/params")
   }
 
   /** Fold a new batch into the stored sketch at batch cost: sketch the
     * batch at the sidecar's STORED operating point, union, re-trim to
-    * k. The merged rows are collected before the overwrite (k rows,
-    * bounded by construction) because a plan that lazily reads the path
-    * it overwrites would race itself — the [[Sketches.updateSketches]]
-    * discipline. Folding the same batch twice is EXACTLY a no-op: the
-    * merge deduplicates on `(h, v)` before the re-trim, so a re-folded
-    * batch's rows are already present (or already beaten) and cannot
-    * displace genuine bottom-k entries through multiplicity. The
-    * sidecar therefore stores a SET of `(hash, value)` pairs — rows
-    * sharing both key and value collapse, which is exactly the
-    * identity the sketch can observe.
+    * k, and swap the result in ([[SidecarFold]]; pass the returned state
+    * back as `carried` to skip the next fold's reads). Folding the same
+    * batch twice is EXACTLY a no-op: the merge deduplicates on `(h, v)`
+    * before the re-trim, so a re-folded batch's rows are already present
+    * (or already beaten) and cannot displace genuine bottom-k entries
+    * through multiplicity. The sidecar therefore stores a SET of
+    * `(hash, value)` pairs — rows sharing both key and value collapse,
+    * which is exactly the identity the sketch can observe.
     */
-  def updateSketch(spark: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    updateSketchCarried(spark, path, batch, carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): the operating point
-    * plus the exact row set of the last written generation — the
-    * per-fold params + sample reads go away; identical on-disk result.
-    */
-  final case class BottomKFoldState(k: Int, keyCol: String,
-      valueCol: String, rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketch]] with the carried fold state. */
-  def updateSketchCarried(spark: SparkSession, path: String,
-      batch: DataFrame,
-      carried: Option[BottomKFoldState] = None): BottomKFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/sample")
-      BottomKFoldState(p.getAs[Long]("k").toInt,
-        p.getAs[String]("keyCol"), p.getAs[String]("valueCol"),
-        stored.collect().toSeq, stored.schema)
+  def updateSketch(spark: SparkSession, path: String, batch: DataFrame,
+      carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
+    SidecarFold.fold(s"$path/sample", None, carried) {
+      SidecarFold(spark.read.json(s"$path/params").head(),
+        readSketch(spark, path), None)
+    } { st =>
+      val k = st.params.getAs[Long]("k").toInt
+      Some(st.copy(stored = st.stored
+        .unionAll(sketch(batch, st.params.getAs[String]("keyCol"),
+          st.params.getAs[String]("valueCol"), k))
+        .dropDuplicates("h", "v")
+        .orderBy(col("h"), col("v"))
+        .limit(k)))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .unionAll(sketch(batch, st.keyCol, st.valueCol, st.k))
-      .dropDuplicates("h", "v")
-      .orderBy(col("h"), col("v"))
-      .limit(st.k)
-    val rows = merged.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*), merged.schema,
-      s"$path/sample")
-    BottomKFoldState(st.k, st.keyCol, st.valueCol, rows, merged.schema)
-  }
 
   /** The stored sample, ready for [[quantiles]]. */
   def readSketch(spark: SparkSession, path: String): DataFrame =

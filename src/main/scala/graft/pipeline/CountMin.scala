@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -100,8 +100,8 @@ object CountMin {
       width: Int, path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    sketch(df, keyCol, depth, width).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/cells")
+    SidecarIO.atomicOverwriteDf(sketch(df, keyCol, depth, width),
+      s"$path/cells")
     Seq((depth, width, keyCol)).toDF("depth", "width", "key_col")
       .coalesce(1).write.mode("overwrite").json(s"$path/params")
   }
@@ -127,63 +127,26 @@ object CountMin {
     * cnt = batchId)` inside the SAME atomic cells swap, so the guard
     * and the counts can never disagree across a crash; [[readSketch]]
     * and [[estimate]] read through the sentinel-stripping filter.
-    * Bounded collect + [[SidecarIO.atomicOverwrite]].
+    * Pass the returned state back as `carried` to skip the next fold's
+    * params, cells and guard reads ([[SidecarFold]]).
     */
   def updateSketch(spark: SparkSession, path: String,
-      batch: DataFrame, batchId: Option[Long] = None): Unit = {
-    updateSketchCarried(spark, path, batch, batchId, carried = None)
-    ()
-  }
-
-  /** Fold state carried ACROSS a stream's batches (the r17 serving-
-    * handle discipline applied to the maintenance side): the sidecar
-    * params plus the EXACT row set of the last written `cells`
-    * generation, sentinel included. Holding it makes a fold's stored
-    * side a `createDataFrame` over rows already in memory instead of a
-    * params read + parquet read + sentinel collect per micro-batch —
-    * three driver round-trips the per-fold contract never needed. The
-    * state is only ever constructed FROM disk or from a successful
-    * atomic swap, so it equals the on-disk sidecar by induction; a
-    * failed fold must drop it (re-read), and a restarted stream starts
-    * from disk anyway.
-    */
-  final case class CmsFoldState(depth: Int, width: Int, keyCol: String,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketch]] with the carried fold state: pass the previous
-    * fold's return value (None for the first fold / after any failure);
-    * identical on-disk result either way — CI pins stream-vs-direct
-    * fold equality.
-    */
-  def updateSketchCarried(spark: SparkSession, path: String,
       batch: DataFrame, batchId: Option[Long] = None,
-      carried: Option[CmsFoldState] = None): CmsFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/cells")
-      CmsFoldState(p.getAs[Long]("depth").toInt,
-        p.getAs[Long]("width").toInt, p.getAs[String]("key_col"),
-        stored.collect().toSeq, stored.schema)
-    }
-    val stored = spark.createDataFrame(
-      java.util.Arrays.asList(st.rows: _*), st.schema)
-    val lastFolded = st.rows.find(_.getAs[Int]("r") == -1)
-      .map(_.getAs[Long]("cnt"))
-    if (batchId.exists(id => lastFolded.exists(id <= _))) return st
-    val merged = merge(stored.filter(col("r") >= 0),
-      sketch(batch, st.keyCol, st.depth, st.width))
-    val withSentinel = batchId.orElse(lastFolded) match {
+      carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
+    SidecarFold.fold(s"$path/cells", batchId, carried) {
+      val cells = SidecarIO.readWithFallback(spark, s"$path/cells")
+      SidecarFold(spark.read.json(s"$path/params").head(), cells,
+        cells.filter(col("r") === -1).select("cnt").collect()
+          .headOption.map(_.getLong(0)))
+    } { st =>
+      val p = st.params
+      val merged = merge(st.stored.filter(col("r") >= 0),
+        sketch(batch, p.getAs[String]("key_col"),
+          p.getAs[Long]("depth").toInt, p.getAs[Long]("width").toInt))
       // keep an existing guard through un-id'd folds
-      case Some(id) => merged.unionAll(
-        merged.sparkSession.range(1).select(lit(-1).cast("int").as("r"),
-          lit(0).cast("int").as("c"), lit(id).as("cnt")))
-      case None => merged
+      val guard = batchId.orElse(st.guard)
+      Some(SidecarFold(p, guard.fold(merged)(id => merged.unionAll(
+        spark.range(1).select(lit(-1).cast("int").as("r"),
+          lit(0).cast("int").as("c"), lit(id).as("cnt")))), guard))
     }
-    val rows = withSentinel.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*),
-      withSentinel.schema, s"$path/cells")
-    CmsFoldState(st.depth, st.width, st.keyCol, rows, withSentinel.schema)
-  }
 }

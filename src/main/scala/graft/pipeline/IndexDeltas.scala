@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.col
   * Compaction is crash-safe at every window: the new generation
   * (base + deltas, stamped with a `_folded_floor` marker naming the
   * highest folded id) MATERIALIZES to a tmp sibling while the live
-  * layout is intact, swaps in via the [[SidecarIO]] rename discipline,
-  * and only then are folded delta dirs dropped — a crash between swap
+  * layout is intact, swaps in via [[SidecarIO.swap]] (whose recovery
+  * rule keeps `_prev` until the new base is live), and only then are
+  * folded delta dirs dropped — a crash between swap
   * and cleanup leaves stale deltas that readers IGNORE via the marker,
   * and a crash inside the swap leaves `_prev`, which [[rows]] serves.
   */
@@ -33,8 +34,8 @@ private[pipeline] object IndexDeltas {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Existing delta batch ids under `<path>.delta`. */
-  private def deltaIds(fs: FileSystem, root: Path): Seq[Long] =
+  /** Batch ids of the `batch=<id>` delta dirs under `root`. */
+  private[pipeline] def deltaIds(fs: FileSystem, root: Path): Seq[Long] =
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq
       .map(_.getPath.getName)
@@ -101,11 +102,8 @@ private[pipeline] object IndexDeltas {
     */
   def hasLiveDeltas(spark: SparkSession, path: String): Boolean = {
     val f = fs(spark, path)
-    val livePath =
-      if (!f.exists(new Path(path)) && f.exists(new Path(path + "_prev")))
-        path + "_prev"
-      else path
-    deltaIds(f, new Path(s"$path.delta")).exists(_ > readFloor(f, livePath))
+    val floor = readFloor(f, SidecarIO.liveOrPrev(spark, path).toString)
+    deltaIds(f, new Path(s"$path.delta")).exists(_ > floor)
   }
 
   /** The stored rows: base build (falling back to the `_prev`
@@ -126,12 +124,8 @@ private[pipeline] object IndexDeltas {
       excludeBatchId: Long = -1L): DataFrame =
     SidecarIO.withDriverListing(spark) {
     val f = fs(spark, path)
-    val livePath =
-      if (!f.exists(new Path(path)) && f.exists(new Path(path + "_prev")))
-        path + "_prev"
-      else path
-    val base = spark.read.parquet(livePath)
-    val floor = readFloor(f, livePath)
+    val base = SidecarIO.readWithFallback(spark, path)
+    val floor = readFloor(f, SidecarIO.liveOrPrev(spark, path).toString)
     val live = deltaIds(f, new Path(s"$path.delta"))
       .filter(id => id > floor && id != excludeBatchId)
       .sorted
@@ -163,34 +157,21 @@ private[pipeline] object IndexDeltas {
     val live = deltaIds(f, deltaRoot).filter(_ > oldFloor)
     if (live.isEmpty) return
     val floor = live.max
-    val tmp = new Path(path + "_tmp")
-    val prev = new Path(path + "_prev")
-    f.delete(tmp, true)
-    // materialize the union while the live layout is still intact
-    val all = fold(rows(spark, path))
-    val shaped =
-      if (partitionCols.nonEmpty)
-        all.repartition(partitionCols.map(col): _*)
-      else all
-    val w = shaped.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    val out = f.create(new Path(s"$tmp/$FloorMarker"), true)
-    try out.write(floor.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // In the crash-recovery flow (base absent, readers serving from
-    // `_prev`) `_prev` IS the live base: deleting it before the tmp
-    // rename would leave neither generation if we crash in between.
-    // Only clear/rotate `_prev` when a live base occupies `path`; the
-    // recovery flow defers the `_prev` delete until after the swap.
-    if (f.exists(new Path(path))) {
-      f.delete(prev, true)
-      f.rename(new Path(path), prev); ()
+    SidecarIO.swap(spark, path) { tmp =>
+      // materialize the union while the live layout is still intact
+      val all = fold(rows(spark, path))
+      val shaped =
+        if (partitionCols.nonEmpty)
+          all.repartition(partitionCols.map(col): _*)
+        else all
+      val w = shaped.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.toString)
+      val out = f.create(new Path(tmp, FloorMarker), true)
+      try out.write(floor.toString.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
     }
-    if (!f.rename(tmp, new Path(path)))
-      sys.error(s"index swap failed: could not rename $tmp to $path")
-    f.delete(prev, true)
     // cleanup (idempotent; readers already ignore ids <= floor)
     live.foreach(id =>
       f.delete(new Path(s"$path.delta/batch=$id"), true))

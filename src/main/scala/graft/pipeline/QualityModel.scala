@@ -159,13 +159,14 @@ object QualityModel {
 
   /** Persist as a one-row parquet sidecar (crash-safe swap). */
   def writeModel(spark: SparkSession, path: String, m: LinearModel): Unit =
-    SidecarIO.atomicOverwrite(spark,
+    SidecarIO.atomicOverwriteDf(spark.createDataFrame(
       java.util.Collections.singletonList(
         Row(m.bias, m.wTokens, m.wAlpha, m.wDigit, m.wAwl)),
-      modelSchema, path)
+      modelSchema), path)
 
+  /** The stored model (a crashed swap serves the previous generation). */
   def readModel(spark: SparkSession, path: String): LinearModel = {
-    val r = spark.read.parquet(path).head()
+    val r = SidecarIO.readWithFallback(spark, path).head()
     LinearModel(r.getDouble(0), r.getDouble(1), r.getDouble(2),
       r.getDouble(3), r.getDouble(4))
   }

@@ -243,8 +243,7 @@ object Search {
         .repartitionByRange(numFiles, col("tok"))
         .sortWithinPartitions("tok", "doc_id")
         .write.mode("overwrite").parquet(s"$path/postings")
-      ix.docFreq.coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/df")
+      SidecarIO.atomicOverwriteDf(ix.docFreq, s"$path/df")
       val sumDl = math.round(ix.avgDl * ix.nDocs)
       Seq((ix.nDocs, ix.avgDl, sumDl))
         .toDF("n_docs", "avgdl", "sum_dl").coalesce(1)
@@ -265,6 +264,16 @@ object Search {
 
   private def isSentinel(tok: Column): Column = tok.startsWith(" ")
 
+  private def sentinelsOf(dfSide: DataFrame): Map[String, Long] =
+    dfSide.filter(isSentinel(col("tok"))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def sentinelRows(spark: SparkSession,
+      sentinels: Seq[(String, Long)]): DataFrame =
+    sentinels.map { case (t, v) =>
+      spark.range(1).select(lit(t).as("tok"), lit(v).as("df"))
+    }.reduce(_ unionAll _)
+
   /** Fold a batch of NEW documents into the persisted index at batch
     * cost (the incremental-index discipline: batches carry doc_ids not
     * yet indexed — df additivity and postings disjointness both assume
@@ -282,119 +291,84 @@ object Search {
     *    applied df merge.
     *
     * Without an explicit `batchId` (one-shot batch folds) the next
-    * free delta id is used; such folds are not replay-guarded.
+    * free delta id is used; such folds are not replay-guarded. Pass the
+    * returned state (params = the sentinels) back as `carried` to skip
+    * the next fold's df read and sentinel collect ([[SidecarFold]]).
     */
   def updateIndex(spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String, textCol: String,
-      batchId: Option[Long] = None): Unit = {
-    updateIndexCarried(spark, path, batch, idCol, textCol, batchId,
-      carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches (the r17 serving-
-    * handle discipline applied to the maintenance side): the df/stats/
-    * guard sidecar as a frame EQUAL to the on-disk generation (local-
-    * checkpointed after each swap, so no lineage tower) plus its
-    * sentinel values. Holding it removes the per-fold sidecar parquet
-    * read and the sentinel collect job; the swap, the idempotent
-    * postings delta and the replay guard are untouched, so the folded
-    * index stays bit-identical to build-at-once. Drop the state on any
-    * failed fold (re-read from disk); a restarted stream starts from
-    * disk anyway.
-    */
-  final case class Bm25FoldState(dfSide: DataFrame,
-      sentinels: Map[String, Long])
-
-  /** [[updateIndex]] with the carried fold state — identical on-disk
-    * result; returns the state for the next fold.
-    */
-  def updateIndexCarried(spark: SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      batchId: Option[Long] = None,
-      carried: Option[Bm25FoldState] = None): Bm25FoldState = {
-    val st = carried.getOrElse {
+      idCol: String, textCol: String, batchId: Option[Long] = None,
+      carried: Option[SidecarFold[Map[String, Long]]] = None)
+      : SidecarFold[Map[String, Long]] =
+    SidecarFold.fold(s"$path/df", batchId, carried) {
       val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-      Bm25FoldState(dfSide,
-        dfSide.filter(isSentinel(col("tok"))).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val sentinels = sentinelsOf(dfSide)
+      SidecarFold(sentinels, dfSide, sentinels.get(SentBatch))
+    } { st =>
+      val sentinels = st.params
+      // base stats: sentinels when present (a prior fold), else the
+      // build-time params
+      val (curN, curSum) = (sentinels.get(SentN),
+          sentinels.get(SentSumDl)) match {
+        case (Some(n), Some(s)) => (n, s)
+        case _ =>
+          val p = spark.read.json(s"$path/params").head()
+          (p.getAs[Long]("n_docs"),
+            if (p.schema.fieldNames.contains("sum_dl"))
+              p.getAs[Long]("sum_dl")
+            else math.round(p.getAs[Double]("avgdl") *
+              p.getAs[Long]("n_docs")))
+      }
+      // un-id'd folds take the next id past everything ever seen: live
+      // delta dirs, the replay guard, AND the compaction floor (a reused
+      // id at or below the floor would be ignored by readIndex)
+      val effId = batchId.getOrElse((deltaIds(spark, path) ++
+        st.guard ++ sentinels.get(SentFloor)).foldLeft(-1L)(math.max) + 1)
+
+      val toks = explodedTokens(batch, idCol, textCol)
+      val tf = toks.groupBy("doc_id", "tok")
+        .agg(count(lit(1)).cast(LongType).as("tf"))
+        .localCheckpoint()
+      val dl = tf.groupBy("doc_id")
+        .agg(sum(col("tf")).cast(LongType).as("dl"))
+      val stats = dl.agg(count(lit(1)).cast(LongType).as("n"),
+        sum(col("dl")).cast(LongType).as("sumdl")).head()
+      val batchN = stats.getAs[Long]("n")
+      // nothing to fold (batchN == 0): the guard stays put
+      Option.when(batchN > 0) {
+        // 1. idempotent postings delta
+        tf.join(dl, "doc_id")
+          .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+          .sortWithinPartitions("tok", "doc_id")
+          .write.mode("overwrite")
+          .parquet(s"$path/postings_delta/batch=$effId")
+
+        // 2. the swapped side: merged df + stats + replay guard
+        val batchDf = tf.groupBy("tok")
+          .agg(count(lit(1)).cast(LongType).as("df"))
+        val mergedDf = st.stored.filter(!isSentinel(col("tok")))
+          .unionAll(batchDf)
+          .groupBy("tok").agg(sum(col("df")).cast(LongType).as("df"))
+        // rewrite the three fold sentinels, CARRY every other one (the
+        // compaction generation/floor must survive subsequent folds)
+        val next = (sentinels - SentN - SentSumDl - SentBatch).toSeq ++
+          Seq(SentN -> (curN + batchN),
+            SentSumDl -> (curSum + stats.getAs[Long]("sumdl")),
+            SentBatch -> effId)
+        SidecarFold(next.toMap,
+          mergedDf.unionAll(sentinelRows(spark, next)), Some(effId))
+      }
     }
-    val dfSide = st.dfSide
-    val sentinels = st.sentinels
-    val lastBatch = sentinels.get(SentBatch)
-    if (batchId.exists(id => lastBatch.exists(id <= _))) return st
-    // base stats: sentinels when present (a prior fold), else the
-    // build-time params
-    val (curN, curSum) = (sentinels.get(SentN),
-        sentinels.get(SentSumDl)) match {
-      case (Some(n), Some(s)) => (n, s)
-      case _ =>
-        val p = spark.read.json(s"$path/params").head()
-        (p.getAs[Long]("n_docs"),
-          if (p.schema.fieldNames.contains("sum_dl"))
-            p.getAs[Long]("sum_dl")
-          else math.round(p.getAs[Double]("avgdl") *
-            p.getAs[Long]("n_docs")))
-    }
-    // un-id'd folds take the next id past everything ever seen: live
-    // delta dirs, the replay guard, AND the compaction floor (a reused
-    // id at or below the floor would be ignored by readIndex)
-    val effId = batchId.getOrElse(Seq(
-      lastBatch.getOrElse(-1L), sentinels.getOrElse(SentFloor, -1L),
-      nextDeltaId(spark, path) - 1).max + 1)
 
-    val toks = explodedTokens(batch, idCol, textCol)
-    val tf = toks.groupBy("doc_id", "tok")
-      .agg(count(lit(1)).cast(LongType).as("tf"))
-      .localCheckpoint()
-    val dl = tf.groupBy("doc_id")
-      .agg(sum(col("tf")).cast(LongType).as("dl"))
-    val stats = dl.agg(count(lit(1)).cast(LongType).as("n"),
-      sum(col("dl")).cast(LongType).as("sumdl")).head()
-    val batchN = stats.getAs[Long]("n")
-    if (batchN == 0) return st // nothing to fold; guard stays put
-    val batchSum = stats.getAs[Long]("sumdl")
-
-    // 1. idempotent postings delta
-    tf.join(dl, "doc_id")
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-      .sortWithinPartitions("tok", "doc_id")
-      .write.mode("overwrite")
-      .parquet(s"$path/postings_delta/batch=$effId")
-
-    // 2. one atomic swap: merged df + stats + replay guard
-    val batchDf = tf.groupBy("tok")
-      .agg(count(lit(1)).cast(LongType).as("df"))
-    val mergedDf = dfSide.filter(!isSentinel(col("tok")))
-      .unionAll(batchDf)
-      .groupBy("tok").agg(sum(col("df")).cast(LongType).as("df"))
-    // rewrite the three fold sentinels, CARRY every other one (the
-    // compaction generation/floor must survive subsequent folds)
-    val newSentinels = (sentinels - SentN - SentSumDl - SentBatch).toSeq ++
-      Seq(SentN -> (curN + batchN), SentSumDl -> (curSum + batchSum),
-        SentBatch -> effId)
-    val sentinelRows = newSentinels.map { case (t, v) =>
-      spark.range(1).select(lit(t).as("tok"), lit(v).as("df"))
-    }.reduce(_ unionAll _)
-    // checkpoint what the swap writes: the write below reads the cached
-    // blocks, and the NEXT fold's merge starts from them instead of
-    // re-reading the sidecar it just wrote
-    val full = mergedDf.unionAll(sentinelRows).localCheckpoint(true)
-    SidecarIO.atomicOverwriteDf(full, s"$path/df")
-    Bm25FoldState(full, newSentinels.toMap)
-  }
-
-  /** Next unused delta id (max existing + 1) for un-id'd folds. */
-  private def nextDeltaId(spark: SparkSession, path: String): Long = {
+  private def deltaIds(spark: SparkSession, path: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(s"$path/postings_delta")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0L
-    else fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") =>
-        n.stripPrefix("batch=").toLongOption.getOrElse(-1L) }
-      .foldLeft(-1L)(math.max) + 1L
+    IndexDeltas.deltaIds(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
+
+  /** The base postings dir the sentinels name. */
+  private def baseDir(path: String, sentinels: Map[String, Long]): String =
+    sentinels.get(SentGen).fold(s"$path/postings")(g =>
+      s"$path/postings_gen$g")
 
   /** The stored index, ready for [[search]]: base postings plus any
     * fold deltas, df sidecar stripped of its sentinel rows, stats from
@@ -405,31 +379,18 @@ object Search {
     */
   def readIndex(spark: SparkSession, path: String): Bm25Index = {
     val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-    val sentinels = dfSide.filter(isSentinel(col("tok"))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sentinels = sentinelsOf(dfSide)
     // base generation + delta floor: compaction renames the base and
     // bumps both in the ONE atomic df swap, so every crash point reads
     // a consistent (base, live-deltas) pair
-    val baseDir = sentinels.get(SentGen) match {
-      case Some(g) => s"$path/postings_gen$g"
-      case None => s"$path/postings"
-    }
     val floor = sentinels.getOrElse(SentFloor, -1L)
-    val base = SidecarIO.readWithFallback(spark, baseDir)
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/postings_delta")
-    val fs = deltaRoot.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val base = SidecarIO.readWithFallback(spark, baseDir(path, sentinels))
     // live deltas = batch dirs above the compaction floor (a fully
     // compacted index leaves none — and an empty root must not reach
     // the parquet reader, which cannot infer a schema from nothing)
-    val liveDeltas = if (fs.exists(deltaRoot))
-      fs.listStatus(deltaRoot).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch=") =>
-          n.stripPrefix("batch=").toLongOption.getOrElse(-1L) }
-        .filter(_ > floor)
-    else Seq.empty
-    val postings = if (liveDeltas.nonEmpty)
-      base.unionAll(SidecarIO.readWithFallback(spark, deltaRoot.toString)
+    val postings = if (deltaIds(spark, path).exists(_ > floor))
+      base.unionAll(SidecarIO.readWithFallback(spark,
+          s"$path/postings_delta")
         .filter(col("batch") > floor) // compacted-away deltas ignored
         .select(col("tok"), col("doc_id"), col("tf"), col("dl")))
     else base
@@ -458,42 +419,27 @@ object Search {
   def compactIndex(spark: SparkSession, path: String,
       numFiles: Int = 8): Unit = {
     val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-    val sentinels = dfSide.filter(isSentinel(col("tok"))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sentinels = sentinelsOf(dfSide)
     val ix = readIndex(spark, path)
     val gen = sentinels.getOrElse(SentGen, -1L) + 1
-    val newFloor = math.max(sentinels.getOrElse(SentFloor, -1L),
-      nextDeltaId(spark, path) - 1)
+    val newFloor = (deltaIds(spark, path) :+
+      sentinels.getOrElse(SentFloor, -1L)).max
     ix.postings
       .repartitionByRange(numFiles, col("tok"))
       .sortWithinPartitions("tok", "doc_id")
       .write.mode("overwrite").parquet(s"$path/postings_gen$gen")
-    val newSentinels = (sentinels - SentGen - SentFloor +
-      (SentGen -> gen) + (SentFloor -> newFloor)).toSeq
-    val sentRows = newSentinels.map { case (t, v) =>
-      spark.range(1).select(lit(t).as("tok"), lit(v).as("df"))
-    }.reduce(_ unionAll _)
     SidecarIO.atomicOverwriteDf(
-      dfSide.filter(!isSentinel(col("tok"))).unionAll(sentRows),
+      dfSide.filter(!isSentinel(col("tok"))).unionAll(sentinelRows(spark,
+        (sentinels - SentGen - SentFloor +
+          (SentGen -> gen) + (SentFloor -> newFloor)).toSeq)),
       s"$path/df")
     // cleanup: stale base + compacted-away deltas (ignored either way)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldBase = sentinels.get(SentGen) match {
-      case Some(g) => s"$path/postings_gen$g"
-      case None => s"$path/postings"
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(oldBase), true)
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/postings_delta")
-    if (fs.exists(deltaRoot)) {
-      fs.listStatus(deltaRoot).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("batch=") &&
-            name.stripPrefix("batch=").toLongOption.exists(_ <= newFloor))
-          fs.delete(st.getPath, true)
-      }
-    }
-    ()
+    fs.delete(new org.apache.hadoop.fs.Path(baseDir(path, sentinels)), true)
+    deltaIds(spark, path).filter(_ <= newFloor).foreach(id =>
+      fs.delete(new org.apache.hadoop.fs.Path(
+        s"$path/postings_delta/batch=$id"), true))
   }
 
   /** Daily-driver search against the persisted sidecar: read + probe,

@@ -50,8 +50,10 @@ object ShardedBloom {
     org.apache.spark.sql.types.StructField("shard",
       org.apache.spark.sql.types.IntegerType)))
 
+  /** The stored words as `(shard, word_idx, bits)`, the sketch's order. */
   private def readWords(spark: SparkSession, path: String): DataFrame =
     SidecarIO.readWithFallback(spark, s"$path/words", Some(wordsSchema))
+      .select(col("shard"), col("word_idx"), col("bits"))
 
   private def shardOf(key: Column, numShards: Int): Column =
     pmod(xxhash64(lit(-1), key), lit(numShards.toLong)).cast("int")
@@ -147,10 +149,9 @@ object ShardedBloom {
       bitsPerShard: Int, numHashes: Int, path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    sketch(df, keyCol, numShards, bitsPerShard, numHashes)
-      .repartition(col("shard"))
-      .write.partitionBy("shard").mode("overwrite")
-      .parquet(s"$path/words")
+    SidecarIO.atomicOverwriteDf(
+      sketch(df, keyCol, numShards, bitsPerShard, numHashes),
+      s"$path/words", Seq("shard"))
     Seq((numShards, bitsPerShard, numHashes, keyCol))
       .toDF("num_shards", "bits_per_shard", "num_hashes", "key_col")
       .coalesce(1).write.mode("overwrite").json(s"$path/params")
@@ -167,70 +168,35 @@ object ShardedBloom {
   /** The stored filter as a resident handle (the broadcastable tier). */
   def readFilter(spark: SparkSession, path: String): ShardedBloomFilter = {
     val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
-    densify(readWords(spark, path)
-        .select(col("shard").cast("int").as("shard"), col("word_idx"),
-          col("bits")),
-      numShards, bitsPerShard, numHashes)
+    densify(readWords(spark, path), numShards, bitsPerShard, numHashes)
   }
 
   /** Fold a new batch into the stored sidecar: per-(shard, word)
     * bitwise OR at batch cost — FULLY DISTRIBUTED. The stored words
     * and the batch sketch union into one `groupBy(shard, word_idx) →
     * bit_or` (idempotent, order-insensitive), and the merged frame is
-    * swapped in by [[SidecarIO.atomicOverwriteDf]] with the same
-    * `partitionBy(shard)` layout [[writeFilter]] wrote — nothing ever
-    * lands on the driver, so the daily-ingest fold works at the tier's
-    * design point (10^10–10^11 keys ⇒ 10^9+ word rows, tens of GB):
-    * one shard exchange per fold, each shard's directory rewritten
-    * from its own partition. The tmp write materializes the merged
-    * plan in full while the live generation is still intact, so the
-    * read-modify-write cannot race itself and a crash in any window
-    * leaves a complete generation on disk.
+    * swapped in ([[SidecarFold]]) with the same `partitionBy(shard)`
+    * layout [[writeFilter]] wrote — nothing ever lands on the driver,
+    * so the daily-ingest fold works at the tier's design point
+    * (10^10–10^11 keys ⇒ 10^9+ word rows, tens of GB): one shard
+    * exchange per fold, each shard's directory rewritten from its own
+    * partition. Pass the returned state back as `carried` to skip the
+    * next fold's params read and partitioned-words read.
     */
   def updateFilter(spark: SparkSession, path: String, batch: DataFrame,
-      keyCol: String): Unit = {
-    updateFilterCarried(spark, path, batch, keyCol, carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches, the DISTRIBUTED
-    * tier's variant (nothing driver-resident at any size, so unlike
-    * [[Bloom.BloomFoldState]] the words ride as a LOCAL-CHECKPOINTED
-    * frame, not collected rows): the operating point plus a frame equal
-    * to the on-disk `words` generation. Holding it saves the params
-    * read + the partitioned-words read (directory listing + scan) per
-    * micro-batch; the checkpoint that replaces them is one pass over
-    * the merged rows the swap was about to write anyway. Drop on any
-    * failed fold; a restarted stream starts from disk.
-    */
-  final case class ShardedBloomFoldState(numShards: Int,
-      bitsPerShard: Int, numHashes: Int, words: DataFrame)
-
-  /** [[updateFilter]] with the carried fold state — identical on-disk
-    * result (same union → bit_or merge, same partitioned atomic swap).
-    */
-  def updateFilterCarried(spark: SparkSession, path: String,
-      batch: DataFrame, keyCol: String,
-      carried: Option[ShardedBloomFoldState] = None)
-      : ShardedBloomFoldState = {
-    val st = carried.getOrElse {
-      val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
-      ShardedBloomFoldState(numShards, bitsPerShard, numHashes,
-        readWords(spark, path)
-          .select(col("shard").cast("int").as("shard"), col("word_idx"),
-            col("bits")))
+      keyCol: String,
+      carried: Option[SidecarFold[(Int, Int, Int)]] = None)
+      : SidecarFold[(Int, Int, Int)] =
+    SidecarFold.fold(s"$path/words", None, carried, Seq("shard")) {
+      SidecarFold(readParams(spark, path), readWords(spark, path), None)
+    } { st =>
+      val (numShards, bitsPerShard, numHashes) = st.params
+      Some(st.copy(stored = st.stored
+        .unionAll(sketch(batch, keyCol, numShards, bitsPerShard,
+          numHashes))
+        .groupBy("shard", "word_idx")
+        .agg(bit_or(col("bits")).as("bits"))))
     }
-    val merged = st.words
-      .unionAll(sketch(batch, keyCol, st.numShards, st.bitsPerShard,
-        st.numHashes))
-      .groupBy("shard", "word_idx")
-      .agg(bit_or(col("bits")).as("bits"))
-      .localCheckpoint(true)
-    SidecarIO.atomicOverwriteDf(merged, s"$path/words",
-      partitionCols = Seq("shard"))
-    ShardedBloomFoldState(st.numShards, st.bitsPerShard, st.numHashes,
-      merged)
-  }
 
   /** The nothing-resident probe: prune `fact` to the rows whose key
     * MIGHT be in the sidecar set, by cogrouping fact rows with the
@@ -257,8 +223,6 @@ object ShardedBloom {
       keepMatches: Boolean): DataFrame = {
     val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
     val words = readWords(spark, path)
-      .select(col("shard").cast("int").as("shard"), col("word_idx"),
-        col("bits"))
 
     val keyed = fact
       .withColumn("_gb_shard", shardOf(col(factKey), numShards))

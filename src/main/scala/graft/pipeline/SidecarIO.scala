@@ -5,71 +5,66 @@ import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.util.Try
 
-/** Crash-safe overwrite for the small persisted sidecars (bloom words,
-  * count-min cells, bottom-k samples, …): `mode("overwrite")` on the
-  * live path deletes the ONLY copy before the new write commits, so a
-  * crash in between loses the accumulated sidecar irrecoverably. Here
-  * the new generation is written to a TMP sibling first, the live dir
-  * is renamed aside as `_prev`, tmp renamed live, `_prev` dropped —
-  * every crash window leaves at least one complete generation on disk,
-  * and [[readWithFallback]] serves `_prev` if the live dir is missing
-  * (the one window where a crash interrupts the swap).
+/** The one crash-safe replace for persisted sidecars and indexes
+  * (bloom words, count-min cells, BM25 df, vector-index bases, …):
+  * `mode("overwrite")` on the live path deletes the ONLY copy before the
+  * new write commits, so a crash in between loses the sidecar. [[swap]]
+  * writes the new generation to a `_tmp` sibling first, renames the
+  * live dir aside as `_prev`, renames `_tmp` live and drops `_prev`;
+  * [[readWithFallback]] serves `_prev` whenever the live dir is missing.
+  *
+  * Recovery rule: a swap that finds NO live dir is recovering from a
+  * crash between the two renames, and there `_prev` is the only
+  * complete generation — it is kept until `_tmp` is live and deleted
+  * only after. So a crash at any step, and a second crash during the
+  * recovery swap, still leaves a reader generation N or N+1; nothing is
+  * ever left with only a `_tmp`.
   */
 object SidecarIO {
 
-  /** Replace the parquet dir at `dest` with `rows` (already collected —
-    * sidecars are bounded by construction) without ever holding zero
-    * complete generations on disk.
-    */
-  def atomicOverwrite(spark: SparkSession, rows: java.util.List[Row],
-      schema: StructType, dest: String): Unit = {
-    val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dest + "_tmp")
-    val prev = new Path(dest + "_prev")
-    fs.delete(tmp, true)
-    spark.createDataFrame(rows, schema).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(prev, true)
-    if (fs.exists(destPath)) { fs.rename(destPath, prev); () }
-    if (!fs.rename(tmp, destPath))
-      sys.error(s"sidecar swap failed: could not rename $tmp to $dest")
-    fs.delete(prev, true)
-    ()
-  }
-
-  /** [[atomicOverwrite]] for a DataFrame too big to collect (e.g. a
-    * vocabulary-sized table): the tmp write MATERIALIZES the plan in
-    * full while the live dir is still intact, so a plan that reads the
-    * path it replaces cannot race itself, and the swap then proceeds
-    * as above. With `partitionCols` the new generation keeps a
+  /** Replace the parquet dir at `dest` with `df` through [[swap]]. The
+    * tmp write MATERIALIZES the plan in full while the live dir is
+    * still intact, so a plan that reads the path it replaces cannot
+    * race itself. With `partitionCols` the new generation keeps a
     * `partitionBy` directory layout (one exchange on the partition
     * keys, no driver coalesce) — the sharded-sidecar fold path, where
     * each shard must land in its own directory and the table can be
-    * tens of GB.
+    * tens of GB; otherwise it is coalesced to one file.
     */
   def atomicOverwriteDf(df: DataFrame, dest: String,
-      files: Int = 1, partitionCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
+      partitionCols: Seq[String] = Nil): Unit =
+    swap(df.sparkSession, dest) { tmp =>
+      val shaped =
+        if (partitionCols.nonEmpty)
+          df.repartition(partitionCols.map(org.apache.spark.sql.functions
+            .col): _*)
+        else df.coalesce(1)
+      val writer = shaped.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
+       else writer).parquet(tmp.toString)
+    }
+
+  /** Replace the directory `dest` with the generation `writeTmp` writes
+    * into the tmp dir it is given (see the object doc for the steps and
+    * the recovery rule).
+    */
+  private[pipeline] def swap(spark: SparkSession, dest: String)(
+      writeTmp: Path => Unit): Unit = {
     val destPath = new Path(dest)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dest + "_tmp")
     val prev = new Path(dest + "_prev")
     fs.delete(tmp, true)
-    val shaped =
-      if (partitionCols.nonEmpty)
-        df.repartition(partitionCols.map(org.apache.spark.sql.functions
-          .col): _*)
-      else df.coalesce(files)
-    val writer = shaped.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(tmp.toString)
-    fs.delete(prev, true)
-    if (fs.exists(destPath)) { fs.rename(destPath, prev); () }
+    writeTmp(tmp)
+    if (fs.exists(destPath)) {
+      fs.delete(prev, true)
+      if (!fs.rename(destPath, prev))
+        sys.error(s"sidecar swap failed: could not rename $dest to $prev")
+    }
     if (!fs.rename(tmp, destPath))
       sys.error(s"sidecar swap failed: could not rename $tmp to $dest")
     fs.delete(prev, true)
@@ -135,7 +130,7 @@ object SidecarIO {
     * that one on disk (a missing dir with no `_prev` stays `dest`, so
     * the read fails naming the path the caller asked for).
     */
-  private def liveOrPrev(spark: SparkSession, dest: String): Path = {
+  private[pipeline] def liveOrPrev(spark: SparkSession, dest: String): Path = {
     val destPath = new Path(dest)
     val prev = new Path(dest + "_prev")
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Mergeable distinct-count sketches (Apache DataSketches HLL, via
@@ -39,13 +39,15 @@ object Sketches {
       "AS (col_name, sketch)"))
   }
 
-  /** Persist column sketches + their operating point (`lgK`, columns). */
+  /** Persist column sketches + their operating point (`lgK`, columns);
+    * the sketches land through the [[SidecarIO]] swap.
+    */
   def writeSketches(df: DataFrame, cols: Seq[String], path: String,
       lgK: Int = 12): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    columnSketches(df, cols, lgK).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sketches")
+    SidecarIO.atomicOverwriteDf(columnSketches(df, cols, lgK),
+      s"$path/sketches")
     Seq((lgK, cols.mkString(","))).toDF("lgK", "cols").coalesce(1)
       .write.mode("overwrite").json(s"$path/params")
   }
@@ -53,54 +55,28 @@ object Sketches {
   /** Fold a new batch into the stored sketches — batch-sized cost, no
     * corpus rescan. The batch is sketched at the sidecar's STORED lgK
     * (part of the sketch identity, like index params), unioned per
-    * column, and the sidecar rewritten. The merged rows are collected
-    * before the overwrite — one row per column, KB each, bounded by
-    * construction — because overwriting a path that the writing plan
-    * still reads lazily would race itself.
+    * column, and swapped in ([[SidecarFold]]; pass the returned state
+    * back as `carried` to skip the next fold's reads).
     */
-  def updateSketches(spark: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    updateSketchesCarried(spark, path, batch, carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): lgK/cols plus the
-    * exact row set of the last written generation — the per-fold params
-    * + sketches reads go away; the merge stays the same Spark
-    * `hll_union_agg` over the same rows, so the folded sketch bytes are
-    * unchanged.
-    */
-  final case class HllFoldState(lgK: Int, cols: Seq[String],
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketches]] with the carried fold state. */
-  def updateSketchesCarried(spark: SparkSession, path: String,
-      batch: DataFrame,
-      carried: Option[HllFoldState] = None): HllFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = spark.read.parquet(s"$path/sketches")
-      HllFoldState(p.getAs[Long]("lgK").toInt,
-        p.getAs[String]("cols").split(",").toSeq,
-        stored.collect().toSeq, stored.schema)
+  def updateSketches(spark: SparkSession, path: String, batch: DataFrame,
+      carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
+    SidecarFold.fold(s"$path/sketches", None, carried) {
+      SidecarFold(spark.read.json(s"$path/params").head(),
+        SidecarIO.readWithFallback(spark, s"$path/sketches"), None)
+    } { st =>
+      Some(st.copy(stored = st.stored
+        .union(columnSketches(batch,
+          st.params.getAs[String]("cols").split(",").toSeq,
+          st.params.getAs[Long]("lgK").toInt))
+        .groupBy("col_name")
+        .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .union(columnSketches(batch, st.cols, st.lgK))
-      .groupBy("col_name")
-      .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
-    val rows = merged.collect().toSeq
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        merged.schema).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sketches")
-    HllFoldState(st.lgK, st.cols, rows, merged.schema)
-  }
 
-  /** Distinct-count estimates from a persisted sidecar. */
+  /** Distinct-count estimates from a persisted sidecar (a crashed swap
+    * serves the previous generation).
+    */
   def estimates(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/sketches")
+    SidecarIO.readWithFallback(spark, s"$path/sketches")
       .select(col("col_name"),
         hll_sketch_estimate(col("sketch")).as("n_distinct_est"))
 }

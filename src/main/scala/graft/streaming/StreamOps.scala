@@ -430,6 +430,24 @@ object StreamOps {
         idCol, textCol, benchTextCol, shingleSize)
     }
 
+  /** Drive a mergeable-sidecar fold ([[graft.pipeline.SidecarFold]])
+    * from a stream: each micro-batch folds with the state the previous
+    * fold returned, so the params, the stored side and the replay guard
+    * ride in memory instead of being re-read per micro-batch. A failed
+    * fold drops the state, and the next fold re-reads disk.
+    */
+  private def foldPerBatch[P](stream: DataFrame)(
+      fold: (DataFrame, Long, Option[graft.pipeline.SidecarFold[P]]) =>
+        graft.pipeline.SidecarFold[P])
+      : org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] = {
+    var st: Option[graft.pipeline.SidecarFold[P]] = None
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      try st = Some(fold(batch, batchId, st))
+      catch { case e: Throwable => st = None; throw e }
+    }
+  }
+
   /** Sidecar MAINTENANCE from a stream — the ingest side of the
     * [[graft.pipeline.Bloom]] membership family: each micro-batch of
     * keys folds into the persisted filter at `path` (which must
@@ -443,19 +461,11 @@ object StreamOps {
   def bloomUpdateStream(stream: DataFrame, path: String,
       keyCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // fold state carried across batches (the serving-handle discipline
-    // on the maintenance side): the sidecar params + last written rows
-    // ride in memory instead of being re-read per micro-batch; any
-    // failed fold drops the state so the next fold re-reads disk
-    var st: Option[graft.pipeline.Bloom.BloomFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.Bloom.updateFilterCarried(
-          batch.sparkSession, path, batch, keyCol, st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
+      graft.pipeline.Bloom.updateFilter(batch.sparkSession, path, batch,
+        keyCol, st)
     }
-  }
 
   /** [[bloomUpdateStream]] for the prefix-SHARDED tier
     * ([[graft.pipeline.ShardedBloom]]) — the daily-ingest stream of
@@ -470,18 +480,11 @@ object StreamOps {
   def shardedBloomUpdateStream(stream: DataFrame, path: String,
       keyCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream) — the distributed
-    // tier's frame-backed variant
-    var st: Option[graft.pipeline.ShardedBloom.ShardedBloomFoldState] =
-      None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.ShardedBloom.updateFilterCarried(
-          batch.sparkSession, path, batch, keyCol, st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[(Int, Int, Int)](stream) { (batch, _, st) =>
+      graft.pipeline.ShardedBloom.updateFilter(batch.sparkSession, path,
+        batch, keyCol, st)
     }
-  }
 
   /** Sidecar maintenance for the [[graft.pipeline.Search]] BM25
     * inverted index — the one persisted retrieval sidecar that
@@ -498,19 +501,11 @@ object StreamOps {
   def bm25UpdateStream(stream: DataFrame, path: String,
       idCol: String, textCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream): the df/stats/guard
-    // sidecar frame + sentinels persist across folds; the replay guard
-    // and the atomic swap are inside the fold and unchanged
-    var st: Option[graft.pipeline.Search.Bm25FoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        try st = Some(graft.pipeline.Search.updateIndexCarried(
-          batch.sparkSession, path, batch, idCol, textCol,
-          batchId = Some(batchId), carried = st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[Map[String, Long]](stream) { (batch, batchId, st) =>
+      graft.pipeline.Search.updateIndex(batch.sparkSession, path, batch,
+        idCol, textCol, batchId = Some(batchId), carried = st)
     }
-  }
 
   /** Index maintenance for a persisted [[graft.pipeline.ProductQuant]]
     * IVF-PQ index — the daily-ingest stream of the vector-serving
@@ -580,18 +575,11 @@ object StreamOps {
     */
   def cmsUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream); the additive replay
-    // guard travels inside it and inside every written generation alike
-    var st: Option[graft.pipeline.CountMin.CmsFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        try st = Some(graft.pipeline.CountMin.updateSketchCarried(
-          batch.sparkSession, path, batch, batchId = Some(batchId),
-          carried = st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, batchId, st) =>
+      graft.pipeline.CountMin.updateSketch(batch.sparkSession, path,
+        batch, batchId = Some(batchId), carried = st)
     }
-  }
 
   /** Per micro-batch drift probe against a persisted reference
     * histogram ([[graft.pipeline.Drift.writeReference]]): each batch's
@@ -659,16 +647,11 @@ object StreamOps {
     */
   def hllUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream)
-    var st: Option[graft.pipeline.Sketches.HllFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.Sketches.updateSketchesCarried(
-          batch.sparkSession, path, batch, st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
+      graft.pipeline.Sketches.updateSketches(batch.sparkSession, path,
+        batch, st)
     }
-  }
 
   /** Sidecar maintenance for the [[graft.pipeline.BottomK]] quantile
     * sample: set-union on `(h, v)` then re-trim to k — IDEMPOTENT
@@ -678,16 +661,11 @@ object StreamOps {
     */
   def bottomKUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream)
-    var st: Option[graft.pipeline.BottomK.BottomKFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.BottomK.updateSketchCarried(
-          batch.sparkSession, path, batch, st))
-        catch { case e: Throwable => st = None; throw e }
+        org.apache.spark.sql.Row] =
+    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
+      graft.pipeline.BottomK.updateSketch(batch.sparkSession, path, batch,
+        st)
     }
-  }
 
   /** Per micro-batch AS-OF join against a STATIC right side (the
     * reference series — quotes, sensor calibrations, exchange rates —

@@ -81,5 +81,11 @@ class QualityModelSpec extends AnyFunSuite with SparkTestBase {
     val m2 = LinearModel(1.0, 2.0, 3.0, 4.0, 5.0)
     QualityModel.writeModel(spark, dir, m2) // overwrite path
     assert(QualityModel.readModel(spark, dir) == m2)
+    // a swap that crashed between its renames left only `_prev`
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
+      new org.apache.hadoop.fs.Path(dir + "_prev")))
+    assert(QualityModel.readModel(spark, dir) == m2)
   }
 }

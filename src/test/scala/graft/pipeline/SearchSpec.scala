@@ -2,10 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -273,34 +270,8 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
       k = 3)) == atOnce(allDocs, qs))
   }
 
-  /** Jobs `body` submits, filed by job group on the listener bus. A
-    * marker job in a group of its own then flushes the bus (events
-    * arrive in order), so no sleep decides the count.
-    */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"search-budget-${System.nanoTime}"
-    val marker = s"$group-flush"
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(`marker`) => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job budget")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus stalled")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[A](body: => A): (A, Int) =
+    graft.JobCount.of(spark)(body)
 
   test("job budget: readIndex 1 job, search 5 jobs and two exchanges") {
     val path = foldedIndex(docs, Seq(more.filter($"doc_id" <= 6L),

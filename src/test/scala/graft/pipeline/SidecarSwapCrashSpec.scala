@@ -1,0 +1,169 @@
+package graft.pipeline
+
+import graft.SparkTestBase
+import java.net.URI
+import java.nio.file.Files
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The local filesystem under the `crashfs` scheme, crashing (throwing
+  * instead of running the step) at the k-th rename or delete once
+  * [[CrashingFileSystem.arm]]ed. Steps inside the parquet commit
+  * protocol's scratch dirs (`_temporary`, `.spark-staging-*`) are not
+  * counted: a crash there only leaves garbage inside a `_tmp` dir, the
+  * case the crash before that dir's rename already covers.
+  */
+class CrashingFileSystem extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = URI.create("crashfs:///")
+}) {
+  override def getScheme: String = "crashfs"
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashingFileSystem.step(s"rename $src -> $dst")
+    super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CrashingFileSystem.step(s"delete $p")
+    super.delete(p, recursive)
+  }
+}
+
+object CrashingFileSystem {
+  final class Crash(what: String) extends RuntimeException(s"crash: $what")
+
+  private var crashAt = 0
+  private var steps = 0
+
+  /** Crash at the `k`-th counted step from now; 0 never crashes. */
+  def arm(k: Int): Unit = synchronized { crashAt = k; steps = 0 }
+
+  private def step(what: String): Unit = synchronized {
+    if (!what.contains("_temporary") && !what.contains(".spark-staging")) {
+      steps += 1
+      if (steps == crashAt) { crashAt = 0; throw new Crash(what) }
+    }
+  }
+}
+
+/** Crashes every step of a count-min and a BM25 fold — the two additive
+  * sidecars, whose replay guard must count a batch exactly once — at
+  * generation N, with a batch that makes N+1. After each crash a reader
+  * sees N or N+1, and a recovery fold of the same batch id lands N+1
+  * exactly. The double crash crashes the recovery fold too, at each of
+  * its steps: a swap that drops `_prev` before its tmp dir is live loses
+  * the sidecar there.
+  */
+class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
+  import spark.implicits._
+
+  spark.sparkContext.hadoopConfiguration
+    .set("fs.crashfs.impl", classOf[CrashingFileSystem].getName)
+
+  /** Runs `fold` with a crash at step `k`: true when it crashed. */
+  private def crashed(k: Int)(fold: => Unit): Boolean = {
+    CrashingFileSystem.arm(k)
+    try { fold; false }
+    catch { case _: CrashingFileSystem.Crash => true }
+    finally CrashingFileSystem.arm(0)
+  }
+
+  /** A `crashfs` copy of the generation-N sidecar in `template`. */
+  private def fresh(template: String): String = {
+    val dir = Files.createTempDirectory("crashfs").toFile
+    FileUtils.copyDirectory(new java.io.File(template), dir)
+    s"crashfs://${dir.getAbsolutePath}"
+  }
+
+  /** For every single and double crash of `fold` over a fresh copy of
+    * `template`: `generation` reads N or N+1 after the crashes, and
+    * exactly N+1 after a recovery fold.
+    */
+  private def crashEveryStep[G](template: String, fold: String => Unit,
+      generation: String => G, genN: G, genN1: G): Unit = {
+    def seesNOrN1(path: String, where: String): Unit = {
+      val g = try generation(path) catch {
+        case e: Exception => fail(s"nothing readable after $where", e)
+      }
+      assert(g == genN || g == genN1, s"after $where")
+    }
+    def recovers(path: String, where: String): Unit = {
+      fold(path)
+      assert(generation(path) == genN1, s"recovery after $where")
+    }
+    var k1 = 1
+    while ({
+      val path = fresh(template)
+      val crash = crashed(k1)(fold(path))
+      if (crash) {
+        seesNOrN1(path, s"crash at step $k1")
+        recovers(path, s"crash at step $k1")
+        var k2 = 1
+        while ({
+          val twice = fresh(template)
+          assert(crashed(k1)(fold(twice)))
+          val again = crashed(k2)(fold(twice))
+          if (again) {
+            val where = s"crash at step $k1, then at recovery step $k2"
+            seesNOrN1(twice, where)
+            recovers(twice, where)
+          }
+          k2 += 1
+          again
+        }) ()
+      } else assert(generation(path) == genN1, "uncrashed fold")
+      k1 += 1
+      crash
+    }) ()
+    // delete tmp, delete _prev, two renames, delete _prev
+    assert(k1 - 2 >= 5, s"only ${k1 - 2} steps counted")
+  }
+
+  test("count-min: every single and double crash of a fold leaves " +
+      "generation N or N+1; the recovery fold counts the batch once") {
+    val keys = (i: Int, n: Int) => (0 until n).map(j => s"k${(i + j) % 23}")
+    val (base, a, b) = (keys(0, 120), keys(5, 60), keys(11, 60))
+    val template = Files.createTempDirectory("cms_template").toString
+    CountMin.writeSketch(base.toDF("key"), "key", 4, 64, template)
+    CountMin.updateSketch(spark, template, a.toDF("key"), Some(0L))
+    def grid(cells: DataFrame) = cells.select("r", "c", "cnt").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toList
+    crashEveryStep(template,
+      path => CountMin.updateSketch(spark, path, b.toDF("key"), Some(1L)),
+      path => grid(CountMin.readSketch(spark, path)._1),
+      grid(CountMin.sketch((base ++ a).toDF("key"), "key", 4, 64)),
+      grid(CountMin.sketch((base ++ a ++ b).toDF("key"), "key", 4, 64)))
+  }
+
+  test("BM25: every single and double crash of a fold leaves the df " +
+      "sidecar at generation N or N+1; the recovery fold counts the " +
+      "batch once") {
+    val docs = (from: Long, to: Long) => (from to to).map(i =>
+      (i, s"t${i % 7} t${i % 5} t${i % 3} w$i")).toDF("doc_id", "text")
+    val (base, a, b) = (docs(1, 12), docs(13, 20), docs(21, 30))
+    val template = Files.createTempDirectory("bm25_template").toString
+    Search.writeIndex(base, "doc_id", "text", template, numFiles = 2)
+    Search.updateIndex(spark, template, a, "doc_id", "text", Some(0L))
+    // the swapped side: stats and doc frequencies (the postings delta
+    // lands before the swap, idempotently, so it is not generational)
+    def side(ix: Search.Bm25Index) = (ix.nDocs, ix.avgDl,
+      ix.docFreq.collect().map(r => (r.getString(0), r.getLong(1)))
+        .sorted.toList)
+    val qs = Seq((1L, "t1 t2"), (2L, "w25 t0")).toDF("qid", "qtext")
+    def top(ix: Search.Bm25Index) = Search.search(ix, qs, "qid", "qtext",
+        k = 5).collect().map(_.toSeq.toList).sortBy(_.toString).toList
+    val all = Search.buildIndex(base.union(a).union(b), "doc_id", "text")
+    crashEveryStep(template,
+      path => Search.updateIndex(spark, path, b, "doc_id", "text",
+        Some(1L)),
+      path => side(Search.readIndex(spark, path)),
+      side(Search.buildIndex(base.union(a), "doc_id", "text")), side(all))
+    // and an index recovered from the crash between the renames (no
+    // live df, `_prev` holds N) serves what the build-at-once one serves
+    val path = fresh(template)
+    assert(crashed(4)(Search.updateIndex(spark, path, b, "doc_id",
+      "text", Some(1L))))
+    Search.updateIndex(spark, path, b, "doc_id", "text", Some(1L))
+    assert(top(Search.readIndex(spark, path)) == top(all))
+  }
+}

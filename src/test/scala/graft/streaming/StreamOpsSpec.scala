@@ -848,6 +848,41 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("fold job budget: a steady-state carried count-min fold") {
+    import graft.pipeline.CountMin
+    val path = java.nio.file.Files
+      .createTempDirectory("cmsbudget").toString
+    val toks = for { i <- 1 to 40; _ <- 1 to i } yield "t" + i
+    CountMin.writeSketch(toks.take(100).toDF("tok"), "tok",
+      depth = 4, width = 256, path)
+    val st = CountMin.updateSketch(spark, path,
+      toks.slice(100, 400).toDF("tok"), Some(0L))
+    // the budget is what the fold ran when it carried collected rows:
+    // carrying the checkpointed frame the swap wrote must add no job
+    val (_, jobs) = graft.JobCount.of(spark)(CountMin.updateSketch(spark,
+      path, toks.drop(400).toDF("tok"), Some(1L), carried = Some(st)))
+    assert(jobs <= 4, s"carried count-min fold ran $jobs jobs; budget 4")
+  }
+
+  test("fold job budget: a steady-state carried BM25 fold") {
+    import graft.pipeline.Search
+    val path = java.nio.file.Files
+      .createTempDirectory("bm25budget").toString + "/idx"
+    val corpus = (1L to 60L).map(i =>
+      (i, s"term${i % 7} term${i % 5} term${i % 3} filler$i"))
+    Search.writeIndex(corpus.take(20).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    val st = Search.updateIndex(spark, path,
+      corpus.slice(20, 40).toDF("doc_id", "text"), "doc_id", "text",
+      Some(0L))
+    val (_, jobs) = graft.JobCount.of(spark)(Search.updateIndex(spark,
+      path, corpus.drop(40).toDF("doc_id", "text"), "doc_id", "text",
+      Some(1L), carried = Some(st)))
+    // the tf checkpoint, batch stats, postings delta, merged-df
+    // checkpoint and swap: the count before the fold was shared
+    assert(jobs <= 12, s"carried BM25 fold ran $jobs jobs; budget 12")
+  }
+
   test("stream-maintained BM25 index serves scores bit-identical to " +
       "build-at-once; replayed batches are skipped") {
     import graft.pipeline.Search
