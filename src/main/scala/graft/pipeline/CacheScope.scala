@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Caller-visible lifecycle for the intermediate caches the dedup /
@@ -36,6 +38,7 @@ import org.apache.spark.storage.StorageLevel
   */
 final class CacheScope extends AutoCloseable {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+  private val checkpoints = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
   /** Persist `ds` (MEMORY_AND_DISK) and track it for release. */
   private[graft] def persist[T](ds: Dataset[T]): Dataset[T] = synchronized {
@@ -44,17 +47,38 @@ final class CacheScope extends AutoCloseable {
     ds
   }
 
-  /** Number of tracked (not yet released) datasets. */
-  def trackedCount: Int = synchronized(frames.size)
+  /** Local-checkpoint `ds` and track the checkpointed RDD for release.
+    * Each reference to a persisted frame in a plan becomes its own cache
+    * stage, and so its own job; a checkpoint is a plain RDD scan wherever
+    * it is referenced. Its blocks are its only copy, though: once the
+    * scope closes the frame cannot be recomputed, so checkpoint only
+    * frames whose terminal action runs before [[close]].
+    */
+  private[graft] def checkpoint[T](ds: Dataset[T]): Dataset[T] = synchronized {
+    val cp = ds.localCheckpoint(eager = false)
+    checkpoints ++= cp.queryExecution.analyzed.collect {
+      case r: LogicalRDD => r.rdd
+    }
+    cp
+  }
+
+  /** Number of tracked (not yet released) datasets and checkpoints. */
+  def trackedCount: Int = synchronized(frames.size + checkpoints.size)
 
   private[graft] def tracked: List[Dataset[_]] = synchronized(frames.toList)
 
-  /** Unpersist every tracked dataset. Idempotent; the scope can be reused
-    * afterwards (it simply starts tracking from empty again).
+  private[graft] def trackedCheckpoints: List[RDD[_]] =
+    synchronized(checkpoints.toList)
+
+  /** Unpersist every tracked dataset and free every tracked checkpoint's
+    * blocks. Idempotent; the scope can be reused afterwards (it simply
+    * starts tracking from empty again).
     */
   override def close(): Unit = synchronized {
     frames.foreach(_.unpersist(blocking = false))
     frames.clear()
+    checkpoints.foreach(_.unpersist(blocking = false))
+    checkpoints.clear()
   }
 }
 

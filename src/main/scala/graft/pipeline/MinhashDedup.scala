@@ -59,35 +59,68 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val rows = numHashes / bands
     spread(df.select(col(idCol).cast("long"), col(textCol).cast("string")))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val hs = shingleHashArray(if (text == null) "" else text, shingleSize)
-        val sig = new Array[Long](numHashes)
-        java.util.Arrays.fill(sig, Long.MaxValue)
-        var si = 0
-        while (si < hs.length) {
-          val h = hs(si)
-          var i = 0
-          while (i < numHashes) {
-            val v = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, i.toLong)
-            if (v < sig(i)) sig(i) = v
-            i += 1
-          }
-          si += 1
-        }
-        (0 until bands).map { b =>
-          var acc = 1125899906842597L
-          var r = 0
-          while (r < rows) {
-            acc = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
-              sig(b * rows + r), acc)
-            r += 1
-          }
-          (id, b, acc)
-        }
+        val bk = bandBuckets(
+          shingleHashArray(if (text == null) "" else text, shingleSize),
+          numHashes, bands)
+        bk.indices.map(b => (id, b, bk(b)))
       }.toDF("id", "band", "bucket")
+  }
+
+  /** One minhash kernel pass per document that keeps both of its
+    * outputs: `(id, sh, bk)`, the shingle set and the band buckets
+    * (`bk(b)` is band `b`'s bucket). The incremental probes derive
+    * their bucket rows ([[bucketRows]]) and verify texts from it.
+    */
+  private def minhashSketches(df: DataFrame, idCol: String,
+      textCol: String, numHashes: Int, bands: Int,
+      shingleSize: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    spread(df.select(col(idCol).cast("long"), col(textCol).cast("string")))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        val hs = shingleHashArray(if (text == null) "" else text, shingleSize)
+        (id, hs, bandBuckets(hs, numHashes, bands))
+      }.toDF("id", "sh", "bk")
+  }
+
+  /** The (id, band, bucket) rows of a [[minhashSketches]] frame. */
+  private def bucketRows(sketches: DataFrame): DataFrame =
+    sketches.select(col("id"), posexplode(col("bk")).as(Seq("band", "bucket")))
+
+  /** The banded minhash signature of one shingle-hash set: the
+    * `numHashes` minima split into `bands` bands of
+    * `numHashes / bands` rows, each band hashed to one bucket.
+    */
+  private def bandBuckets(hs: Array[Long], numHashes: Int,
+      bands: Int): Array[Long] = {
+    val rows = numHashes / bands
+    val sig = new Array[Long](numHashes)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    var si = 0
+    while (si < hs.length) {
+      val h = hs(si)
+      var i = 0
+      while (i < numHashes) {
+        val v = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, i.toLong)
+        if (v < sig(i)) sig(i) = v
+        i += 1
+      }
+      si += 1
+    }
+    Array.tabulate(bands) { b =>
+      var acc = 1125899906842597L
+      var r = 0
+      while (r < rows) {
+        acc = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
+          sig(b * rows + r), acc)
+        r += 1
+      }
+      acc
+    }
   }
 
   /** LSH band buckets: split the signature into `bands` bands of
@@ -149,7 +182,10 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
     * banded MinHash buckets of batch ∪ corpus, but only bucket rows
     * containing a batch doc generate candidates, so the join cost scales
     * with |batch|, not |corpus|². Ids must be disjoint across the two
-    * inputs; output orients batch ids as `id_a`.
+    * inputs; output orients batch ids as `id_a`. The returned frame
+    * reads a checkpoint owned by `scope`: take its terminal action
+    * before the scope closes (for the session scope, before
+    * [[CacheScope.releaseSession]]); after that it cannot be read.
     */
   def minhashPairsIncremental(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
@@ -157,41 +193,44 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): DataFrame = {
     val sc = CacheScope.resolve(scope, batch.sparkSession)
-    val bBuckets = minhashBuckets(batch, idCol, textCol, numHashes, bands,
-      shingleSize)
     val cBuckets = minhashBuckets(corpus, idCol, textCol, numHashes, bands,
       shingleSize)
-    val textsA = sc.persist(shingleSets(
-      batch.select(col(idCol), col(textCol)), idCol, textCol, shingleSize))
-    val textsB = textsA.unionAll(shingleSets(
-      corpus.select(col(idCol), col(textCol)), idCol, textCol,
-      shingleSize))
-    incrementalBucketPairs(bBuckets, cBuckets, textsA, textsB, threshold,
-      maxBucketSize, sc)
+    val cShingles = shingleSets(corpus.select(col(idCol), col(textCol)),
+      idCol, textCol, shingleSize)
+    incrementalBucketPairs(batch, idCol, textCol, numHashes, bands,
+      shingleSize, cBuckets, cShingles, threshold, maxBucketSize, sc)
   }
 
-  /** Shared incremental candidate+verify core: batch bucket rows against
-    * corpus bucket rows (however the corpus side was produced — a fresh
-    * kernel pass or a persisted index scan), then exact-Jaccard verify:
-    * `textsA` = the BATCH shingle sets (every emitted `id_a` is a batch
-    * id), `textsB` = batch ∪ corpus shingle sets.
+  /** Shared incremental candidate+verify core: the batch's bucket rows
+    * against corpus bucket rows (however the corpus side was produced —
+    * a fresh kernel pass or a persisted index scan), then exact-Jaccard
+    * verify of each candidate's BATCH shingle set (every emitted `id_a`
+    * is a batch id) against batch ∪ corpus (`cShingles`) shingle sets.
     *
-    * Per-batch state is BATCH-sized: only the batch bucket rows persist
-    * (counts + both join sides read them); the corpus side streams
-    * through the candidate join uncached — the previous form persisted
-    * and re-aggregated the whole batch ∪ corpus union EVERY micro-batch,
-    * a corpus-sized cache and a corpus-sized count pass per fold. The
-    * skew guard instead merges per-side counts (bucket count over the
-    * union = corpus count + batch count — additive, so the oversized
-    * set is IDENTICAL), and a probing stream passes its handle's
+    * Per-batch state is BATCH-sized and taken in ONE kernel pass: the
+    * batch's [[minhashSketches]] frame is local-checkpointed into `sc`
+    * ([[CacheScope.checkpoint]]), and its bucket rows and verify texts
+    * are both read from it. A checkpoint is a plain scan wherever the
+    * plan references it, where a persisted frame costs one cache stage
+    * (one job) per reference; so the returned frame must take its
+    * terminal action before `sc` closes. The corpus side streams
+    * through the candidate join uncached. The skew guard merges
+    * per-side counts (bucket count over the union = corpus count +
+    * batch count — additive, so the oversized set is IDENTICAL to a
+    * count over the union), and a probing stream passes its handle's
     * precomputed corpus count frame via `cCounts` so the corpus-wide
     * aggregation runs once per stream, not once per batch.
     */
-  private[pipeline] def incrementalBucketPairs(bBuckets: DataFrame,
-      cBuckets: DataFrame, textsA: DataFrame, textsB: DataFrame,
+  private[pipeline] def incrementalBucketPairs(batch: DataFrame,
+      idCol: String, textCol: String, numHashes: Int, bands: Int,
+      shingleSize: Int, cBuckets: DataFrame, cShingles: DataFrame,
       threshold: Double, maxBucketSize: Int, sc: CacheScope,
       cCounts: Option[DataFrame] = None): DataFrame = {
-    val pb = sc.persist(bBuckets)
+    val sketches = sc.checkpoint(minhashSketches(
+      batch.select(col(idCol), col(textCol)), idCol, textCol, numHashes,
+      bands, shingleSize))
+    val pb = bucketRows(sketches)
+    val textsA = sketches.select("id", "sh")
     val bCounts = pb.groupBy("band", "bucket")
       .agg(count(lit(1)).as("cnt"))
     val cc = cCounts.getOrElse(cBuckets.groupBy("band", "bucket")
@@ -199,12 +238,19 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
     val oversized = bCounts.unionAll(cc)
       .groupBy("band", "bucket").agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") > maxBucketSize).select("band", "bucket")
+    // the guard filters the batch rows once, as the join's `l` side: a
+    // candidate joins on (band, bucket), so the batch rows of `r` in an
+    // oversized bucket find no partner without a filter of their own
+    // (one more reference to `oversized`, and so one more job). The
+    // corpus rows stay filtered before the join: an oversized corpus
+    // bucket must not reach the join's exchange.
     val l = pb
       .join(broadcast(oversized), Seq("band", "bucket"), "left_anti")
       .select(col("band"), col("bucket"), col("id").as("id_a"))
     val r = pb.withColumn("new", lit(true))
-      .unionAll(cBuckets.withColumn("new", lit(false)))
-      .join(broadcast(oversized), Seq("band", "bucket"), "left_anti")
+      .unionByName(cBuckets
+        .join(broadcast(oversized), Seq("band", "bucket"), "left_anti")
+        .withColumn("new", lit(false)))
       .select(col("band"), col("bucket"), col("id").as("id_b"),
         col("new").as("new_b"))
     val cand = l.join(r, Seq("band", "bucket"))
@@ -212,7 +258,7 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       .filter((col("new_b") && col("id_a") < col("id_b")) ||
         (!col("new_b") && col("id_a") =!= col("id_b")))
       .select("id_a", "id_b").distinct()
-    verifyPairsAB(cand, textsA, textsB, threshold)
+    verifyPairsAB(cand, textsA, textsA.unionAll(cShingles), threshold)
   }
 
   /** Persist a MinHash LSH text index: the corpus's banded bucket rows
@@ -247,6 +293,8 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
     * joins — nothing corpus-sized is recomputed. Signature params come
     * from the index's sidecar (they are part of the index identity: a
     * batch hashed with different params would never collide correctly).
+    * Like [[minhashPairsIncremental]], the returned frame is readable
+    * only until `scope` closes.
     */
   def minhashPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
@@ -271,15 +319,16 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       path: String,
       scope: CacheScope = CacheScope.session): LoadedMinhashIndex = {
     val sc = CacheScope.resolve(scope, spark)
-    val p = spark.read.json(s"$path/params").head()
+    val p = spark.read.schema("numHashes LONG, bands LONG, shingleSize LONG")
+      .json(s"$path/params").head()
     val cBuckets = dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/buckets"), "id")
+      SidecarIO.readWithFallback(spark, s"$path/buckets"), "id")
     LoadedMinhashIndex(
       p.getAs[Long]("numHashes").toInt, p.getAs[Long]("bands").toInt,
       p.getAs[Long]("shingleSize").toInt,
       cBuckets,
       dropTombstoned(spark, path,
-        spark.read.parquet(s"$path/shingles"), "id"),
+        SidecarIO.readWithFallback(spark, s"$path/shingles"), "id"),
       // corpus bucket counts, persisted with the handle: the skew guard
       // adds batch counts to these per fold instead of re-aggregating
       // the corpus bucket frame every micro-batch
@@ -293,15 +342,9 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
   def minhashPairsFromLoaded(ix: LoadedMinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
       maxBucketSize: Int = 1000,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val sc = CacheScope.resolve(scope, batch.sparkSession)
-    val bBuckets = minhashBuckets(batch, idCol, textCol, ix.numHashes,
-      ix.bands, ix.shingleSize)
-    val textsA = sc.persist(shingleSets(
-      batch.select(col(idCol), col(textCol)), idCol, textCol,
-      ix.shingleSize))
-    val textsB = textsA.unionAll(ix.cShingles)
-    incrementalBucketPairs(bBuckets, ix.cBuckets, textsA, textsB,
-      threshold, maxBucketSize, sc, cCounts = Some(ix.cBucketCounts))
-  }
+      scope: CacheScope = CacheScope.session): DataFrame =
+    incrementalBucketPairs(batch, idCol, textCol, ix.numHashes, ix.bands,
+      ix.shingleSize, ix.cBuckets, ix.cShingles, threshold, maxBucketSize,
+      CacheScope.resolve(scope, batch.sparkSession),
+      cCounts = Some(ix.cBucketCounts))
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -288,12 +289,18 @@ object Search {
     *    rows — a replayed batch (id ≤ stored) is skipped BEFORE any
     *    write, and a crash between the postings delta and the df swap
     *    replays into an idempotent delta overwrite + the not-yet-
-    *    applied df merge.
+    *    applied df merge;
+    *  - [[readIndex]] serves a delta only once the swap has moved the
+    *    guard to its id, so a reader never sees postings of one
+    *    generation with the stats and doc frequencies of another.
     *
-    * Without an explicit `batchId` (one-shot batch folds) the next
-    * free delta id is used; such folds are not replay-guarded. Pass the
-    * returned state (params = the sentinels) back as `carried` to skip
-    * the next fold's df read and sentinel collect ([[SidecarFold]]).
+    * Without an explicit `batchId` (one-shot batch folds) the id after
+    * the guard and the compaction floor is used; such folds are not
+    * replay-guarded. Pass the returned state (params = the sentinels)
+    * back as `carried` to skip the next fold's df read and sentinel
+    * collect ([[SidecarFold]]). A fold runs one exchange (tf and dl on
+    * `doc_id`) and takes the batch's `n` and `Σdl` from an observation
+    * on its tf checkpoint, so it costs no stats job.
     */
   def updateIndex(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, batchId: Option[Long] = None,
@@ -318,41 +325,56 @@ object Search {
             else math.round(p.getAs[Double]("avgdl") *
               p.getAs[Long]("n_docs")))
       }
-      // un-id'd folds take the next id past everything ever seen: live
-      // delta dirs, the replay guard, AND the compaction floor (a reused
-      // id at or below the floor would be ignored by readIndex)
-      val effId = batchId.getOrElse((deltaIds(spark, path) ++
-        st.guard ++ sentinels.get(SentFloor)).foldLeft(-1L)(math.max) + 1)
+      // deltas above the guard are orphans of a crashed fold, never
+      // served (readIndex serves ids up to the guard only): drop them
+      // before this fold writes its own
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      deltaIds(spark, path).filter(id => st.guard.forall(id > _))
+        .foreach(id => fs.delete(deltaPath(path, id), true))
+      // un-id'd folds take the next id past the guard AND the
+      // compaction floor (a reused id at or below the floor would be
+      // ignored by readIndex)
+      val effId = batchId.getOrElse((st.guard ++ sentinels.get(SentFloor))
+        .foldLeft(-1L)(math.max) + 1)
 
-      val toks = explodedTokens(batch, idCol, textCol)
-      val tf = toks.groupBy("doc_id", "tok")
+      // tf per (doc, tok) and dl per doc over ONE doc_id exchange (the
+      // groupBy and the window both keep the doc_id partitioning; rows
+      // sharing a doc_id merge into one document), with the batch stats
+      // observed on the checkpoint action instead of a job of their own
+      val byDoc = Window.partitionBy("doc_id")
+      val stats = new Observation()
+      val tf = explodedTokens(batch, idCol, textCol)
+        .repartition(col("doc_id"))
+        .groupBy("doc_id", "tok")
         .agg(count(lit(1)).cast(LongType).as("tf"))
+        .select(col("tok"), col("doc_id"), col("tf"),
+          sum(col("tf")).over(byDoc).cast(LongType).as("dl"),
+          min(col("tok")).over(byDoc).as("first_tok"))
+        .observe(stats,
+          sum(when(col("tok") === col("first_tok"), 1L)).as("n"),
+          sum(col("tf")).as("sumdl"))
+        .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
         .localCheckpoint()
-      val dl = tf.groupBy("doc_id")
-        .agg(sum(col("tf")).cast(LongType).as("dl"))
-      val stats = dl.agg(count(lit(1)).cast(LongType).as("n"),
-        sum(col("dl")).cast(LongType).as("sumdl")).head()
-      val batchN = stats.getAs[Long]("n")
-      // nothing to fold (batchN == 0): the guard stays put
-      Option.when(batchN > 0) {
+      val observed = stats.get
+      // an empty or all-blank batch observes null: nothing to fold, the
+      // guard stays put
+      Option(observed("n")).map(_.asInstanceOf[Long]).filter(_ > 0).map {
+          batchN =>
         // 1. idempotent postings delta
-        tf.join(dl, "doc_id")
-          .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-          .sortWithinPartitions("tok", "doc_id")
+        tf.sortWithinPartitions("tok", "doc_id")
           .write.mode("overwrite")
-          .parquet(s"$path/postings_delta/batch=$effId")
+          .parquet(deltaPath(path, effId).toString)
 
         // 2. the swapped side: merged df + stats + replay guard
-        val batchDf = tf.groupBy("tok")
-          .agg(count(lit(1)).cast(LongType).as("df"))
         val mergedDf = st.stored.filter(!isSentinel(col("tok")))
-          .unionAll(batchDf)
+          .unionAll(tf.select(col("tok"), lit(1L).as("df")))
           .groupBy("tok").agg(sum(col("df")).cast(LongType).as("df"))
         // rewrite the three fold sentinels, CARRY every other one (the
         // compaction generation/floor must survive subsequent folds)
         val next = (sentinels - SentN - SentSumDl - SentBatch).toSeq ++
           Seq(SentN -> (curN + batchN),
-            SentSumDl -> (curSum + stats.getAs[Long]("sumdl")),
+            SentSumDl -> (curSum + observed("sumdl").asInstanceOf[Long]),
             SentBatch -> effId)
         SidecarFold(next.toMap,
           mergedDf.unionAll(sentinelRows(spark, next)), Some(effId))
@@ -363,6 +385,22 @@ object Search {
     val root = new org.apache.hadoop.fs.Path(s"$path/postings_delta")
     IndexDeltas.deltaIds(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
+  private def deltaPath(path: String, id: Long) =
+    new org.apache.hadoop.fs.Path(s"$path/postings_delta/batch=$id")
+
+  /** The delta ids a reader serves: above the compaction floor and at
+    * or below the replay guard. A fold writes its delta before the df
+    * swap that bumps the guard, so a delta above the guard belongs to a
+    * fold whose stats and doc frequencies are not live yet; with no
+    * guard no fold has landed, and no delta is served.
+    */
+  private def liveDeltaIds(spark: SparkSession, path: String,
+      sentinels: Map[String, Long]): Seq[Long] = {
+    val floor = sentinels.getOrElse(SentFloor, -1L)
+    sentinels.get(SentBatch).fold(Seq.empty[Long])(guard =>
+      deltaIds(spark, path).filter(id => id > floor && id <= guard))
   }
 
   /** The base postings dir the sentinels name. */
@@ -380,18 +418,20 @@ object Search {
   def readIndex(spark: SparkSession, path: String): Bm25Index = {
     val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
     val sentinels = sentinelsOf(dfSide)
-    // base generation + delta floor: compaction renames the base and
-    // bumps both in the ONE atomic df swap, so every crash point reads
-    // a consistent (base, live-deltas) pair
-    val floor = sentinels.getOrElse(SentFloor, -1L)
+    // base generation, delta floor and replay guard all come from the
+    // ONE atomic df swap (compaction renames the base and bumps the
+    // floor in it; a fold bumps the guard in it), so every crash point
+    // reads a consistent (base, live-deltas, stats) triple
     val base = SidecarIO.readWithFallback(spark, baseDir(path, sentinels))
-    // live deltas = batch dirs above the compaction floor (a fully
-    // compacted index leaves none — and an empty root must not reach
-    // the parquet reader, which cannot infer a schema from nothing)
-    val postings = if (deltaIds(spark, path).exists(_ > floor))
+    // live deltas (a fully compacted index leaves none — and an empty
+    // root must not reach the parquet reader, which cannot infer a
+    // schema from nothing)
+    val live = liveDeltaIds(spark, path, sentinels)
+    val postings = if (live.nonEmpty)
       base.unionAll(SidecarIO.readWithFallback(spark,
           s"$path/postings_delta")
-        .filter(col("batch") > floor) // compacted-away deltas ignored
+        // compacted-away and not-yet-swapped deltas ignored
+        .filter(col("batch").isin(live: _*))
         .select(col("tok"), col("doc_id"), col("tf"), col("dl")))
     else base
     val (n, avgDl) = (sentinels.get(SentN),
@@ -422,7 +462,9 @@ object Search {
     val sentinels = sentinelsOf(dfSide)
     val ix = readIndex(spark, path)
     val gen = sentinels.getOrElse(SentGen, -1L) + 1
-    val newFloor = (deltaIds(spark, path) :+
+    // only deltas readIndex serves: one above the guard is a crashed
+    // fold's, and compacting it in would count it twice on its replay
+    val newFloor = (liveDeltaIds(spark, path, sentinels) :+
       sentinels.getOrElse(SentFloor, -1L)).max
     ix.postings
       .repartitionByRange(numFiles, col("tok"))
@@ -438,8 +480,7 @@ object Search {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(baseDir(path, sentinels)), true)
     deltaIds(spark, path).filter(_ <= newFloor).foreach(id =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/postings_delta/batch=$id"), true))
+      fs.delete(deltaPath(path, id), true))
   }
 
   /** Daily-driver search against the persisted sidecar: read + probe,

@@ -241,8 +241,12 @@ object Compat {
     } catch { case e: Throwable => ctx.mem.remove(key); throw e }
   }
 
-  /** Identity mapping of a type onto itself (always succeeds). */
-  private def buildSelf(ctx: Ctx, t: AvroType): Mapping = build(ctx, t, t)
+  /** Identity mapping of a dropped writer field's type onto itself
+    * (always succeeds), resolved in the WRITER schema on both sides: a
+    * named type of the dropped subtree need not exist in the reader.
+    */
+  private def buildSelf(ctx: Ctx, t: AvroType): Mapping =
+    build(new Ctx(ctx.writer, ctx.writer, ctx.downgrade), t, t)
 
   private def buildUnion(ctx: Ctx, from: AvroType, to: AvroType): Mapping =
     inFrame(ctx, from, to) { _ =>

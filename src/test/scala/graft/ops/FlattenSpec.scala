@@ -137,6 +137,54 @@ class FlattenSpec extends AnyFunSuite with SparkTestBase {
     assert(graft.head == Row(1, Seq.empty, Seq.empty, Map.empty))
   }
 
+  test("F5: dropped fields of a named record and enum type match Avro's reader") {
+    // regression: the dropped subtree was resolved in the reader schema,
+    // which does not define its named types (`Unknown Avro type`)
+    val wJson = """{"type":"record","name":"R","fields":[
+      {"name":"a","type":"int"},
+      {"name":"b","type":{"type":"record","name":"B","fields":[
+        {"name":"x","type":"int"}]}},
+      {"name":"e","type":{"type":"enum","name":"E","symbols":["P","Q"]}}]}"""
+    val rJson = """{"type":"record","name":"R","fields":[
+      {"name":"a","type":"int"}]}"""
+    val (w, r) = (Avro.create(wJson), Avro.create(rJson))
+    val c = FlattenOps.compile(w, r).fold(e => sys.error(e), identity)
+    val cr = FlattenOps.compile(r).fold(e => sys.error(e), identity)
+    val input = Seq(Row(1, Row(2), "Q"), Row(7, Row(8), "P"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(input, 1),
+      SchemaConverters.toStructType(w, w.rootRecord))
+    val viaFlat = cr.unflatten(c.flatten(df)).orderBy("a").collect().toSeq
+    val viaBinary = df.select(graft.functions.AvroBinary.fromAvroBinary(
+        graft.functions.AvroBinary.toAvroBinary(
+          struct(df.columns.map(col).toIndexedSeq: _*), w), w, r).as("r"))
+      .select("r.*").orderBy("a").collect().toSeq
+    // Apache Avro's resolving reader over the same writer rows
+    val ws = new org.apache.avro.Schema.Parser().parse(wJson)
+    val rs = new org.apache.avro.Schema.Parser().parse(rJson)
+    val avro = input.map { row =>
+      val rec = new org.apache.avro.generic.GenericData.Record(ws)
+      val b = new org.apache.avro.generic.GenericData.Record(
+        ws.getField("b").schema)
+      b.put("x", row.getStruct(1).getInt(0))
+      rec.put("a", row.getInt(0))
+      rec.put("b", b)
+      rec.put("e", new org.apache.avro.generic.GenericData.EnumSymbol(
+        ws.getField("e").schema, row.getString(2)))
+      val bytes = new java.io.ByteArrayOutputStream
+      val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(bytes, null)
+      new org.apache.avro.generic.GenericDatumWriter[AnyRef](ws).write(rec, enc)
+      enc.flush()
+      val got = new org.apache.avro.generic.GenericDatumReader[
+          org.apache.avro.generic.GenericRecord](ws, rs)
+        .read(null, org.apache.avro.io.DecoderFactory.get()
+          .binaryDecoder(bytes.toByteArray, null))
+      Row(got.getSchema.getFields.asScala.map(f => got.get(f.pos)).toSeq: _*)
+    }
+    assert(viaFlat == avro)
+    assert(viaBinary == avro)
+    assert(avro == Seq(Row(1), Row(7)))
+  }
+
   test("nested record inlines fields; nullable record is one slot") {
     val s = Avro.create("""{"name":"X","type":"record","fields":[
       {"name":"x1","type":"string"},

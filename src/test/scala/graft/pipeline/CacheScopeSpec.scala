@@ -52,6 +52,32 @@ class CacheScopeSpec extends AnyFunSuite with SparkTestBase {
     assert(scope.trackedCount == 0)
   }
 
+  test("close frees the blocks of a scope-tracked checkpoint") {
+    import org.apache.spark.storage.RDDBlockId
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val scope = new CacheScope
+    val cp = scope.checkpoint(docs.select("doc_id"))
+    val n = cp.count()
+    assert(n == docs.count())
+    val rdds = scope.trackedCheckpoints
+    assert(rdds.size == 1 && scope.trackedCount == 1)
+    val blocks = rdds.flatMap(r => r.partitions.indices.map(RDDBlockId(r.id, _)))
+    val master = org.apache.spark.SparkEnv.get.blockManager.master
+    assert(blocks.nonEmpty && blocks.forall(master.contains),
+      "the checkpoint's blocks are stored while the scope is open")
+    assert(cp.count() == n) // read from the checkpoint, not recomputed
+    scope.close()
+    assert(scope.trackedCount == 0)
+    assert(rdds.forall(r =>
+      !spark.sparkContext.getPersistentRDDs.contains(r.id)))
+    eventually(timeout(30.seconds)) {
+      assert(!blocks.exists(master.contains), "close() must free the blocks")
+    }
+    // a released checkpoint is its only copy: the frame is gone with it
+    intercept[Exception](cp.count())
+  }
+
   test("default (no scope passed) lands in the session scope; releaseSession drains it") {
     // NOTE: the session scope is shared — other suites running in the
     // same JVM may add to it concurrently, so assertions are >= / ==0 on
@@ -103,9 +129,11 @@ class CacheScopeSpec extends AnyFunSuite with SparkTestBase {
       // simhashJaccardPairs); +3 since the skew-guard persists the
       // exploded exact frame whenever the bucket cap is REAL (the three
       // real-cap fingerprint candidate runs above: standalone simhash,
-      // via simhashJaccardPairs, and the incremental core)
-      assert(s.trackedCount == 15,
-        s"expected 15 scoped persists, got ${s.trackedCount}")
+      // via simhashJaccardPairs, and the incremental core); -1 since
+      // minhashPairsIncremental's batch buckets and batch shingle sets
+      // are one checkpointed kernel frame
+      assert(s.trackedCount == 14,
+        s"expected 14 scoped persists and checkpoints, got ${s.trackedCount}")
     }
     assert(session.trackedCount == base,
       "explicit-scope calls must not touch the session scope")

@@ -259,6 +259,48 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
       "qtext", k = 3)) == atOnce(allDocs, qs))
   }
 
+  test("fold: empty and all-blank batches fold nothing; rows sharing a " +
+      "doc_id merge into one document") {
+    val qs = foldQueries.toDF("qid", "qtext")
+    val path = foldedIndex(docs, Nil)
+    val empty = Search.updateIndex(spark, path,
+      more.filter(lit(false)), "doc_id", "text", Some(0L))
+    assert(empty.guard.isEmpty, "an empty batch moved the guard")
+    val blank = Search.updateIndex(spark, path,
+      Seq((9L, "   "), (10L, null)).toDF("doc_id", "text"), "doc_id",
+      "text", Some(0L), carried = Some(empty))
+    assert(blank.guard.isEmpty, "an all-blank batch moved the guard")
+    // doc 5 arrives as two rows: one document, tf and dl summed
+    val split = Seq((5L, "rare omega"), (5L, "common"), (6L,
+      "sigma tau common tau")).toDF("doc_id", "text")
+    val st = Search.updateIndex(spark, path, split, "doc_id", "text",
+      Some(1L), carried = Some(blank))
+    assert(st.guard.contains(1L))
+    assert(rows(Search.searchFromIndex(spark, path, qs, "qid", "qtext",
+      k = 3)) == atOnce(docs.unionAll(split), qs))
+  }
+
+  test("a delta above the df guard is never served; the next fold " +
+      "drops it and compaction ignores it") {
+    val qs = foldQueries.toDF("qid", "qtext")
+    val path = foldedIndex(docs, Seq(more.filter($"doc_id" <= 6L)))
+    // a crashed fold's orphan: batch 1's postings written, its df swap
+    // never landed
+    val orphan = more.filter($"doc_id" > 6L)
+    Search.buildIndex(orphan, "doc_id", "text").postings.write
+      .parquet(s"$path/postings_delta/batch=1")
+    val atGuard = atOnce(docs.unionAll(more.filter($"doc_id" <= 6L)), qs)
+    assert(rows(Search.searchFromIndex(spark, path, qs, "qid", "qtext",
+      k = 3)) == atGuard)
+    Search.compactIndex(spark, path)
+    assert(rows(Search.searchFromIndex(spark, path, qs, "qid", "qtext",
+      k = 3)) == atGuard)
+    // an un-id'd fold takes the id after the guard, over the orphan
+    Search.updateIndex(spark, path, orphan, "doc_id", "text")
+    assert(rows(Search.searchFromIndex(spark, path, qs, "qid", "qtext",
+      k = 3)) == atOnce(allDocs, qs))
+  }
+
   test("df sidecar missing after a crashed swap: the read serves _prev") {
     val qs = foldQueries.toDF("qid", "qtext")
     val path = foldedIndex(docs, Seq(more))

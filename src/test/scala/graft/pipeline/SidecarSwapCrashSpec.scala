@@ -49,7 +49,8 @@ object CrashingFileSystem {
 /** Crashes every step of a count-min and a BM25 fold — the two additive
   * sidecars, whose replay guard must count a batch exactly once — at
   * generation N, with a batch that makes N+1. After each crash a reader
-  * sees N or N+1, and a recovery fold of the same batch id lands N+1
+  * sees N or N+1 (for BM25: the stats, doc frequencies and served top-k
+  * together), and a recovery fold of the same batch id lands N+1
   * exactly. The double crash crashes the recovery fold too, at each of
   * its steps: a swap that drops `_prev` before its tmp dir is live loses
   * the sidecar there.
@@ -144,26 +145,25 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
     val template = Files.createTempDirectory("bm25_template").toString
     Search.writeIndex(base, "doc_id", "text", template, numFiles = 2)
     Search.updateIndex(spark, template, a, "doc_id", "text", Some(0L))
-    // the swapped side: stats and doc frequencies (the postings delta
-    // lands before the swap, idempotently, so it is not generational)
+    // a generation is the swapped side (stats and doc frequencies) AND
+    // what a search serves: the postings delta lands before the swap,
+    // so top-k at N+1's postings with N's stats would be neither
     def side(ix: Search.Bm25Index) = (ix.nDocs, ix.avgDl,
       ix.docFreq.collect().map(r => (r.getString(0), r.getLong(1)))
         .sorted.toList)
-    val qs = Seq((1L, "t1 t2"), (2L, "w25 t0")).toDF("qid", "qtext")
+    val qs = Seq((1L, "t1 t2"), (2L, "w25 t0"), (3L, "w14 w27"))
+      .toDF("qid", "qtext")
     def top(ix: Search.Bm25Index) = Search.search(ix, qs, "qid", "qtext",
         k = 5).collect().map(_.toSeq.toList).sortBy(_.toString).toList
-    val all = Search.buildIndex(base.union(a).union(b), "doc_id", "text")
+    def generation(ix: Search.Bm25Index) = (side(ix), top(ix))
+    val (genN, genN1) = (
+      generation(Search.buildIndex(base.union(a), "doc_id", "text")),
+      generation(Search.buildIndex(base.union(a).union(b), "doc_id",
+        "text")))
+    assert(genN._2 != genN1._2, "the batch must move the served top-k")
     crashEveryStep(template,
       path => Search.updateIndex(spark, path, b, "doc_id", "text",
         Some(1L)),
-      path => side(Search.readIndex(spark, path)),
-      side(Search.buildIndex(base.union(a), "doc_id", "text")), side(all))
-    // and an index recovered from the crash between the renames (no
-    // live df, `_prev` holds N) serves what the build-at-once one serves
-    val path = fresh(template)
-    assert(crashed(4)(Search.updateIndex(spark, path, b, "doc_id",
-      "text", Some(1L))))
-    Search.updateIndex(spark, path, b, "doc_id", "text", Some(1L))
-    assert(top(Search.readIndex(spark, path)) == top(all))
+      path => generation(Search.readIndex(spark, path)), genN, genN1)
   }
 }

@@ -848,6 +848,32 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("probe job budget: steady-state minhash probe") {
+    import graft.pipeline.{CacheScope, Dedup}
+    val corpus = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id", $"text")
+    val path = java.nio.file.Files
+      .createTempDirectory("probebudget").toString
+    Dedup.writeMinhashIndex(corpus, "doc_id", "text", path)
+    val ix = Dedup.loadMinhashIndex(spark, path)
+    def batch(mod: Long, offset: Long) = corpus.filter($"doc_id" % 20 === mod)
+      .select(($"doc_id" + offset).as("doc_id"),
+        concat($"text", lit(" zz qq xx")).as("text"))
+    def probe(b: org.apache.spark.sql.DataFrame) = CacheScope.withScope { s =>
+      Dedup.minhashPairsFromLoaded(ix, b, "doc_id", "text", threshold = 0.7,
+        scope = s).collect()
+    }
+    // the first batch materializes the handle's persisted corpus counts
+    assert(probe(batch(0L, 20000L)).nonEmpty)
+    val (pairs, jobs) = graft.JobCount.of(spark)(probe(batch(10L, 30000L)))
+    assert(pairs.nonEmpty)
+    // one kernel pass (the checkpoint's spread exchange), then the
+    // skew-guard, candidate and verify stages; a persisted batch frame
+    // costs one more job per reference to it in the plan
+    assert(jobs <= 10, s"steady-state minhash probe ran $jobs jobs; budget 10")
+  }
+
   test("fold job budget: a steady-state carried count-min fold") {
     import graft.pipeline.CountMin
     val path = java.nio.file.Files
@@ -878,9 +904,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val (_, jobs) = graft.JobCount.of(spark)(Search.updateIndex(spark,
       path, corpus.drop(40).toDF("doc_id", "text"), "doc_id", "text",
       Some(1L), carried = Some(st)))
-    // the tf checkpoint, batch stats, postings delta, merged-df
-    // checkpoint and swap: the count before the fold was shared
-    assert(jobs <= 12, s"carried BM25 fold ran $jobs jobs; budget 12")
+    // the tf checkpoint (one doc_id exchange, batch stats observed on
+    // it), the postings delta, the merged-df checkpoint (one tok
+    // exchange) and the swap
+    assert(jobs <= 6, s"carried BM25 fold ran $jobs jobs; budget 6")
   }
 
   test("stream-maintained BM25 index serves scores bit-identical to " +
