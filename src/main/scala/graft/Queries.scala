@@ -113,12 +113,15 @@ object Queries {
     * stopped-but-unreleased session object stays strongly referenced for
     * the JVM lifetime. Called on every cache access; the maps are tiny.
     */
-  private def sweepStopped[V](
-      m: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V])
-      : java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V] = {
+  private def sweepStopped[K <: Product, V](
+      m: java.util.concurrent.ConcurrentHashMap[K, V])
+      : java.util.concurrent.ConcurrentHashMap[K, V] = {
     val it = m.entrySet().iterator()
     while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
+      it.next().getKey.productElement(0) match {
+        case s: SparkSession if s.sparkContext.isStopped => it.remove()
+        case _ => ()
+      }
     }
     m
   }
@@ -1528,22 +1531,39 @@ object Queries {
       all
     })
 
-  /** Persisted image-fingerprint index over the BASE planted grid
-    * images (doc_id < 50000 of [[dedupGridBlobsFor]]), same
+  /** Persisted fingerprint index over the BASE planted blobs
+    * (doc_id < 50000) of `fp`'s dedup fixture, same
     * once-per-(session, dir) offline-build pattern as
-    * [[minhashIndexFor]]: the corpus decode runs once at build, probes
-    * scan 8-byte fingerprints.
+    * [[minhashIndexFor]], one entry per fingerprint: the corpus decode
+    * runs once at build, probes scan 8- or 32-byte fingerprints.
     */
-  private val imageIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  def imageIndexFor(s: SparkSession, dir: String): String =
-    sweepStopped(imageIndexCache).computeIfAbsent((s, dir), { case (_, d) =>
-      val path = indexTmpPath("imagefp", d)
-      graft.pipeline.Multimodal.writeImageIndex(
-        dedupGridBlobsFor(s, d).filter(col("doc_id") < 50000),
-        "doc_id", "blob", path)
-      path
-    })
+  private val fingerprintIndexCache =
+    new java.util.concurrent.ConcurrentHashMap[
+      (SparkSession, String, graft.pipeline.Multimodal.Fingerprint), String]()
+  def fingerprintIndexFor(s: SparkSession, dir: String,
+      fp: graft.pipeline.Multimodal.Fingerprint): String =
+    sweepStopped(fingerprintIndexCache).computeIfAbsent((s, dir, fp),
+      { case (_, d, f) =>
+        val path = indexTmpPath(s"fp_${f.name}", d)
+        graft.pipeline.Multimodal.writeIndex(
+          dedupBlobsFor(s, d, f).filter(col("doc_id") < 50000),
+          "doc_id", "blob", f, path)
+        path
+      })
+
+  /** The planted dedup fixture of a fingerprint. */
+  private def dedupBlobsFor(s: SparkSession, dir: String,
+      fp: graft.pipeline.Multimodal.Fingerprint): DataFrame = {
+    import graft.pipeline.Multimodal.Fingerprint._
+    fp match {
+      case `image64` => dedupGridBlobsFor(s, dir)
+      case `imageWide` => dedupGridBlobsWideFor(s, dir)
+      case `audio64` => dedupWavBlobsFor(s, dir)
+      case `video64` => dedupVideoBlobsFor(s, dir)
+      case `videoWide` => dedupVideoBlobsWideFor(s, dir)
+      case other => sys.error(s"no planted fixture for ${other.name}")
+    }
+  }
 
   /** Planted WIDE image-DEDUP fixture — [[dedupGridBlobsFor]] at the
     * 256-bit operating point: 16×16 constant-cell grids with lumas
@@ -1582,20 +1602,6 @@ object Queries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       all.count()
       all
-    })
-
-  /** Persisted WIDE image-fingerprint index over the BASE planted
-    * grids (doc_id < 50000 of [[dedupGridBlobsWideFor]]).
-    */
-  private val imageIndexWideCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  def imageIndexWideFor(s: SparkSession, dir: String): String =
-    sweepStopped(imageIndexWideCache).computeIfAbsent((s, dir), { case (_, d) =>
-      val path = indexTmpPath("imagefpw", d)
-      graft.pipeline.Multimodal.writeImageIndexWide(
-        dedupGridBlobsWideFor(s, d).filter(col("doc_id") < 50000),
-        "doc_id", "blob", path)
-      path
     })
 
   /** Planted audio-DEDUP fixture — the WAV analog of
@@ -1643,20 +1649,6 @@ object Queries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       all.count()
       all
-    })
-
-  /** Persisted audio-fingerprint index over the BASE planted clips
-    * (doc_id < 50000 of [[dedupWavBlobsFor]]).
-    */
-  private val audioIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  def audioIndexFor(s: SparkSession, dir: String): String =
-    sweepStopped(audioIndexCache).computeIfAbsent((s, dir), { case (_, d) =>
-      val path = indexTmpPath("audiofp", d)
-      graft.pipeline.Multimodal.writeAudioIndex(
-        dedupWavBlobsFor(s, d).filter(col("doc_id") < 50000),
-        "doc_id", "blob", path)
-      path
     })
 
   /** Planted video-DEDUP fixture — now REAL MJPEG-in-MP4: per doc a
@@ -1710,20 +1702,6 @@ object Queries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       all.count()
       all
-    })
-
-  /** Persisted video-fingerprint index over the BASE planted clips
-    * (doc_id < 50000 of [[dedupVideoBlobsFor]]).
-    */
-  private val videoIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  def videoIndexFor(s: SparkSession, dir: String): String =
-    sweepStopped(videoIndexCache).computeIfAbsent((s, dir), { case (_, d) =>
-      val path = indexTmpPath("videofp", d)
-      graft.pipeline.Multimodal.writeVideoIndex(
-        dedupVideoBlobsFor(s, d).filter(col("doc_id") < 50000),
-        "doc_id", "blob", path)
-      path
     })
 
   /** Planted WIDE video-DEDUP fixture — [[dedupVideoBlobsFor]] at 256
@@ -5440,8 +5418,9 @@ object Queries {
     // join key, so the ≤ 8 output is complete by derivation. ----
     ("image_dedup_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      Multimodal.imageDedupPairs(dedupGridBlobsFor(s, dir),
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairs(dedupGridBlobsFor(s, dir),
+          "doc_id", "blob", Multimodal.Fingerprint.image64,
+          maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -5475,7 +5454,7 @@ object Queries {
       FROM ham WHERE hamming <= 8 ORDER BY id_a, id_b""")),
 
     // ---- incremental image near-dup against the PERSISTED fingerprint
-    // index (writeImageIndex): the re-encoded and perturbed copies
+    // index (writeIndex, image64): the re-encoded and perturbed copies
     // arrive as a NEW batch probed against the base-corpus index —
     // batch decodes + fingerprints, corpus side is the 8-byte scan,
     // multi-probe on the batch side only. Same arithmetic oracle as
@@ -5484,11 +5463,12 @@ object Queries {
     // batch-vs-corpus, a<b batch-internal). ----
     ("image_dedup_index_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      val path = imageIndexFor(s, dir)
+      val fp = Multimodal.Fingerprint.image64
+      val path = fingerprintIndexFor(s, dir, fp)
       val batch = dedupGridBlobsFor(s, dir)
         .filter(col("doc_id") >= 50000)
-      Multimodal.imageDedupPairsFromIndex(s, path, batch,
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairsFromLoaded(Multimodal.loadIndex(s, path, fp),
+          batch, "doc_id", "blob", maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -5534,8 +5514,9 @@ object Queries {
     // the oracle replays all 256 bits arithmetically. ----
     ("image_dedup_pairs_wide", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      Multimodal.imageDedupPairsWide(dedupGridBlobsWideFor(s, dir),
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairs(dedupGridBlobsWideFor(s, dir),
+          "doc_id", "blob", Multimodal.Fingerprint.imageWide,
+          maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -5544,15 +5525,16 @@ object Queries {
       FROM ham WHERE hamming <= 8 ORDER BY id_a, id_b"""))),
 
     // ---- incremental WIDE image near-dup against the persisted
-    // 32-byte-per-image fingerprint index (writeImageIndexWide), same
+    // 32-byte-per-image fingerprint index (writeIndex, imageWide), same
     // incremental contract as image_dedup_index_pairs. ----
     ("image_dedup_index_pairs_wide", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      val path = imageIndexWideFor(s, dir)
+      val fp = Multimodal.Fingerprint.imageWide
+      val path = fingerprintIndexFor(s, dir, fp)
       val batch = dedupGridBlobsWideFor(s, dir)
         .filter(col("doc_id") >= 50000)
-      Multimodal.imageDedupPairsWideFromIndex(s, path, batch,
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairsFromLoaded(Multimodal.loadIndex(s, path, fp),
+          batch, "doc_id", "blob", maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -5575,8 +5557,9 @@ object Queries {
     // and the full Hamming matrix, accidental cross-pairs included. ----
     ("audio_dedup_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      Multimodal.audioDedupPairs(dedupWavBlobsFor(s, dir),
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairs(dedupWavBlobsFor(s, dir),
+          "doc_id", "blob", Multimodal.Fingerprint.audio64,
+          maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -5613,16 +5596,17 @@ object Queries {
       FROM ham WHERE hamming <= 8 ORDER BY id_a, id_b""")),
 
     // ---- incremental audio near-dup against the PERSISTED fingerprint
-    // index (writeAudioIndex): the re-encoded and perturbed clips
+    // index (writeIndex, audio64): the re-encoded and perturbed clips
     // arrive as a NEW batch probed against the base-corpus index; same
     // arithmetic oracle re-oriented to the incremental contract. ----
     ("audio_dedup_index_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      val path = audioIndexFor(s, dir)
+      val fp = Multimodal.Fingerprint.audio64
+      val path = fingerprintIndexFor(s, dir, fp)
       val batch = dedupWavBlobsFor(s, dir)
         .filter(col("doc_id") >= 50000)
-      Multimodal.audioDedupPairsFromIndex(s, path, batch,
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairsFromLoaded(Multimodal.loadIndex(s, path, fp),
+          batch, "doc_id", "blob", maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -6233,8 +6217,8 @@ object Queries {
     // index, oracle-checked: the re-encoded (+50000) and perturbed
     // (+60000) copies arrive as ONE micro-batch (the curate_stream
     // convention) probing the index through
-    // StreamOps.imageDedupStreamAgainstIndex, so the streaming contract
-    // equals the batch FromIndex contract exactly and the
+    // StreamOps.fingerprintDedupStreamAgainstIndex, so the streaming
+    // contract equals the batch loaded-index contract exactly and the
     // image_dedup_index_pairs oracle applies verbatim. One batch on
     // purpose: the synthetic low-entropy fingerprints make ~17k
     // ACCIDENTAL batch-internal pairs at sf0.1 (measured), so a
@@ -6242,15 +6226,17 @@ object Queries {
     // batch-internal — unlike the span/line/minhash streams above,
     // whose fixtures prove the batch-internal clause can never fire. ----
     ("image_stream_pairs", ((s: SparkSession, dir: String) => {
-      val idxPath = imageIndexFor(s, dir)
+      val idxPath = fingerprintIndexFor(s, dir,
+        graft.pipeline.Multimodal.Fingerprint.image64)
       val inDir = streamInputFor(s, dir, "imagebatch", 1) {
         dedupGridBlobsFor(s, dir).filter(col("doc_id") >= 50000)
       }
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.imageDedupStreamAgainstIndex(
-          stream, idxPath, "doc_id", "blob", maxHamming = 8) {
+        graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
+          stream, idxPath, graft.pipeline.Multimodal.Fingerprint.image64,
+          "doc_id", "blob", maxHamming = 8) {
             (res, _) => res.write.mode("append").parquet(outDir)
           }
       }.select(col("id_a"), col("id_b"),
@@ -6291,20 +6277,22 @@ object Queries {
       ORDER BY id_a, id_b""")),
 
     // ---- STREAMING WIDE image near-dup: image_stream_pairs at the
-    // 256-bit operating point (imageDedupWideStreamAgainstIndex over
+    // 256-bit operating point (fingerprintDedupStreamAgainstIndex over
     // the wide index) — the stream tier that stays selective where the
     // 64-bit bands saturate (image_stream_pairs timed out at sf1; this
     // is its scale replacement). One micro-batch, same rationale. ----
     ("image_stream_pairs_wide", ((s: SparkSession, dir: String) => {
-      val idxPath = imageIndexWideFor(s, dir)
+      val idxPath = fingerprintIndexFor(s, dir,
+        graft.pipeline.Multimodal.Fingerprint.imageWide)
       val inDir = streamInputFor(s, dir, "imagebatchwide", 1) {
         dedupGridBlobsWideFor(s, dir).filter(col("doc_id") >= 50000)
       }
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.imageDedupWideStreamAgainstIndex(
-          stream, idxPath, "doc_id", "blob", maxHamming = 8) {
+        graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
+          stream, idxPath, graft.pipeline.Multimodal.Fingerprint.imageWide,
+          "doc_id", "blob", maxHamming = 8) {
             (res, _) => res.write.mode("append").parquet(outDir)
           }
       }.select(col("id_a"), col("id_b"),
@@ -7702,8 +7690,9 @@ object Queries {
     // audio-family discipline. ----
     ("video_dedup_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      Multimodal.videoDedupPairs(dedupVideoBlobsFor(s, dir),
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairs(dedupVideoBlobsFor(s, dir),
+          "doc_id", "blob", Multimodal.Fingerprint.video64,
+          maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -7712,15 +7701,16 @@ object Queries {
       FROM ham WHERE hamming <= 8 ORDER BY id_a, id_b"""))),
 
     // ---- incremental video near-dup against the PERSISTED
-    // fingerprint index (writeVideoIndex): the remuxed and perturbed
+    // fingerprint index (writeIndex, video64): the remuxed and perturbed
     // clips arrive as the batch, probing the base-corpus index. ----
     ("video_dedup_index_pairs", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      val path = videoIndexFor(s, dir)
+      val fp = Multimodal.Fingerprint.video64
+      val path = fingerprintIndexFor(s, dir, fp)
       val batch = dedupVideoBlobsFor(s, dir)
         .filter(col("doc_id") >= 50000)
-      Multimodal.videoDedupPairsFromIndex(s, path, batch,
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairsFromLoaded(Multimodal.loadIndex(s, path, fp),
+          batch, "doc_id", "blob", maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -7742,8 +7732,9 @@ object Queries {
     // arithmetic. ----
     ("video_dedup_pairs_wide", ((s: SparkSession, dir: String) => {
       import graft.pipeline.Multimodal
-      Multimodal.videoDedupPairsWide(dedupVideoBlobsWideFor(s, dir),
-          "doc_id", "blob", maxHamming = 8)
+      Multimodal.dedupPairs(dedupVideoBlobsWideFor(s, dir),
+          "doc_id", "blob", Multimodal.Fingerprint.videoWide,
+          maxHamming = 8)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")

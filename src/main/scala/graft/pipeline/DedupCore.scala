@@ -275,7 +275,12 @@ private[pipeline] trait DedupCoreOps extends Serializable { this: Dedup.type =>
     (0 until words).map(i => bit_count(element_at(a, i + 1)
       .bitwiseXOR(element_at(b, i + 1)))).reduce(_ + _)
 
-  private def requireWide(words: Int, blocks: Int, probeBits: Int): Int = {
+  /** The band check of every fingerprint width: `blocks` bands of
+    * `64 * words / blocks` bits that never straddle a word, and 0/1
+    * probe bits. Returns the band width in bits.
+    */
+  private[pipeline] def requireWide(words: Int, blocks: Int,
+      probeBits: Int): Int = {
     require(words >= 1, "words must be >= 1")
     val totalBits = 64 * words
     require(blocks >= 2 && totalBits % blocks == 0,
@@ -374,9 +379,7 @@ private[pipeline] trait DedupCoreOps extends Serializable { this: Dedup.type =>
       blocks: Int = 4, maxHamming: Int = 64,
       maxBucketSize: Int = 1000, probeBits: Int = 0,
       scope: CacheScope = CacheScope.session): DataFrame = {
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    val bits = 64 / blocks
+    val bits = requireWide(1, blocks, probeBits)
     val mask = (1L << bits) - 1
     fpCandidateCore(fpDf, blocks, bits, maxHamming, maxBucketSize,
       probeBits, scope,
@@ -448,9 +451,7 @@ private[pipeline] trait DedupCoreOps extends Serializable { this: Dedup.type =>
   def fingerprintIncrementalCandidates(sh0: DataFrame, blocks: Int,
       maxHamming: Int, maxBucketSize: Int, probeBits: Int,
       sc: CacheScope): DataFrame = {
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    val bits = 64 / blocks
+    val bits = requireWide(1, blocks, probeBits)
     val mask = (1L << bits) - 1
     fpIncrementalCore(sh0, blocks, bits, maxHamming, maxBucketSize,
       probeBits, sc,

@@ -256,45 +256,61 @@ object Multimodal {
     * the batch.
     */
   def decodeAudioMeta(bytes: Array[Byte])
-      : Option[(String, Int, Int, Int, Long, Long)] = {
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long = (u16(o).toLong) | (u16(o + 2).toLong << 16)
-    def tag(o: Int): String = new String(bytes, o, 4, "US-ASCII")
+      : Option[(String, Int, Int, Int, Long, Long)] =
     try {
-      if (bytes == null || bytes.length < 44) return None
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-      var off = 12
       var rate = 0; var channels = 0; var bits = 0; var blockAlign = 0
       var dataSize = -1L
-      var walking = true
-      while (walking && off + 8 <= bytes.length &&
-          (rate == 0 || dataSize < 0)) {
-        val id = tag(off)
-        val size = u32(off + 4)
+      val wav = walkRiff(bytes) { (id, off, size) =>
         if (id == "fmt " && size >= 16) {
-          channels = u16(off + 10)
-          rate = u32(off + 12).toInt
-          blockAlign = u16(off + 20)
-          bits = u16(off + 22)
+          channels = le16(bytes, off + 10)
+          rate = le32(bytes, off + 12).toInt
+          blockAlign = le16(bytes, off + 20)
+          bits = le16(bytes, off + 22)
         } else if (id == "data") dataSize = size
-        // advance in LONG space: `size` is u32, so an Int advance can be
-        // zero or negative (size 0xFFFFFFF8 → `8 + size.toInt` = 0 = no
-        // progress) and the walk would spin forever on crafted bytes —
-        // the contract is "quarantine, never fail (or hang) the batch".
-        // A chunk whose body runs past the buffer is the last chunk by
-        // construction (truncated or lying header): stop walking; the
-        // fields parsed so far still decide Some/None below.
-        val adv = 8L + size + (size & 1L) // chunks are 2-aligned
-        if (off + adv > bytes.length) walking = false
-        else off += adv.toInt
+        rate == 0 || dataSize < 0
       }
-      if (rate <= 0 || blockAlign <= 0 || dataSize < 0) None
+      if (!wav || rate <= 0 || blockAlign <= 0 || dataSize < 0) None
       else {
         val frames = dataSize / blockAlign
         Some(("wav", rate, channels, bits, frames,
           frames * 1000L / rate))
       }
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def le16(b: Array[Byte], o: Int): Int =
+    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+  private def le32(b: Array[Byte], o: Int): Long =
+    le16(b, o).toLong | (le16(b, o + 2).toLong << 16)
+  private def tag4(b: Array[Byte], o: Int): String =
+    new String(b, o, 4, "US-ASCII")
+
+  /** The RIFF/WAVE chunk walk shared by [[decodeAudioMeta]] and
+    * [[audioFingerprint64]]: false unless `bytes` is a RIFF/WAVE of at
+    * least a canonical header's 44 bytes; otherwise calls
+    * `visit(id, off, size)` per chunk (`off` = the chunk header) while
+    * `visit` returns true.
+    */
+  private def walkRiff(bytes: Array[Byte])(
+      visit: (String, Int, Long) => Boolean): Boolean = {
+    if (bytes == null || bytes.length < 44 || tag4(bytes, 0) != "RIFF" ||
+        tag4(bytes, 8) != "WAVE") return false
+    var off = 12
+    var walking = true
+    while (walking && off + 8 <= bytes.length) {
+      val size = le32(bytes, off + 4)
+      walking = visit(tag4(bytes, off), off, size)
+      // advance in LONG space: `size` is u32, so an Int advance can be
+      // zero or negative (size 0xFFFFFFF8 → `8 + size.toInt` = 0 = no
+      // progress) and the walk would spin forever on crafted bytes —
+      // the contract is "quarantine, never fail (or hang) the batch".
+      // A chunk whose body runs past the buffer is the last chunk by
+      // construction (truncated or lying header): stop walking; the
+      // fields parsed so far still decide Some/None.
+      val adv = 8L + size + (size & 1L) // chunks are 2-aligned
+      if (off + adv > bytes.length) walking = false
+      else off += adv.toInt
+    }
+    true
   }
 
   /** Decode stage for audio blobs: fills meta from the REAL bytes via
@@ -531,166 +547,6 @@ object Multimodal {
       fp
     }
 
-  /** `(id, sh)` fingerprint frame over blob rows — the
-    * [[graft.pipeline.Dedup.fingerprintCandidatePairs]] input shape.
-    * Rows whose bytes don't decode are DROPPED here (an undecodable
-    * image can match nothing; quarantine is the ingest stage's job).
-    */
-  def imageFingerprintDf(df: DataFrame, idCol: String,
-      blobCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = r.getStruct(blobIdx)
-        val content = if (blob == null || blob.isNullAt(0)) null
-          else blob.getAs[Array[Byte]](0)
-        imageFingerprint64(content).map(fp => (r.getLong(idIdx), fp))
-      }
-    }.toDF("id", "sh")
-  }
-
-  /** Re-encode / resize-robust image near-duplicate pairs: perceptual
-    * fingerprints ([[imageFingerprint64]]) banded through the SimHash
-    * block join — `(id_a, id_b, hamming)` for every pair within
-    * `maxHamming`. The default point (blocks=8, probeBits=1) carries
-    * the pigeonhole guarantee for every pair within Hamming 15, so
-    * `maxHamming` ≤ 15 keeps the candidate bound derivation exact; the
-    * bucket cap defaults OFF (unconditional recall — image corpora
-    * concentrate on flat-image fingerprints like all-zero bits, pass a
-    * cap explicitly when that skew dominates a corpus).
-    */
-  def imageDedupPairs(blobs: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, blocks: Int = 8, probeBits: Int = 1,
-      maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame = {
-    require(maxHamming <=
-      graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits),
-      s"maxHamming $maxHamming exceeds the guaranteed radius " +
-        s"${graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits)} " +
-        s"of blocks=$blocks/probeBits=$probeBits — pairs past it would " +
-        "be silently incomplete; raise blocks/probeBits or lower the " +
-        "threshold")
-    graft.pipeline.Dedup.fingerprintCandidatePairs(
-      imageFingerprintDf(blobs, idCol, blobCol), blocks, maxHamming,
-      maxBucketSize, probeBits, scope)
-  }
-
-  /** Persist an image-fingerprint index: the corpus's 64-bit perceptual
-    * fingerprints ([[imageFingerprint64]] — 8 bytes/image) as parquet
-    * plus a params sidecar storing the banding operating point
-    * (blocks/probeBits) and corpus size — the other dedup families'
-    * index discipline. The DECODE runs once at build; every later
-    * batch probe scans fingerprints only.
-    */
-  def writeImageIndex(blobs: DataFrame, idCol: String, blobCol: String,
-      path: String, blocks: Int = 8, probeBits: Int = 1): Unit = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    val fp = imageFingerprintDf(blobs, idCol, blobCol)
-    fp.write.mode("overwrite").parquet(s"$path/fingerprints")
-    val n = spark.read.parquet(s"$path/fingerprints").count()
-    Seq((blocks, probeBits, n))
-      .toDF("blocks", "probeBits", "nImages")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
-  }
-
-  /** Incremental image near-dup pairs of a NEW batch of blobs against a
-    * [[writeImageIndex]] corpus — the `*PairsFromIndex` shape for the
-    * image family: batch decodes + fingerprints, corpus side is the
-    * 8-byte-per-image fingerprint scan, multi-probe expansion on the
-    * BATCH side only (cost scales with |batch|). Emits
-    * `(id_a, id_b, hamming <= maxHamming)`, batch id first for
-    * batch-vs-corpus, `a < b` batch-internal; `maxHamming` past the
-    * stored point's guaranteed radius is refused (silently incomplete
-    * pairs otherwise).
-    */
-  def imageDedupPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    imageDedupPairsFromLoaded(loadFingerprintIndex(spark, path), batch,
-      idCol, blobCol, maxHamming, maxBucketSize, scope)
-
-  /** Fixed per-index state of a 64-bit fingerprint probe: the stored
-    * banding point plus the tombstone-reduced corpus fingerprint frame.
-    * A serving stream loads this ONCE at stream construction instead of
-    * paying the params read + index frame setup per micro-batch
-    * (the kmeans-model discipline); fold/rebuild the index → reload.
-    * Shared by the image/audio/video families ([[LoadedFpIndexWide]]
-    * is the 256-bit analog).
-    */
-  final case class LoadedFpIndex(blocks: Int, probeBits: Int,
-    corpus: DataFrame)
-
-  /** 256-bit analog of [[LoadedFpIndex]]. */
-  final case class LoadedFpIndexWide(words: Int, blocks: Int,
-    probeBits: Int, corpus: DataFrame)
-
-  def loadFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): LoadedFpIndex = {
-    val params = spark.read.json(s"$path/params").head()
-    LoadedFpIndex(params.getAs[Long]("blocks").toInt,
-      params.getAs[Long]("probeBits").toInt,
-      graft.pipeline.Dedup.dropTombstoned(spark, path,
-        spark.read.parquet(s"$path/fingerprints"), "id"))
-  }
-
-  def loadFingerprintIndexWide(spark: org.apache.spark.sql.SparkSession,
-      path: String): LoadedFpIndexWide = {
-    val params = spark.read.json(s"$path/params").head()
-    LoadedFpIndexWide(params.getAs[Long]("words").toInt,
-      params.getAs[Long]("blocks").toInt,
-      params.getAs[Long]("probeBits").toInt,
-      graft.pipeline.Dedup.dropTombstoned(spark, path,
-        spark.read.parquet(s"$path/fingerprints"), "id"))
-  }
-
-  /** The incremental probe shared by every loaded-handle member: batch
-    * fingerprints vs the handle's corpus frame at the stored banding
-    * point — identical output to the path-taking `*FromIndex` variants.
-    */
-  private def pairsFromLoadedCore(ix: LoadedFpIndex, batchFp: DataFrame,
-      maxHamming: Int, maxBucketSize: Int,
-      scope: graft.pipeline.CacheScope): DataFrame = {
-    val sc = graft.pipeline.CacheScope.resolve(scope,
-      batchFp.sparkSession)
-    requireRadius(maxHamming, ix.blocks, ix.probeBits, stored = true)
-    val sh = graft.pipeline.Dedup.spread(batchFp)
-      .withColumn("new", lit(true))
-      .union(ix.corpus.withColumn("new", lit(false)))
-    graft.pipeline.Dedup.fingerprintIncrementalCandidates(sh, ix.blocks,
-      maxHamming, maxBucketSize, ix.probeBits, sc)
-  }
-
-  private def pairsFromLoadedCoreWide(ix: LoadedFpIndexWide,
-      batchFp: DataFrame, maxHamming: Int, maxBucketSize: Int,
-      scope: graft.pipeline.CacheScope): DataFrame = {
-    val sc = graft.pipeline.CacheScope.resolve(scope,
-      batchFp.sparkSession)
-    requireRadius(maxHamming, ix.blocks, ix.probeBits, stored = true)
-    val sh = graft.pipeline.Dedup.spread(batchFp)
-      .withColumn("new", lit(true))
-      .union(ix.corpus.withColumn("new", lit(false)))
-    graft.pipeline.Dedup.fingerprintIncrementalCandidatesWide(sh,
-      ix.words, ix.blocks, maxHamming, maxBucketSize, ix.probeBits, sc)
-  }
-
-  /** [[imageDedupPairsFromIndex]] against a pre-loaded handle. */
-  def imageDedupPairsFromLoaded(ix: LoadedFpIndex, batch: DataFrame,
-      idCol: String, blobCol: String, maxHamming: Int = 8,
-      maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    pairsFromLoadedCore(ix, imageFingerprintDf(batch, idCol, blobCol),
-      maxHamming, maxBucketSize, scope)
-
   // --------------------------------------------- wide (256-bit) images
 
   /** 256-bit WIDE perceptual IMAGE fingerprint: the 16×16 luminance
@@ -720,105 +576,6 @@ object Multimodal {
       fp
     }
 
-  /** `(id, sh array<long>)` wide-fingerprint frame over blob rows —
-    * the [[graft.pipeline.Dedup.fingerprintCandidatePairsWide]] input
-    * shape; undecodable blobs drop (quarantine is ingest's job).
-    */
-  def imageFingerprintWideDf(df: DataFrame, idCol: String,
-      blobCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = r.getStruct(blobIdx)
-        val content = if (blob == null || blob.isNullAt(0)) null
-          else blob.getAs[Array[Byte]](0)
-        imageFingerprintWide(content)
-          .map(fp => (r.getLong(idIdx), fp.toSeq))
-      }
-    }.toDF("id", "sh")
-  }
-
-  /** [[imageDedupPairsWide]]'s radius guard, shared with the index and
-    * stream variants.
-    */
-  private def requireRadius(maxHamming: Int, blocks: Int,
-      probeBits: Int, stored: Boolean): Unit =
-    require(maxHamming <=
-      graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits),
-      s"maxHamming $maxHamming exceeds the guaranteed radius " +
-        s"${graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits)} " +
-        s"of blocks=$blocks/probeBits=$probeBits" +
-        (if (stored) " (the index's stored point) — rebuild with more " +
-          "probing or lower the threshold"
-         else " — pairs past it would be silently incomplete; raise " +
-          "blocks/probeBits or lower the threshold"))
-
-  /** Re-encode / resize-robust image near-duplicate pairs on the WIDE
-    * (256-bit) fingerprint — [[imageDedupPairs]]'s contract at the
-    * scale operating point: 16 bands of 16 bits carry the pigeonhole
-    * guarantee to Hamming 15 with NO multi-probe (half the probe rows
-    * of the 64-bit default), and the 2^16 bucket space keeps the
-    * candidate join ~linear where the 64-bit family went quadratic.
-    */
-  def imageDedupPairsWide(blobs: DataFrame, idCol: String,
-      blobCol: String, maxHamming: Int = 8, blocks: Int = 16,
-      probeBits: Int = 0, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame = {
-    requireRadius(maxHamming, blocks, probeBits, stored = false)
-    graft.pipeline.Dedup.fingerprintCandidatePairsWide(
-      imageFingerprintWideDf(blobs, idCol, blobCol), 4, blocks,
-      maxHamming, maxBucketSize, probeBits, scope)
-  }
-
-  /** Persist a WIDE image-fingerprint index (32 bytes/image) — the
-    * [[writeImageIndex]] discipline at the 256-bit operating point.
-    */
-  def writeImageIndexWide(blobs: DataFrame, idCol: String,
-      blobCol: String, path: String, blocks: Int = 16,
-      probeBits: Int = 0): Unit = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    require(blocks >= 2 && 256 % blocks == 0 && 256 / blocks <= 64 &&
-      64 % (256 / blocks) == 0,
-      "blocks must divide 256 with bands of at most 64 bits that do " +
-        "not straddle words (blocks >= 4, power-of-two band widths)")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    imageFingerprintWideDf(blobs, idCol, blobCol)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    val n = spark.read.parquet(s"$path/fingerprints").count()
-    Seq((4, blocks, probeBits, n))
-      .toDF("words", "blocks", "probeBits", "nImages")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
-  }
-
-  /** Incremental WIDE image near-dup against a [[writeImageIndexWide]]
-    * corpus — batch decodes + fingerprints, corpus side is the
-    * 32-byte-per-image scan (tombstone-aware), probing on the batch
-    * side only.
-    */
-  def imageDedupPairsWideFromIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    imageDedupPairsWideFromLoaded(loadFingerprintIndexWide(spark, path),
-      batch, idCol, blobCol, maxHamming, maxBucketSize, scope)
-
-  /** [[imageDedupPairsWideFromIndex]] against a pre-loaded handle. */
-  def imageDedupPairsWideFromLoaded(ix: LoadedFpIndexWide,
-      batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    pairsFromLoadedCoreWide(ix,
-      imageFingerprintWideDf(batch, idCol, blobCol), maxHamming,
-      maxBucketSize, scope)
-
   /** 64-bit perceptual AUDIO fingerprint: the time-domain analog of
     * [[imageFingerprint64]] — 64 equal time windows over the decoded
     * 16-bit PCM stream, bit `w` set iff window `w`'s mean absolute
@@ -834,149 +591,36 @@ object Multimodal {
     * Returns None for non-PCM/non-16-bit/shorter-than-64-frame clips
     * (too short to carry an envelope).
     */
-  def audioFingerprint64(bytes: Array[Byte]): Option[Long] = {
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def i16(o: Int): Int = u16(o).toShort.toInt
-    def u32(o: Int): Long = u16(o).toLong | (u16(o + 2).toLong << 16)
-    def tag(o: Int): String = new String(bytes, o, 4, "US-ASCII")
+  def audioFingerprint64(bytes: Array[Byte]): Option[Long] =
     try {
-      if (bytes == null || bytes.length < 44) return None
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return None
-      var off = 12
       var fmt = 0; var channels = 0; var bits = 0; var blockAlign = 0
       var dataOff = -1; var dataSize = -1L
-      var walking = true
-      while (walking && off + 8 <= bytes.length &&
-          (fmt == 0 || dataOff < 0)) {
-        val id = tag(off)
-        val size = u32(off + 4)
+      val wav = walkRiff(bytes) { (id, off, size) =>
         if (id == "fmt " && size >= 16) {
-          fmt = u16(off + 8)
-          channels = u16(off + 10)
-          blockAlign = u16(off + 20)
-          bits = u16(off + 22)
+          fmt = le16(bytes, off + 8)
+          channels = le16(bytes, off + 10)
+          blockAlign = le16(bytes, off + 20)
+          bits = le16(bytes, off + 22)
         } else if (id == "data") { dataOff = off + 8; dataSize = size }
-        val adv = 8L + size + (size & 1L) // strict progress, Long space
-        if (off + adv > bytes.length) walking = false
-        else off += adv.toInt
+        fmt == 0 || dataOff < 0
       }
-      if (fmt != 1 || bits != 16 || channels <= 0 || blockAlign <= 0 ||
-        dataOff < 0) return None
+      if (!wav || fmt != 1 || bits != 16 || channels <= 0 ||
+        blockAlign <= 0 || dataOff < 0) return None
       val usable = math.min(dataSize, (bytes.length - dataOff).toLong)
       val n = (usable / blockAlign).toInt
       if (n < 64) return None
-      val energy = new Array[Long](64)
-      var w = 0
-      while (w < 64) {
-        val start = (w.toLong * n / 64).toInt
-        val end = ((w + 1).toLong * n / 64).toInt
-        var i = start
+      // a frame's energy is its summed absolute 16-bit samples
+      Some(envelopeBitsPacked(n, 64) { i =>
+        val base = dataOff + i * blockAlign
         var e = 0L
-        while (i < end) {
-          var c = 0
-          val base = dataOff + i * blockAlign
-          while (c < channels) {
-            e += math.abs(i16(base + 2 * c))
-            c += 1
-          }
-          i += 1
+        var c = 0
+        while (c < channels) {
+          e += math.abs(le16(bytes, base + 2 * c).toShort.toInt)
+          c += 1
         }
-        energy(w) = e
-        w += 1
-      }
-      var total = 0L
-      w = 0
-      while (w < 64) { total += energy(w); w += 1 }
-      var fp = 0L
-      w = 0
-      while (w < 64) {
-        val fw = ((w + 1).toLong * n / 64) - (w.toLong * n / 64)
-        if (BigInt(energy(w)) * n > BigInt(total) * fw) fp |= (1L << w)
-        w += 1
-      }
-      Some(fp)
+        e
+      }(0))
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** `(id, sh)` audio-fingerprint frame over blob rows — the banding
-    * input shape; undecodable blobs drop (quarantine is ingest's job).
-    */
-  def audioFingerprintDf(df: DataFrame, idCol: String,
-      blobCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = r.getStruct(blobIdx)
-        val content = if (blob == null || blob.isNullAt(0)) null
-          else blob.getAs[Array[Byte]](0)
-        audioFingerprint64(content).map(fp => (r.getLong(idIdx), fp))
-      }
-    }.toDF("id", "sh")
-  }
-
-  /** Volume-/container-robust audio near-duplicate pairs — the
-    * [[imageDedupPairs]] contract over [[audioFingerprint64]]:
-    * `(id_a, id_b, hamming)` within `maxHamming`, complete by the same
-    * blocks/probeBits pigeonhole derivation.
-    */
-  def audioDedupPairs(blobs: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, blocks: Int = 8, probeBits: Int = 1,
-      maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame = {
-    require(maxHamming <=
-      graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits),
-      s"maxHamming $maxHamming exceeds the guaranteed radius " +
-        s"${graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits)} " +
-        s"of blocks=$blocks/probeBits=$probeBits — pairs past it would " +
-        "be silently incomplete; raise blocks/probeBits or lower the " +
-        "threshold")
-    graft.pipeline.Dedup.fingerprintCandidatePairs(
-      audioFingerprintDf(blobs, idCol, blobCol), blocks, maxHamming,
-      maxBucketSize, probeBits, scope)
-  }
-
-  /** Persist an audio-fingerprint index — [[writeImageIndex]]'s
-    * discipline for the audio family: decode once at build, probe at
-    * 8 bytes/clip.
-    */
-  def writeAudioIndex(blobs: DataFrame, idCol: String, blobCol: String,
-      path: String, blocks: Int = 8, probeBits: Int = 1): Unit = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    audioFingerprintDf(blobs, idCol, blobCol)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    val n = spark.read.parquet(s"$path/fingerprints").count()
-    Seq((blocks, probeBits, n))
-      .toDF("blocks", "probeBits", "nClips")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
-  }
-
-  /** Incremental audio near-dup against a persisted [[writeAudioIndex]]
-    * — batch decodes + fingerprints, corpus side is the 8-byte scan
-    * (tombstone-aware), multi-probe on the batch side only.
-    */
-  def audioDedupPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    audioDedupPairsFromLoaded(loadFingerprintIndex(spark, path), batch,
-      idCol, blobCol, maxHamming, maxBucketSize, scope)
-
-  /** [[audioDedupPairsFromIndex]] against a pre-loaded handle. */
-  def audioDedupPairsFromLoaded(ix: LoadedFpIndex, batch: DataFrame,
-      idCol: String, blobCol: String, maxHamming: Int = 8,
-      maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    pairsFromLoadedCore(ix, audioFingerprintDf(batch, idCol, blobCol),
-      maxHamming, maxBucketSize, scope)
 
   /** Deterministic constant-cell image fixture: a `gridW`×`gridH` grid
     * of `cellPx`×`cellPx` gray cells, cell `c` at luma `lumas(c)` —
@@ -1084,11 +728,6 @@ object Multimodal {
   def decodeVideoMeta(bytes: Array[Byte])
       : Option[(String, Int, Int, Int, Long, Long)] = {
     if (bytes == null || bytes.length < 16) return None
-    def u16(o: Long): Int =
-      ((bytes(o.toInt) & 0xff) << 8) | (bytes(o.toInt + 1) & 0xff)
-    def u32(o: Long): Long = (u16(o).toLong << 16) | u16(o + 2)
-    def u64(o: Long): Long = (u32(o) << 32) | u32(o + 4)
-    def tag(o: Long): String = new String(bytes, o.toInt, 4, "US-ASCII")
     var brand: String = null
     var timescale = 0L; var duration = -1L
     var w = 0; var h = 0; var frames = -1L
@@ -1096,55 +735,42 @@ object Multimodal {
     // supplied both (the first trak with nonzero pixel dims wins)
     var trakW = 0; var trakH = 0; var trakFrames = -1L
     try {
-      def walk(start: Long, limit: Long, depth: Int): Unit = {
-        if (depth > 6) return
-        var off = start
-        while (off + 8 <= limit) {
-          var size = u32(off)
-          var hdr = 8L
-          if (size == 1L) { // 64-bit largesize
-            if (off + 16 > limit) return
-            size = u64(off + 8); hdr = 16L
-          } else if (size == 0L) size = limit - off // box runs to limit
-          // malformed (header doesn't fit its own size) or lying
-          // (runs past the buffer): stop this level — strict progress
-          if (size < hdr || size > limit - off) return
-          val id = tag(off + 4)
-          val body = off + hdr
-          id match {
-            case "ftyp" if size >= hdr + 4 => brand = tag(body)
-            case "mvhd" if size >= hdr + 4 =>
-              val v = bytes(body.toInt) & 0xff
-              if (v == 1 && size >= hdr + 32) {
-                timescale = u32(body + 20); duration = u64(body + 24)
-              } else if (v == 0 && size >= hdr + 20) {
-                timescale = u32(body + 12); duration = u32(body + 16)
-              }
-            case "tkhd" if size >= hdr + 4 =>
-              val v = bytes(body.toInt) & 0xff
-              // width/height: 16.16 fixed point at the end of the box
-              // (after fullbox + times/ids + layer block + matrix)
-              val wOff = if (v == 1) body + 88 else body + 76
-              if (size >= (wOff - off) + 8) {
-                trakW = (u32(wOff) >> 16).toInt
-                trakH = (u32(wOff + 4) >> 16).toInt
-              }
-            case "stsz" if size >= hdr + 12 =>
-              trakFrames = u32(body + 8)
-            case "trak" =>
-              trakW = 0; trakH = 0; trakFrames = -1L
-              walk(body, off + size, depth + 1)
-              if (w == 0 && trakW > 0 && trakH > 0) {
-                w = trakW; h = trakH; frames = trakFrames
-              }
-            case "moov" | "mdia" | "minf" | "stbl" =>
-              walk(body, off + size, depth + 1)
-            case _ => () // skip unknown/leaf boxes (mdat, free, hdlr, …)
-          }
-          off += size
+      def visit(depth: Int)(id: String, body: Long, end: Long): Boolean = {
+        id match {
+          case "ftyp" if end - body >= 4 => brand = tag4(bytes, body.toInt)
+          case "mvhd" if end - body >= 4 =>
+            val v = bytes(body.toInt) & 0xff
+            if (v == 1 && end - body >= 32) {
+              timescale = be32(bytes, body + 20)
+              duration = be64(bytes, body + 24)
+            } else if (v == 0 && end - body >= 20) {
+              timescale = be32(bytes, body + 12)
+              duration = be32(bytes, body + 16)
+            }
+          case "tkhd" if end - body >= 4 =>
+            val v = bytes(body.toInt) & 0xff
+            // width/height: 16.16 fixed point at the end of the box
+            // (after fullbox + times/ids + layer block + matrix)
+            val wOff = if (v == 1) body + 88 else body + 76
+            if (wOff + 8 <= end) {
+              trakW = (be32(bytes, wOff) >> 16).toInt
+              trakH = (be32(bytes, wOff + 4) >> 16).toInt
+            }
+          case "stsz" if end - body >= 12 =>
+            trakFrames = be32(bytes, body + 8)
+          case "trak" =>
+            trakW = 0; trakH = 0; trakFrames = -1L
+            walkBoxes(bytes, body, end, depth + 1)(visit(depth + 1))
+            if (w == 0 && trakW > 0 && trakH > 0) {
+              w = trakW; h = trakH; frames = trakFrames
+            }
+          case "moov" | "mdia" | "minf" | "stbl" =>
+            walkBoxes(bytes, body, end, depth + 1)(visit(depth + 1))
+          case _ => () // skip unknown/leaf boxes (mdat, free, hdlr, …)
         }
+        true
       }
-      walk(0L, bytes.length.toLong, 0)
+      walkBoxes(bytes, 0L, bytes.length.toLong, 0)(visit(0))
       // numeric sanity is part of the quarantine contract: a u32
       // timescale above Int.MaxValue would wrap negative on the .toInt,
       // and a near-2^64 duration would overflow the *1000 — both are
@@ -1155,6 +781,42 @@ object Multimodal {
       else Some((brand.trim, w, h, timescale.toInt,
         duration * 1000L / timescale, frames))
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  private def be16(b: Array[Byte], o: Long): Int =
+    ((b(o.toInt) & 0xff) << 8) | (b(o.toInt + 1) & 0xff)
+  private def be32(b: Array[Byte], o: Long): Long =
+    (be16(b, o).toLong << 16) | be16(b, o + 2)
+  private def be64(b: Array[Byte], o: Long): Long =
+    (be32(b, o) << 32) | be32(b, o + 4)
+
+  /** The strict-progress ISO-BMFF box walk shared by
+    * [[decodeVideoMeta]], [[findMdat]] and [[readStszSizes]]: calls
+    * `visit(id, body, end)` per box of `[start, limit)` (`body` = the
+    * payload offset, `end` = the box end) while `visit` returns true;
+    * `visit` recurses into a container by walking `[body, end)` at
+    * `depth + 1`, and levels past depth 6 are not walked. Box sizes
+    * are u32 (or u64 `largesize`) in Long space, size 0 runs to
+    * `limit`; a box whose header does not fit its own size, or that
+    * runs past `limit`, stops the level — crafted sizes stop the walk,
+    * they never spin it.
+    */
+  private def walkBoxes(bytes: Array[Byte], start: Long, limit: Long,
+      depth: Int)(visit: (String, Long, Long) => Boolean): Unit = {
+    if (depth > 6) return
+    var off = start
+    var walking = true
+    while (walking && off + 8 <= limit) {
+      var size = be32(bytes, off)
+      var hdr = 8L
+      if (size == 1L) { // 64-bit largesize
+        if (off + 16 > limit) return
+        size = be64(bytes, off + 8); hdr = 16L
+      } else if (size == 0L) size = limit - off // box runs to limit
+      if (size < hdr || size > limit - off) return
+      walking = visit(tag4(bytes, (off + 4).toInt), off + hdr, off + size)
+      off += size
+    }
   }
 
   /** Decode stage for video blobs: fills meta from the REAL bytes via
@@ -1259,31 +921,17 @@ object Multimodal {
 
   // ------------------------------------------- video near-duplicates
 
-  /** Top-level `mdat` payload location `(offset, length)` — the same
-    * strict-progress u32/u64 box walk as [[decodeVideoMeta]], top
-    * level only (sample data never nests).
+  /** Top-level `mdat` payload location `(offset, length)` — the
+    * [[walkBoxes]] box walk, top level only (sample data never nests).
     */
   private def findMdat(bytes: Array[Byte]): Option[(Int, Int)] = {
-    def u16(o: Int): Int =
-      ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    def u32(o: Int): Long = (u16(o).toLong << 16) | u16(o + 2)
-    def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    val limit = bytes.length.toLong
+    var found: Option[(Int, Int)] = None
     try {
-      var off = 0L
-      while (off + 8 <= limit) {
-        var size = u32(off.toInt)
-        var hdr = 8L
-        if (size == 1L) {
-          if (off + 16 > limit) return None
-          size = u64(off.toInt + 8); hdr = 16L
-        } else if (size == 0L) size = limit - off
-        if (size < hdr || size > limit - off) return None
-        if (new String(bytes, off.toInt + 4, 4, "US-ASCII") == "mdat")
-          return Some(((off + hdr).toInt, (size - hdr).toInt))
-        off += size
+      walkBoxes(bytes, 0L, bytes.length.toLong, 0) { (id, body, end) =>
+        if (id == "mdat") found = Some((body.toInt, (end - body).toInt))
+        found.isEmpty
       }
-      None
+      found
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -1292,50 +940,32 @@ object Multimodal {
     * `sample_size != 0` expands to a constant table; a header-only
     * `stsz` (count but no table, `sample_size == 0`) yields None — the
     * mdat is then NOT sliceable and the fingerprint falls back to
-    * segment byte-sums. Same strict-progress walk as
-    * [[decodeVideoMeta]].
+    * segment byte-sums. The [[walkBoxes]] box walk.
     */
   def readStszSizes(bytes: Array[Byte]): Option[Array[Int]] = {
     if (bytes == null || bytes.length < 16) return None
-    def u16(o: Long): Int =
-      ((bytes(o.toInt) & 0xff) << 8) | (bytes(o.toInt + 1) & 0xff)
-    def u32(o: Long): Long = (u16(o).toLong << 16) | u16(o + 2)
-    def u64(o: Long): Long = (u32(o) << 32) | u32(o + 4)
-    def tag(o: Long): String = new String(bytes, o.toInt, 4, "US-ASCII")
     var found: Option[Array[Int]] = None
     try {
-      def walk(start: Long, limit: Long, depth: Int): Unit = {
-        if (depth > 6 || found.isDefined) return
-        var off = start
-        while (off + 8 <= limit && found.isEmpty) {
-          var size = u32(off)
-          var hdr = 8L
-          if (size == 1L) {
-            if (off + 16 > limit) return
-            size = u64(off + 8); hdr = 16L
-          } else if (size == 0L) size = limit - off
-          if (size < hdr || size > limit - off) return
-          val body = off + hdr
-          tag(off + 4) match {
-            case "stsz" if size >= hdr + 12 =>
-              val sampleSize = u32(body + 4)
-              val count = u32(body + 8)
-              if (count > 0 && count <= Int.MaxValue) {
-                if (sampleSize > 0 && sampleSize <= Int.MaxValue &&
-                    count <= (1L << 24))
-                  found = Some(Array.fill(count.toInt)(sampleSize.toInt))
-                else if (sampleSize == 0 && size >= hdr + 12 + 4 * count)
-                  found = Some(Array.tabulate(count.toInt)(i =>
-                    u32(body + 12 + 4L * i).toInt))
-              }
-            case "moov" | "trak" | "mdia" | "minf" | "stbl" =>
-              walk(body, off + size, depth + 1)
-            case _ => ()
-          }
-          off += size
+      def visit(depth: Int)(id: String, body: Long, end: Long): Boolean = {
+        id match {
+          case "stsz" if end - body >= 12 =>
+            val sampleSize = be32(bytes, body + 4)
+            val count = be32(bytes, body + 8)
+            if (count > 0 && count <= Int.MaxValue) {
+              if (sampleSize > 0 && sampleSize <= Int.MaxValue &&
+                  count <= (1L << 24))
+                found = Some(Array.fill(count.toInt)(sampleSize.toInt))
+              else if (sampleSize == 0 && end - body >= 12 + 4 * count)
+                found = Some(Array.tabulate(count.toInt)(i =>
+                  be32(bytes, body + 12 + 4L * i).toInt))
+            }
+          case "moov" | "trak" | "mdia" | "minf" | "stbl" =>
+            walkBoxes(bytes, body, end, depth + 1)(visit(depth + 1))
+          case _ => ()
         }
+        found.isEmpty
       }
-      walk(0L, bytes.length.toLong, 0)
+      walkBoxes(bytes, 0L, bytes.length.toLong, 0)(visit(0))
       found.filter(_.forall(_ >= 0))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -1477,7 +1107,7 @@ object Multimodal {
     */
   def videoFingerprint64(bytes: Array[Byte]): Option[Long] =
     videoFrameEnergies(bytes).filter(_.length >= 64)
-      .map(e => envelopeBitsPacked(e, 64)(0))
+      .map(e => envelopeBitsPacked(e.length, 64)(e(_))(0))
 
   /** Per-frame energies of a decodable clip (DECODED luma sums where
     * the container slices, segment byte-sums otherwise) — the shared
@@ -1511,26 +1141,31 @@ object Multimodal {
     }
   }
 
-  /** Fold `frameE` into `cells` relative-energy bits (bit `c` set where
-    * cell `c`'s energy exceeds its frame-count share of the total —
-    * exact BigInt cross-multiplication), packed little-endian into
-    * longs. The shared back half of both video fingerprint widths.
+  /** Fold the energies of `n` frames into `cells` relative-energy bits
+    * (cell `c` covers frames `[c·n/cells, (c+1)·n/cells)`; bit `c` is
+    * set where the cell's energy exceeds its frame-count share of the
+    * total — exact BigInt cross-multiplication), packed little-endian
+    * into longs. The shared back half of the audio and both video
+    * fingerprints. `frameEnergy` is read once per frame, so a caller
+    * can compute energies on the fly instead of allocating them.
     */
-  private def envelopeBitsPacked(frameE: Array[Long],
-      cells: Int): Array[Long] = {
-    val n = frameE.length
+  private def envelopeBitsPacked(n: Int, cells: Int)(
+      frameEnergy: Int => Long): Array[Long] = {
+    def start(c: Int): Int = (c.toLong * n / cells).toInt
+    val cellE = new Array[Long](cells)
     var total = 0L
-    var f = 0
-    while (f < n) { total += frameE(f); f += 1 }
-    val fp = new Array[Long]((cells + 63) / 64)
     var c = 0
     while (c < cells) {
-      val s = (c.toLong * n / cells).toInt
-      val e = ((c + 1).toLong * n / cells).toInt
-      var cellE = 0L
-      var i = s
-      while (i < e) { cellE += frameE(i); i += 1 }
-      if (BigInt(cellE) * n > BigInt(total) * (e - s))
+      var i = start(c)
+      val e = start(c + 1)
+      while (i < e) { cellE(c) += frameEnergy(i); i += 1 }
+      total += cellE(c)
+      c += 1
+    }
+    val fp = new Array[Long]((cells + 63) / 64)
+    c = 0
+    while (c < cells) {
+      if (BigInt(cellE(c)) * n > BigInt(total) * (start(c + 1) - start(c)))
         fp(c / 64) |= (1L << (c % 64))
       c += 1
     }
@@ -1548,167 +1183,195 @@ object Multimodal {
     */
   def videoFingerprintWide(bytes: Array[Byte]): Option[Array[Long]] =
     videoFrameEnergies(bytes).filter(_.length >= 256)
-      .map(e => envelopeBitsPacked(e, 256))
+      .map(e => envelopeBitsPacked(e.length, 256)(e(_)))
 
-  /** `(id, sh)` video-fingerprint frame over blob rows — the banding
-    * input shape; undecodable blobs drop (quarantine is ingest's job).
+  // ------------------------------------------ fingerprint near-duplicates
+
+  /** A perceptual fingerprint the near-dup path bands: its `name`
+    * (recorded in a persisted index's params), its width in 64-bit
+    * `words` (1, stored as `sh bigint`, or 4, stored as
+    * `sh array<bigint>`) and its byte `kernel` (None = undecodable, the
+    * row drops — quarantine is ingest's job). The five kernels of this
+    * module are the values of the companion.
     */
-  def videoFingerprintDf(df: DataFrame, idCol: String,
-      blobCol: String): DataFrame = {
+  final case class Fingerprint(name: String, words: Int,
+      kernel: Array[Byte] => Option[Array[Long]]) {
+    require(words == 1 || words == 4, "words must be 1 or 4")
+    /** The default banding point of the width: 8 bands + 1-bit probing
+      * at 64 bits, 16 bands without probing at 256 — both guarantee
+      * every pair within Hamming 15.
+      */
+    private[Multimodal] def defaultBlocks: Int = if (words == 1) 8 else 16
+    private[Multimodal] def defaultProbeBits: Int = if (words == 1) 1 else 0
+  }
+
+  object Fingerprint {
+    val image64 = Fingerprint("image64", 1,
+      b => imageFingerprint64(b).map(Array(_)))
+    val imageWide = Fingerprint("imageWide", 4, imageFingerprintWide)
+    val audio64 = Fingerprint("audio64", 1,
+      b => audioFingerprint64(b).map(Array(_)))
+    val video64 = Fingerprint("video64", 1,
+      b => videoFingerprint64(b).map(Array(_)))
+    val videoWide = Fingerprint("videoWide", 4, videoFingerprintWide)
+  }
+
+  /** `(id, sh)` fingerprint frame over blob rows — the banding input
+    * shape (`sh bigint` at width 1, `array<bigint>` at width 4). Rows
+    * whose bytes don't decode are DROPPED here (an undecodable blob can
+    * match nothing; quarantine is the ingest stage's job).
+    */
+  def fingerprints(df: DataFrame, idCol: String, blobCol: String,
+      fp: Fingerprint): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val blobIdx = df.schema.fieldIndex(blobCol)
     val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = r.getStruct(blobIdx)
-        val content = if (blob == null || blob.isNullAt(0)) null
-          else blob.getAs[Array[Byte]](0)
-        videoFingerprint64(content).map(fp => (r.getLong(idIdx), fp))
-      }
-    }.toDF("id", "sh")
+    val kernel = fp.kernel
+    def fps(r: Row): Option[Array[Long]] = {
+      val blob = r.getStruct(blobIdx)
+      kernel(if (blob == null || blob.isNullAt(0)) null
+        else blob.getAs[Array[Byte]](0))
+    }
+    if (fp.words == 1)
+      df.mapPartitions(_.flatMap(r =>
+        fps(r).map(w => (r.getLong(idIdx), w(0))))).toDF("id", "sh")
+    else
+      df.mapPartitions(_.flatMap(r =>
+        fps(r).map(w => (r.getLong(idIdx), w.toSeq)))).toDF("id", "sh")
   }
 
-  /** Remux-robust video near-duplicate pairs — the [[audioDedupPairs]]
-    * contract over [[videoFingerprint64]]: `(id_a, id_b, hamming)`
-    * within `maxHamming`, complete by the same blocks/probeBits
-    * pigeonhole derivation.
+  /** The one place a width picks its DedupCore core: the all-pairs
+    * block join over `(id, sh)`, or (`incremental`) the batch-sized
+    * probe over `(id, sh, new)`.
     */
-  def videoDedupPairs(blobs: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, blocks: Int = 8, probeBits: Int = 1,
-      maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame = {
-    require(maxHamming <=
-      graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits),
+  private def bandedPairs(words: Int, incremental: Boolean,
+      sh: DataFrame, blocks: Int, maxHamming: Int, maxBucketSize: Int,
+      probeBits: Int, scope: CacheScope): DataFrame = {
+    val sc = CacheScope.resolve(scope, sh.sparkSession)
+    (words, incremental) match {
+      case (1, false) => Dedup.fingerprintCandidatePairs(sh, blocks,
+        maxHamming, maxBucketSize, probeBits, sc)
+      case (1, true) => Dedup.fingerprintIncrementalCandidates(sh,
+        blocks, maxHamming, maxBucketSize, probeBits, sc)
+      case (_, false) => Dedup.fingerprintCandidatePairsWide(sh, words,
+        blocks, maxHamming, maxBucketSize, probeBits, sc)
+      case (_, true) => Dedup.fingerprintIncrementalCandidatesWide(sh,
+        words, blocks, maxHamming, maxBucketSize, probeBits, sc)
+    }
+  }
+
+  /** The radius guard of every near-dup entry point: a `maxHamming`
+    * past the banding point's pigeonhole radius would return silently
+    * incomplete pairs.
+    */
+  private def requireRadius(maxHamming: Int, blocks: Int,
+      probeBits: Int, stored: Boolean): Unit =
+    require(maxHamming <= Dedup.guaranteedRadius(blocks, probeBits),
       s"maxHamming $maxHamming exceeds the guaranteed radius " +
-        s"${graft.pipeline.Dedup.guaranteedRadius(blocks, probeBits)} " +
-        s"of blocks=$blocks/probeBits=$probeBits — pairs past it would " +
-        "be silently incomplete; raise blocks/probeBits or lower the " +
-        "threshold")
-    graft.pipeline.Dedup.fingerprintCandidatePairs(
-      videoFingerprintDf(blobs, idCol, blobCol), blocks, maxHamming,
-      maxBucketSize, probeBits, scope)
+        s"${Dedup.guaranteedRadius(blocks, probeBits)} " +
+        s"of blocks=$blocks/probeBits=$probeBits" +
+        (if (stored) " (the index's stored point) — rebuild with more " +
+          "probing or lower the threshold"
+         else " — pairs past it would be silently incomplete; raise " +
+          "blocks/probeBits or lower the threshold"))
+
+  /** Re-encode / resize / remux-robust near-duplicate pairs:
+    * [[fingerprints]] banded through the SimHash block join —
+    * `(id_a, id_b, hamming)` for every pair within `maxHamming`. The
+    * banding point defaults to the width's (blocks=8/probeBits=1 at 64
+    * bits, 16/0 at 256 — both carry the pigeonhole guarantee to
+    * Hamming 15, so `maxHamming` ≤ 15 keeps the output complete by
+    * derivation); a `maxHamming` past the point's radius is refused.
+    * The bucket cap defaults OFF (unconditional recall — media corpora
+    * concentrate on flat fingerprints like all-zero bits; pass a cap
+    * explicitly when that skew dominates a corpus).
+    */
+  def dedupPairs(blobs: DataFrame, idCol: String, blobCol: String,
+      fp: Fingerprint, maxHamming: Int = 8, blocks: Option[Int] = None,
+      probeBits: Option[Int] = None, maxBucketSize: Int = Int.MaxValue,
+      scope: CacheScope = CacheScope.session): DataFrame = {
+    val b = blocks.getOrElse(fp.defaultBlocks)
+    val p = probeBits.getOrElse(fp.defaultProbeBits)
+    requireRadius(maxHamming, b, p, stored = false)
+    bandedPairs(fp.words, incremental = false,
+      fingerprints(blobs, idCol, blobCol, fp), b, maxHamming,
+      maxBucketSize, p, scope)
   }
 
-  /** Persist a video-fingerprint index — [[writeAudioIndex]]'s
-    * discipline for the video family: decode once at build, probe at
-    * 8 bytes/clip.
+  /** Persist a fingerprint index: the corpus's fingerprints (8 or 32
+    * bytes per blob) as parquet plus a params sidecar holding the
+    * banding point (blocks/probeBits), the width (`words`) and the
+    * fingerprint's `name` — the other dedup families' index discipline.
+    * The DECODE runs once at build; every later batch probe scans
+    * fingerprints only.
     */
-  def writeVideoIndex(blobs: DataFrame, idCol: String, blobCol: String,
-      path: String, blocks: Int = 8, probeBits: Int = 1): Unit = {
+  def writeIndex(blobs: DataFrame, idCol: String, blobCol: String,
+      fp: Fingerprint, path: String, blocks: Option[Int] = None,
+      probeBits: Option[Int] = None): Unit = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    videoFingerprintDf(blobs, idCol, blobCol)
+    val b = blocks.getOrElse(fp.defaultBlocks)
+    val p = probeBits.getOrElse(fp.defaultProbeBits)
+    Dedup.requireWide(fp.words, b, p)
+    fingerprints(blobs, idCol, blobCol, fp)
       .write.mode("overwrite").parquet(s"$path/fingerprints")
-    val n = spark.read.parquet(s"$path/fingerprints").count()
-    Seq((blocks, probeBits, n))
-      .toDF("blocks", "probeBits", "nClips")
+    Seq((fp.words, b, p, fp.name))
+      .toDF("words", "blocks", "probeBits", "fingerprint")
       .coalesce(1).write.mode("overwrite").json(s"$path/params")
   }
 
-  /** Incremental video near-dup against a persisted [[writeVideoIndex]]
-    * — batch decodes + fingerprints, corpus side is the 8-byte scan
-    * (tombstone-aware), multi-probe on the batch side only.
+  /** Fixed per-index state of a fingerprint probe: the fingerprint, the
+    * stored banding point and the tombstone-reduced corpus fingerprint
+    * frame. A serving stream loads this ONCE at stream construction
+    * instead of paying the params read + index frame setup per
+    * micro-batch (the kmeans-model discipline); fold/rebuild the index
+    * → reload.
     */
-  def videoDedupPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    videoDedupPairsFromLoaded(loadFingerprintIndex(spark, path), batch,
-      idCol, blobCol, maxHamming, maxBucketSize, scope)
+  final case class LoadedFpIndex(fp: Fingerprint, blocks: Int,
+    probeBits: Int, corpus: DataFrame)
 
-  /** [[videoDedupPairsFromIndex]] against a pre-loaded handle. */
-  def videoDedupPairsFromLoaded(ix: LoadedFpIndex, batch: DataFrame,
+  /** Load a [[writeIndex]] index for probing with `fp`, in one Spark job
+    * (the params row; the fingerprint schema comes from a parquet
+    * footer). An index of another width or of another fingerprint is
+    * refused: its pairs would be a late analysis error or meaningless.
+    * Params without `words` (older indexes) are width 1; the name is
+    * checked only where one was recorded.
+    */
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      fp: Fingerprint): LoadedFpIndex = {
+    val params = spark.read
+      .schema("words LONG, blocks LONG, probeBits LONG, fingerprint STRING")
+      .json(s"$path/params").head()
+    val words = if (params.isNullAt(0)) 1 else params.getLong(0).toInt
+    val stored = Option(params.getString(3))
+    require(words == fp.words && stored.forall(_ == fp.name),
+      s"index at $path holds $words-word${stored.fold("")(" " + _)} " +
+        s"fingerprints; the handle asks for ${fp.words}-word ${fp.name}")
+    LoadedFpIndex(fp, params.getLong(1).toInt, params.getLong(2).toInt,
+      Dedup.dropTombstoned(spark, path,
+        SidecarIO.readWithFallback(spark, s"$path/fingerprints"), "id"))
+  }
+
+  /** Incremental near-dup pairs of a NEW batch of blobs against a loaded
+    * index — batch decodes + fingerprints, the corpus side is the
+    * fingerprint scan, multi-probe expansion on the BATCH side only
+    * (cost scales with |batch|). Emits `(id_a, id_b, hamming <=
+    * maxHamming)`, batch id first for batch-vs-corpus, `a < b`
+    * batch-internal; `maxHamming` past the stored point's guaranteed
+    * radius is refused (silently incomplete pairs otherwise).
+    */
+  def dedupPairsFromLoaded(ix: LoadedFpIndex, batch: DataFrame,
       idCol: String, blobCol: String, maxHamming: Int = 8,
       maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    pairsFromLoadedCore(ix, videoFingerprintDf(batch, idCol, blobCol),
-      maxHamming, maxBucketSize, scope)
-
-  /** `(id, sh array<long>)` WIDE video-fingerprint frame over blob
-    * rows — the wide banding input shape; undecodable (or <256-frame)
-    * blobs drop.
-    */
-  def videoFingerprintWideDf(df: DataFrame, idCol: String,
-      blobCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = r.getStruct(blobIdx)
-        val content = if (blob == null || blob.isNullAt(0)) null
-          else blob.getAs[Array[Byte]](0)
-        videoFingerprintWide(content)
-          .map(fp => (r.getLong(idIdx), fp.toSeq))
-      }
-    }.toDF("id", "sh")
+      scope: CacheScope = CacheScope.session): DataFrame = {
+    val batchFp = fingerprints(batch, idCol, blobCol, ix.fp)
+    requireRadius(maxHamming, ix.blocks, ix.probeBits, stored = true)
+    val sh = Dedup.spread(batchFp).withColumn("new", lit(true))
+      .union(ix.corpus.withColumn("new", lit(false)))
+    bandedPairs(ix.fp.words, incremental = true, sh, ix.blocks,
+      maxHamming, maxBucketSize, ix.probeBits, scope)
   }
-
-  /** Remux-robust video near-duplicate pairs on the WIDE (256-bit)
-    * fingerprint — [[imageDedupPairsWide]]'s contract for the video
-    * family.
-    */
-  def videoDedupPairsWide(blobs: DataFrame, idCol: String,
-      blobCol: String, maxHamming: Int = 8, blocks: Int = 16,
-      probeBits: Int = 0, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame = {
-    requireRadius(maxHamming, blocks, probeBits, stored = false)
-    graft.pipeline.Dedup.fingerprintCandidatePairsWide(
-      videoFingerprintWideDf(blobs, idCol, blobCol), 4, blocks,
-      maxHamming, maxBucketSize, probeBits, scope)
-  }
-
-  /** Persist a WIDE video-fingerprint index (32 bytes/clip) — the
-    * [[writeImageIndexWide]] discipline for the video family.
-    */
-  def writeVideoIndexWide(blobs: DataFrame, idCol: String,
-      blobCol: String, path: String, blocks: Int = 16,
-      probeBits: Int = 0): Unit = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    require(blocks >= 2 && 256 % blocks == 0 && 256 / blocks <= 64 &&
-      64 % (256 / blocks) == 0,
-      "blocks must divide 256 with bands of at most 64 bits that do " +
-        "not straddle words (blocks >= 4, power-of-two band widths)")
-    require(probeBits == 0 || probeBits == 1, "probeBits must be 0 or 1")
-    videoFingerprintWideDf(blobs, idCol, blobCol)
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    val n = spark.read.parquet(s"$path/fingerprints").count()
-    Seq((4, blocks, probeBits, n))
-      .toDF("words", "blocks", "probeBits", "nClips")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
-  }
-
-  /** Incremental WIDE video near-dup against a [[writeVideoIndexWide]]
-    * corpus — the [[imageDedupPairsWideFromIndex]] contract for the
-    * video family.
-    */
-  def videoDedupPairsWideFromIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    videoDedupPairsWideFromLoaded(loadFingerprintIndexWide(spark, path),
-      batch, idCol, blobCol, maxHamming, maxBucketSize, scope)
-
-  /** [[videoDedupPairsWideFromIndex]] against a pre-loaded handle. */
-  def videoDedupPairsWideFromLoaded(ix: LoadedFpIndexWide,
-      batch: DataFrame, idCol: String, blobCol: String,
-      maxHamming: Int = 8, maxBucketSize: Int = Int.MaxValue,
-      scope: graft.pipeline.CacheScope =
-        graft.pipeline.CacheScope.session): DataFrame =
-    pairsFromLoadedCoreWide(ix,
-      videoFingerprintWideDf(batch, idCol, blobCol), maxHamming,
-      maxBucketSize, scope)
 
   /** Fixture mdat payload whose per-frame byte-sums are EXACTLY
     * `amps` — `amps(f)` written as ⌊amp/255⌋ 0xFF bytes plus the

@@ -250,80 +250,25 @@ object StreamOps {
     }
     }
 
-  /** [[probeIndexPerBatch]] against a persisted IMAGE-fingerprint index
-    * ([[graft.pipeline.Multimodal.writeImageIndex]]): each micro-batch
-    * of image blobs decodes, fingerprints, and probes the 8-byte-per-
-    * image corpus scan at the index's stored banding point; `sink`
-    * receives that batch's `(id_a, id_b, hamming)` near-dup pairs.
+  /** [[probeIndexPerBatch]] against a persisted fingerprint index
+    * ([[graft.pipeline.Multimodal.writeIndex]]): each micro-batch of
+    * blobs decodes, fingerprints with `fp`, and probes the corpus
+    * fingerprint scan at the index's stored banding point; `sink`
+    * receives that batch's `(id_a, id_b, hamming)` near-dup pairs. The
+    * handle loads once per stream, at the first batch; an index of
+    * another width or fingerprint fails that batch.
     */
-  def imageDedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
+  def fingerprintDedupStreamAgainstIndex(stream: DataFrame,
+      indexPath: String, fp: graft.pipeline.Multimodal.Fingerprint,
       idCol: String, blobCol: String, maxHamming: Int = 8)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
     {
-    lazy val ix = graft.pipeline.Multimodal.loadFingerprintIndex(
-      stream.sparkSession, indexPath)
+    lazy val ix = graft.pipeline.Multimodal.loadIndex(
+      stream.sparkSession, indexPath, fp)
     probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Multimodal.imageDedupPairsFromLoaded(ix, batch,
-        idCol, blobCol, maxHamming, scope = scope)
-    }
-    }
-
-  /** [[imageDedupStreamAgainstIndex]] at the WIDE (256-bit) operating
-    * point ([[graft.pipeline.Multimodal.writeImageIndexWide]]): 16-bit
-    * bands keep each micro-batch's candidate probe selective on corpora
-    * where the 64-bit bands saturate — the stream tier that survives
-    * the 10⁶+-image envelope.
-    */
-  def imageDedupWideStreamAgainstIndex(stream: DataFrame,
-      indexPath: String, idCol: String, blobCol: String,
-      maxHamming: Int = 8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.Multimodal.loadFingerprintIndexWide(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Multimodal.imageDedupPairsWideFromLoaded(ix, batch,
-        idCol, blobCol, maxHamming, scope = scope)
-    }
-    }
-
-  /** Per-micro-batch AUDIO near-dup against a persisted
-    * [[graft.pipeline.Multimodal.writeAudioIndex]] — the image stream
-    * member's contract for the audio family.
-    */
-  def audioDedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
-      idCol: String, blobCol: String, maxHamming: Int = 8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.Multimodal.loadFingerprintIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Multimodal.audioDedupPairsFromLoaded(ix, batch,
-        idCol, blobCol, maxHamming, scope = scope)
-    }
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted VIDEO-fingerprint
-    * index ([[graft.pipeline.Multimodal.writeVideoIndex]]) — the video
-    * member of the multimodal near-dup triple, same contract as the
-    * image/audio members.
-    */
-  def videoDedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
-      idCol: String, blobCol: String, maxHamming: Int = 8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.Multimodal.loadFingerprintIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Multimodal.videoDedupPairsFromLoaded(ix, batch,
+      graft.pipeline.Multimodal.dedupPairsFromLoaded(ix, batch,
         idCol, blobCol, maxHamming, scope = scope)
     }
     }

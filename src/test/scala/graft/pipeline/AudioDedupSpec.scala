@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.Multimodal.Fingerprint
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The audio near-dup family: exact invariance of the integer envelope
@@ -73,8 +74,9 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("banded pairs equal brute force; index probe matches rebuild") {
     val all = blobs(corpus ++ batch)
-    val banded = Multimodal.audioDedupPairs(all, "doc_id", "blob",
-      maxHamming = 8).select("id_a", "id_b", "hamming")
+    val banded = Multimodal.dedupPairs(all, "doc_id", "blob",
+        Fingerprint.audio64, maxHamming = 8)
+      .select("id_a", "id_b", "hamming")
       .collect().map(_.toSeq).toSet
     val fps = corpus ++ batch map { case (id, b) => (id, fp(b)) }
     val brute = (for {
@@ -85,8 +87,10 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
 
     val p = java.nio.file.Files
       .createTempDirectory("graft_audio_idx").toString
-    Multimodal.writeAudioIndex(blobs(corpus), "doc_id", "blob", p)
-    val probed = Multimodal.audioDedupPairsFromIndex(spark, p,
+    Multimodal.writeIndex(blobs(corpus), "doc_id", "blob",
+      Fingerprint.audio64, p)
+    val probed = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.audio64),
       blobs(batch), "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     val bruteInc = (for {
@@ -100,7 +104,8 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
     // tombstoning corpus ids %8==0 removes exactly their pairs
     Dedup.writeIdTombstones(
       Seq.range(8L, 41L, 8L).toDF("doc_id"), "doc_id", p)
-    val afterTomb = Multimodal.audioDedupPairsFromIndex(spark, p,
+    val afterTomb = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.audio64),
       blobs(batch), "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     assert(afterTomb ==
@@ -112,15 +117,17 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val p = java.nio.file.Files
       .createTempDirectory("graft_audioidx_stream").toString + "/idx"
-    Multimodal.writeAudioIndex(blobs(corpus), "doc_id", "blob", p)
+    Multimodal.writeIndex(blobs(corpus), "doc_id", "blob",
+      Fingerprint.audio64, p)
     val waves = Seq(batch.take(6), batch.drop(6))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.audioDedupStreamAgainstIndex(
+    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
       input.toDF().toDF("doc_id", "wav")
         .select($"doc_id", Multimodal.asBlob($"wav", "unknown")
           .as("blob")),
-      p, "doc_id", "blob", maxHamming = 8) { (pairs, _) =>
+      p, Fingerprint.audio64, "doc_id", "blob",
+      maxHamming = 8) { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()
@@ -128,7 +135,8 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
     waves.foreach { w => input.addData(w); q.processAllAvailable() }
     q.stop()
     val expected = waves.map { w =>
-      Multimodal.audioDedupPairsFromIndex(spark, p, blobs(w),
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.audio64), blobs(w),
           "doc_id", "blob", maxHamming = 8)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     }.reduce(_ union _)

@@ -3,9 +3,11 @@ package graft.pipeline
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
-/** Fuzz property for the three byte-level blob decoders: on ARBITRARY
-  * bytes — random, truncated-valid, and bit-flipped-valid — every decode
-  * returns (Some or None) promptly and never throws or hangs. This is
+/** Fuzz property for the byte-level blob decoders — the three header
+  * decodes and the five fingerprint kernels with their own box, chunk
+  * and frame walks: on ARBITRARY bytes — random, truncated-valid, and
+  * bit-flipped-valid — every decode returns (Some or None) promptly and
+  * never throws or hangs. This is
   * the executable form of the quarantine contract ("never fail — or
   * hang — the batch"): at 100 TB a decoder meets every corruption the
   * storage layer can produce, and a single spinning executor thread is
@@ -19,6 +21,11 @@ class DecoderFuzzSpec extends AnyFunSuite {
     Multimodal.decodeImageMeta(bytes)
     Multimodal.decodeAudioMeta(bytes)
     Multimodal.decodeVideoMeta(bytes)
+    Multimodal.imageFingerprint64(bytes)
+    Multimodal.imageFingerprintWide(bytes)
+    Multimodal.audioFingerprint64(bytes)
+    Multimodal.videoFingerprint64(bytes)
+    Multimodal.videoFingerprintWide(bytes)
     ()
   }
 
@@ -65,7 +72,17 @@ class DecoderFuzzSpec extends AnyFunSuite {
       Multimodal.encodeWav(16000, 2, 16, 50, 7L),
       Multimodal.encodeMp4(600, 1200, 320, 240, 48),
       Multimodal.encodeImage(8, 6, 7L, "png"),
-      Multimodal.encodeImage(8, 6, 7L, "bmp"))
+      Multimodal.encodeImage(8, 6, 7L, "bmp"),
+      // fixtures the kernels accept, so mutations reach the envelope
+      // walks: 64 PCM windows, and 64 MJPEG frames sliced by `stsz`
+      Multimodal.encodeWindowWav(2, Array.tabulate(64)(w => w * 5)),
+      {
+        val frames = (0 until 64).map(f =>
+          Multimodal.grayFrameJpeg(f * 3 % 256, 1.0f)).toArray
+        Multimodal.encodeMp4(600, 600L * 64, 8, 8, 64,
+          mdatPayload = frames.reduce(_ ++ _),
+          sampleSizes = frames.map(_.length))
+      })
     timed("mutated-valid") {
       for (v <- valid) {
         for (cut <- 0 to v.length by math.max(1, v.length / 40))

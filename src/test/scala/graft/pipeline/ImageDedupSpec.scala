@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import graft.pipeline.Multimodal.Fingerprint
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Image near-dup: perceptual-fingerprint invariance, banded-join
@@ -55,8 +56,8 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("every planted re-encode pair surfaces at Hamming 0") {
-    val pairs = Multimodal.imageDedupPairs(plantedBlobs, "doc_id", "blob",
-        maxHamming = 8)
+    val pairs = Multimodal.dedupPairs(plantedBlobs, "doc_id", "blob",
+        Fingerprint.image64,        maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2))
       .toMap
     for (id <- 0L until 120L by 10) {
@@ -67,14 +68,15 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("banded join equals brute force over the fingerprints") {
-    val fp = Multimodal.imageFingerprintDf(plantedBlobs, "doc_id", "blob")
+    val fp = Multimodal.fingerprints(plantedBlobs, "doc_id", "blob",
+      Fingerprint.image64)
     val rows = fp.as[(Long, Long)].collect()
     val brute = (for {
       (ia, sa) <- rows; (ib, sb) <- rows if ia < ib
       h = java.lang.Long.bitCount(sa ^ sb) if h <= 8
     } yield (ia, ib)).toSet
-    val banded = Multimodal.imageDedupPairs(plantedBlobs, "doc_id",
-        "blob", maxHamming = 8)
+    val banded = Multimodal.dedupPairs(plantedBlobs, "doc_id",
+        "blob", Fingerprint.image64, maxHamming = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded == brute)
     assert(brute.nonEmpty)
@@ -107,14 +109,16 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
   test("index probe equals incremental brute force over fingerprints") {
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidx").toString + "/idx"
-    Multimodal.writeImageIndex(baseOnlyBlobs, "doc_id", "blob", path)
-    val got = Multimodal.imageDedupPairsFromIndex(spark, path,
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.image64, path)
+    val got = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.image64),
         batchBlobs, "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val corpusFp = Multimodal.imageFingerprintDf(baseOnlyBlobs,
-      "doc_id", "blob").as[(Long, Long)].collect()
-    val batchFp = Multimodal.imageFingerprintDf(batchBlobs,
-      "doc_id", "blob").as[(Long, Long)].collect()
+    val corpusFp = Multimodal.fingerprints(baseOnlyBlobs,
+      "doc_id", "blob", Fingerprint.image64).as[(Long, Long)].collect()
+    val batchFp = Multimodal.fingerprints(batchBlobs,
+      "doc_id", "blob", Fingerprint.image64).as[(Long, Long)].collect()
     val bvc = for {
       (ib, sb) <- batchFp; (ic, sc) <- corpusFp
       if java.lang.Long.bitCount(sb ^ sc) <= 8
@@ -132,7 +136,8 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidx_stream").toString + "/idx"
-    Multimodal.writeImageIndex(baseOnlyBlobs, "doc_id", "blob", path)
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.image64, path)
     def wave(mod: Long, offset: Long): Seq[(Long, Array[Byte])] =
       (0L until 120L).filter(_ % 10 === mod).map { id =>
         (id + offset, Multimodal.encodeCellImage(8, 8, 3,
@@ -141,11 +146,12 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
     val (w1, w2) = (wave(0L, 50000L), wave(0L, 70000L))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.imageDedupStreamAgainstIndex(
+    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
       input.toDF().toDF("doc_id", "img")
         .select($"doc_id", Multimodal.asBlob($"img", "unknown")
           .as("blob")),
-      path, "doc_id", "blob", maxHamming = 8) { (pairs, _) =>
+      path, Fingerprint.image64, "doc_id", "blob",
+      maxHamming = 8) { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()
@@ -157,7 +163,8 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
       val batch = w.toDF("doc_id", "img")
         .select($"doc_id", Multimodal.asBlob($"img", "unknown")
           .as("blob"))
-      Multimodal.imageDedupPairsFromIndex(spark, path, batch,
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.image64), batch,
           "doc_id", "blob", maxHamming = 8)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     }.reduce(_ union _)
@@ -169,9 +176,11 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
   test("index probe refuses maxHamming past the stored point's radius") {
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidx_refuse").toString + "/idx"
-    Multimodal.writeImageIndex(baseOnlyBlobs, "doc_id", "blob", path)
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.image64, path)
     val err = intercept[IllegalArgumentException] {
-      Multimodal.imageDedupPairsFromIndex(spark, path, batchBlobs,
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.image64), batchBlobs,
         "doc_id", "blob", maxHamming = 40)
     }
     assert(err.getMessage.contains("guaranteed radius"))
@@ -179,8 +188,8 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("maxHamming past the guaranteed radius is refused") {
     val err = intercept[IllegalArgumentException] {
-      Multimodal.imageDedupPairs(plantedBlobs, "doc_id", "blob",
-        maxHamming = 20)
+      Multimodal.dedupPairs(plantedBlobs, "doc_id", "blob",
+          Fingerprint.image64,        maxHamming = 20)
     }
     assert(err.getMessage.contains("guaranteed radius"))
   }

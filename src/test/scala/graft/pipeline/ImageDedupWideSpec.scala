@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import graft.pipeline.Multimodal.Fingerprint
 import org.scalatest.funsuite.AnyFunSuite
 
 /** WIDE (256-bit) image near-dup: fingerprint invariance, banded-join
@@ -75,14 +76,14 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
 
   test("every planted re-encode pair surfaces at Hamming 0; banded " +
       "join equals brute force") {
-    val fp = Multimodal.imageFingerprintWideDf(plantedBlobs, "doc_id",
-      "blob").as[(Long, Seq[Long])].collect()
+    val fp = Multimodal.fingerprints(plantedBlobs, "doc_id",
+      "blob", Fingerprint.imageWide).as[(Long, Seq[Long])].collect()
     val brute = (for {
       (ia, sa) <- fp; (ib, sb) <- fp if ia < ib
       h = hamming(sa, sb) if h <= 8
     } yield (ia, ib) -> h).toMap
-    val banded = Multimodal.imageDedupPairsWide(plantedBlobs, "doc_id",
-        "blob", maxHamming = 8)
+    val banded = Multimodal.dedupPairs(plantedBlobs, "doc_id",
+        "blob", Fingerprint.imageWide, maxHamming = 8)
       .select("id_a", "id_b", "hamming")
       .as[(Long, Long, Int)].collect()
       .map { case (a, b, h) => (a, b) -> h }.toMap
@@ -119,14 +120,16 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
   test("wide index probe equals incremental brute force") {
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidxw").toString + "/idx"
-    Multimodal.writeImageIndexWide(baseOnlyBlobs, "doc_id", "blob", path)
-    val got = Multimodal.imageDedupPairsWideFromIndex(spark, path,
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.imageWide, path)
+    val got = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.imageWide),
         batchBlobs, "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val corpusFp = Multimodal.imageFingerprintWideDf(baseOnlyBlobs,
-      "doc_id", "blob").as[(Long, Seq[Long])].collect()
-    val batchFp = Multimodal.imageFingerprintWideDf(batchBlobs,
-      "doc_id", "blob").as[(Long, Seq[Long])].collect()
+    val corpusFp = Multimodal.fingerprints(baseOnlyBlobs,
+      "doc_id", "blob", Fingerprint.imageWide).as[(Long, Seq[Long])].collect()
+    val batchFp = Multimodal.fingerprints(batchBlobs,
+      "doc_id", "blob", Fingerprint.imageWide).as[(Long, Seq[Long])].collect()
     val bvc = for {
       (ib, sb) <- batchFp; (ic, sc) <- corpusFp
       if hamming(sb, sc) <= 8
@@ -145,7 +148,8 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidxw_stream").toString + "/idx"
-    Multimodal.writeImageIndexWide(baseOnlyBlobs, "doc_id", "blob", path)
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.imageWide, path)
     def wave(offset: Long): Seq[(Long, Array[Byte])] =
       (0L until 120L).filter(_ % 10 == 0).map { id =>
         (id + offset, Multimodal.encodeCellImage(16, 16, 3,
@@ -154,11 +158,12 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
     val (w1, w2) = (wave(50000L), wave(70000L))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.imageDedupWideStreamAgainstIndex(
+    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
       input.toDF().toDF("doc_id", "img")
         .select($"doc_id", Multimodal.asBlob($"img", "unknown")
           .as("blob")),
-      path, "doc_id", "blob", maxHamming = 8) { (pairs, _) =>
+      path, Fingerprint.imageWide, "doc_id", "blob",
+      maxHamming = 8) { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()
@@ -170,7 +175,8 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
       val batch = w.toDF("doc_id", "img")
         .select($"doc_id", Multimodal.asBlob($"img", "unknown")
           .as("blob"))
-      Multimodal.imageDedupPairsWideFromIndex(spark, path, batch,
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.imageWide), batch,
           "doc_id", "blob", maxHamming = 8)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     }.reduce(_ union _)
@@ -181,15 +187,17 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
 
   test("radius guards refuse maxHamming past the banding point") {
     val err = intercept[IllegalArgumentException] {
-      Multimodal.imageDedupPairsWide(plantedBlobs, "doc_id", "blob",
-        maxHamming = 20)
+      Multimodal.dedupPairs(plantedBlobs, "doc_id", "blob",
+          Fingerprint.imageWide,        maxHamming = 20)
     }
     assert(err.getMessage.contains("guaranteed radius"))
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgidxw_refuse").toString + "/idx"
-    Multimodal.writeImageIndexWide(baseOnlyBlobs, "doc_id", "blob", path)
+    Multimodal.writeIndex(baseOnlyBlobs, "doc_id", "blob",
+      Fingerprint.imageWide, path)
     val err2 = intercept[IllegalArgumentException] {
-      Multimodal.imageDedupPairsWideFromIndex(spark, path, batchBlobs,
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.imageWide), batchBlobs,
         "doc_id", "blob", maxHamming = 40)
     }
     assert(err2.getMessage.contains("guaranteed radius"))

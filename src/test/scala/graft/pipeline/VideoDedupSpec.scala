@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.Multimodal.Fingerprint
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The video near-dup family — [[AudioDedupSpec]]'s contract over MP4
@@ -155,8 +156,9 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("banded pairs equal brute force; index probe matches rebuild") {
     val all = blobs(corpus ++ batch)
-    val banded = Multimodal.videoDedupPairs(all, "doc_id", "blob",
-      maxHamming = 8).select("id_a", "id_b", "hamming")
+    val banded = Multimodal.dedupPairs(all, "doc_id", "blob",
+        Fingerprint.video64, maxHamming = 8)
+      .select("id_a", "id_b", "hamming")
       .collect().map(_.toSeq).toSet
     val fps = corpus ++ batch map { case (id, b) => (id, fp(b)) }
     val brute = (for {
@@ -167,8 +169,10 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestBase {
 
     val p = java.nio.file.Files
       .createTempDirectory("graft_video_idx").toString
-    Multimodal.writeVideoIndex(blobs(corpus), "doc_id", "blob", p)
-    val probed = Multimodal.videoDedupPairsFromIndex(spark, p,
+    Multimodal.writeIndex(blobs(corpus), "doc_id", "blob",
+      Fingerprint.video64, p)
+    val probed = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.video64),
       blobs(batch), "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     val bruteInc = (for {
@@ -182,7 +186,8 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestBase {
     // tombstoning corpus ids %8==0 removes exactly their pairs
     Dedup.writeIdTombstones(
       Seq.range(8L, 41L, 8L).toDF("doc_id"), "doc_id", p)
-    val afterTomb = Multimodal.videoDedupPairsFromIndex(spark, p,
+    val afterTomb = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.video64),
       blobs(batch), "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     assert(afterTomb ==
@@ -194,15 +199,17 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val p = java.nio.file.Files
       .createTempDirectory("graft_videoidx_stream").toString + "/idx"
-    Multimodal.writeVideoIndex(blobs(corpus), "doc_id", "blob", p)
+    Multimodal.writeIndex(blobs(corpus), "doc_id", "blob",
+      Fingerprint.video64, p)
     val waves = Seq(batch.take(6), batch.drop(6))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.videoDedupStreamAgainstIndex(
+    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
       input.toDF().toDF("doc_id", "vid")
         .select($"doc_id", Multimodal.asVideoBlob($"vid", "unknown")
           .as("blob")),
-      p, "doc_id", "blob", maxHamming = 8) { (pairs, _) =>
+      p, Fingerprint.video64, "doc_id", "blob",
+      maxHamming = 8) { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()
@@ -210,7 +217,8 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestBase {
     waves.foreach { w => input.addData(w); q.processAllAvailable() }
     q.stop()
     val expected = waves.map { w =>
-      Multimodal.videoDedupPairsFromIndex(spark, p, blobs(w),
+      Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, p, Fingerprint.video64), blobs(w),
           "doc_id", "blob", maxHamming = 8)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     }.reduce(_ union _)

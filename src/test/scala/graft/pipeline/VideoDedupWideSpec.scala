@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
+import graft.pipeline.Multimodal.Fingerprint
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -82,14 +83,14 @@ class VideoDedupWideSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("wide banded pairs equal brute force; remux pairs at Hamming 0") {
-    val fp = Multimodal.videoFingerprintWideDf(plantedBlobs, "doc_id",
-      "blob").as[(Long, Seq[Long])].collect()
+    val fp = Multimodal.fingerprints(plantedBlobs, "doc_id",
+      "blob", Fingerprint.videoWide).as[(Long, Seq[Long])].collect()
     val brute = (for {
       (ia, sa) <- fp; (ib, sb) <- fp if ia < ib
       h = hamming(sa, sb) if h <= 8
     } yield (ia, ib) -> h).toMap
-    val banded = Multimodal.videoDedupPairsWide(plantedBlobs, "doc_id",
-        "blob", maxHamming = 8)
+    val banded = Multimodal.dedupPairs(plantedBlobs, "doc_id",
+        "blob", Fingerprint.videoWide, maxHamming = 8)
       .select("id_a", "id_b", "hamming")
       .as[(Long, Long, Int)].collect()
       .map { case (a, b, h) => (a, b) -> h }.toMap
@@ -105,14 +106,16 @@ class VideoDedupWideSpec extends AnyFunSuite with SparkTestBase {
     val batch = plantedBlobs.filter($"doc_id" >= 50000)
     val path = java.nio.file.Files
       .createTempDirectory("graft_vididxw").toString + "/idx"
-    Multimodal.writeVideoIndexWide(baseBlobs, "doc_id", "blob", path)
-    val got = Multimodal.videoDedupPairsWideFromIndex(spark, path,
+    Multimodal.writeIndex(baseBlobs, "doc_id", "blob",
+      Fingerprint.videoWide, path)
+    val got = Multimodal.dedupPairsFromLoaded(
+        Multimodal.loadIndex(spark, path, Fingerprint.videoWide),
         batch, "doc_id", "blob", maxHamming = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val corpusFp = Multimodal.videoFingerprintWideDf(baseBlobs,
-      "doc_id", "blob").as[(Long, Seq[Long])].collect()
-    val batchFp = Multimodal.videoFingerprintWideDf(batch,
-      "doc_id", "blob").as[(Long, Seq[Long])].collect()
+    val corpusFp = Multimodal.fingerprints(baseBlobs,
+      "doc_id", "blob", Fingerprint.videoWide).as[(Long, Seq[Long])].collect()
+    val batchFp = Multimodal.fingerprints(batch,
+      "doc_id", "blob", Fingerprint.videoWide).as[(Long, Seq[Long])].collect()
     val bvc = for {
       (ib, sb) <- batchFp; (ic, sc) <- corpusFp
       if hamming(sb, sc) <= 8
