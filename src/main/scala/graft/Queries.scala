@@ -2085,14 +2085,16 @@ object Queries {
   }
 
   /** Unpersist and forget this session's fixture caches (the planted
-    * image/audio blobs above). The bench keeps fixtures warm across
-    * evaluations on purpose — they are input construction, not query
-    * work — and calls this once before the session stops.
+    * image/audio/video blobs above, at both widths). The bench keeps
+    * fixtures warm across evaluations on purpose — they are input
+    * construction, not query work — and calls this once before the
+    * session stops.
     */
   def releaseFixtures(s: SparkSession): Unit =
     Seq(imageBlobCache, audioBlobCache, gridBlobCache,
-        dedupGridBlobCache, dedupWavBlobCache, videoBlobCache,
-        dedupVideoBlobCache).foreach { cache =>
+        dedupGridBlobCache, dedupGridBlobsWideCache, dedupWavBlobCache,
+        videoBlobCache, dedupVideoBlobCache,
+        dedupVideoBlobsWideCache).foreach { cache =>
       val it = cache.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()

@@ -49,10 +49,14 @@ final class CacheScope extends AutoCloseable {
 
   /** Local-checkpoint `ds` and track the checkpointed RDD for release.
     * Each reference to a persisted frame in a plan becomes its own cache
-    * stage, and so its own job; a checkpoint is a plain RDD scan wherever
-    * it is referenced. Its blocks are its only copy, though: once the
-    * scope closes the frame cannot be recomputed, so checkpoint only
-    * frames whose terminal action runs before [[close]].
+    * stage, and so its own job; the checkpoint itself is a plain RDD
+    * scan wherever it is referenced. What a plan builds ABOVE each
+    * reference is not shared, though: the exchanges over two references
+    * to one checkpoint (or persisted frame) are never reused, so each
+    * runs its map stage again — reference a checkpoint-derived
+    * aggregate once. Its blocks are its only copy: once the scope
+    * closes the frame cannot be recomputed, so checkpoint only frames
+    * whose terminal action runs before [[close]].
     */
   private[graft] def checkpoint[T](ds: Dataset[T]): Dataset[T] = synchronized {
     val cp = ds.localCheckpoint(eager = false)

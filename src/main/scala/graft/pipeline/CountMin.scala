@@ -50,30 +50,36 @@ object CountMin {
       key.cast("string"))), 1, 4), 16, 10).cast(LongType)
       % width).cast("int")
 
-  /** The sparse cell grid: one row per NON-ZERO cell, `(r, c, cnt)`.
-    * NULL keys are skipped (nothing to count). Pass `weightCol` to
-    * accumulate a weight instead of an occurrence count.
+  /** One `(r, c, cnt)` row per key and grid row, unsummed: `cnt` is
+    * the row's weight (1 without `weightCol`). NULL keys are skipped.
     */
-  def sketch(df: DataFrame, keyCol: String, depth: Int, width: Int,
-      weightCol: Option[String] = None): DataFrame = {
+  private def rawCells(df: DataFrame, keyCol: String, depth: Int,
+      width: Int, weightCol: Option[String] = None): DataFrame = {
     checkDims(depth, width)
     val w = weightCol.map(col(_).cast(LongType)).getOrElse(lit(1L))
     df.filter(col(keyCol).isNotNull)
       .select(col(keyCol).as("_k"), w.as("_w"),
         explode(sequence(lit(0), lit(depth - 1))).as("r"))
       .select(col("r"), bucket(col("r"), col("_k"), width).as("c"),
-        col("_w"))
-      .groupBy("r", "c")
-      .agg(sum(col("_w")).cast(LongType).as("cnt"))
+        col("_w").as("cnt"))
   }
+
+  /** The sparse cell grid: one row per NON-ZERO cell, `(r, c, cnt)`.
+    * NULL keys are skipped (nothing to count). Pass `weightCol` to
+    * accumulate a weight instead of an occurrence count.
+    */
+  def sketch(df: DataFrame, keyCol: String, depth: Int, width: Int,
+      weightCol: Option[String] = None): DataFrame =
+    sumCells(rawCells(df, keyCol, depth, width, weightCol))
+
+  private def sumCells(cells: DataFrame): DataFrame =
+    cells.groupBy("r", "c").agg(sum(col("cnt")).cast(LongType).as("cnt"))
 
   /** Cellwise-additive merge: `merge(sketch(a), sketch(b))` equals
     * `sketch(a ∪ b)` exactly (both grids must share depth/width —
     * enforced by the sidecar params on the persisted path).
     */
-  def merge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionAll(b).groupBy("r", "c")
-      .agg(sum(col("cnt")).cast(LongType).as("cnt"))
+  def merge(a: DataFrame, b: DataFrame): DataFrame = sumCells(a.unionAll(b))
 
   /** Point estimates for a frame of candidate keys: `(key, est)` with
     * `est = min` over the key's `depth` cells (absent cell = 0 —
@@ -106,13 +112,18 @@ object CountMin {
       .coalesce(1).write.mode("overwrite").json(s"$path/params")
   }
 
+  /** The params row, read with its known schema (no inference job). */
+  private def readParams(spark: SparkSession, path: String): Row =
+    spark.read.schema("depth LONG, width LONG, key_col STRING")
+      .json(s"$path/params").head()
+
   /** The stored grid + its params, for [[estimate]]/[[updateSketch]]
     * (the replay-guard sentinel row is stripped; a crashed swap serves
     * the previous generation).
     */
   def readSketch(spark: SparkSession, path: String)
       : (DataFrame, Int, Int) = {
-    val p = spark.read.json(s"$path/params").head()
+    val p = readParams(spark, path)
     (SidecarIO.readWithFallback(spark, s"$path/cells")
         .filter(col("r") >= 0),
       p.getAs[Long]("depth").toInt, p.getAs[Long]("width").toInt)
@@ -128,20 +139,22 @@ object CountMin {
     * and the counts can never disagree across a crash; [[readSketch]]
     * and [[estimate]] read through the sentinel-stripping filter.
     * Pass the returned state back as `carried` to skip the next fold's
-    * params, cells and guard reads ([[SidecarFold]]).
+    * params, cells and guard reads ([[SidecarFold]]). The batch's raw
+    * cell rows and the stored cells are summed in one `(r, c)`
+    * aggregate (map-side combined), so a fold runs one exchange.
     */
   def updateSketch(spark: SparkSession, path: String,
       batch: DataFrame, batchId: Option[Long] = None,
       carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
     SidecarFold.fold(s"$path/cells", batchId, carried) {
       val cells = SidecarIO.readWithFallback(spark, s"$path/cells")
-      SidecarFold(spark.read.json(s"$path/params").head(), cells,
+      SidecarFold(readParams(spark, path), cells,
         cells.filter(col("r") === -1).select("cnt").collect()
           .headOption.map(_.getLong(0)))
     } { st =>
       val p = st.params
       val merged = merge(st.stored.filter(col("r") >= 0),
-        sketch(batch, p.getAs[String]("key_col"),
+        rawCells(batch, p.getAs[String]("key_col"),
           p.getAs[Long]("depth").toInt, p.getAs[Long]("width").toInt))
       // keep an existing guard through un-id'd folds
       val guard = batchId.orElse(st.guard)

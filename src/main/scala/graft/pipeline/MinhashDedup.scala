@@ -195,11 +195,19 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
     val sc = CacheScope.resolve(scope, batch.sparkSession)
     val cBuckets = minhashBuckets(corpus, idCol, textCol, numHashes, bands,
       shingleSize)
+    val cCounts = bucketCounts(cBuckets)
     val cShingles = shingleSets(corpus.select(col(idCol), col(textCol)),
       idCol, textCol, shingleSize)
     incrementalBucketPairs(batch, idCol, textCol, numHashes, bands,
-      shingleSize, cBuckets, cShingles, threshold, maxBucketSize, sc)
+      shingleSize, cBuckets.join(broadcast(cCounts
+          .filter(col("cnt") > maxBucketSize).select("band", "bucket")),
+        Seq("band", "bucket"), "left_anti"),
+      cCounts, cShingles, threshold, maxBucketSize, sc)
   }
+
+  /** `(band, bucket, cnt)`: the number of bucket rows per bucket. */
+  private def bucketCounts(buckets: DataFrame): DataFrame =
+    buckets.groupBy("band", "bucket").agg(count(lit(1)).as("cnt"))
 
   /** Shared incremental candidate+verify core: the batch's bucket rows
     * against corpus bucket rows (however the corpus side was produced —
@@ -210,47 +218,41 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
     * Per-batch state is BATCH-sized and taken in ONE kernel pass: the
     * batch's [[minhashSketches]] frame is local-checkpointed into `sc`
     * ([[CacheScope.checkpoint]]), and its bucket rows and verify texts
-    * are both read from it. A checkpoint is a plain scan wherever the
-    * plan references it, where a persisted frame costs one cache stage
-    * (one job) per reference; so the returned frame must take its
+    * are both read from it; so the returned frame must take its
     * terminal action before `sc` closes. The corpus side streams
-    * through the candidate join uncached. The skew guard merges
-    * per-side counts (bucket count over the union = corpus count +
-    * batch count — additive, so the oversized set is IDENTICAL to a
-    * count over the union), and a probing stream passes its handle's
-    * precomputed corpus count frame via `cCounts` so the corpus-wide
-    * aggregation runs once per stream, not once per batch.
+    * through the candidate join uncached.
+    *
+    * Skew guard: a bucket is oversized when its count over batch ∪
+    * corpus — the batch count plus the corpus count `cCounts`, additive
+    * — exceeds `maxBucketSize`. `cBounded` is the corpus bucket rows
+    * with every bucket whose CORPUS count alone exceeds the cap already
+    * dropped (a subset of the oversized set), so no such bucket reaches
+    * the join's exchange. The full set filters the batch rows once, as
+    * the join's `l` side: a candidate joins on (band, bucket), so a row
+    * of an oversized bucket on the `r` side finds no partner without a
+    * filter of its own. Its one reference matters: the exchanges above
+    * each reference to a checkpoint are recomputed, never reused, so a
+    * second reference would run the batch-count exchange and the
+    * broadcast again.
     */
   private[pipeline] def incrementalBucketPairs(batch: DataFrame,
       idCol: String, textCol: String, numHashes: Int, bands: Int,
-      shingleSize: Int, cBuckets: DataFrame, cShingles: DataFrame,
-      threshold: Double, maxBucketSize: Int, sc: CacheScope,
-      cCounts: Option[DataFrame] = None): DataFrame = {
+      shingleSize: Int, cBounded: DataFrame, cCounts: DataFrame,
+      cShingles: DataFrame, threshold: Double, maxBucketSize: Int,
+      sc: CacheScope): DataFrame = {
     val sketches = sc.checkpoint(minhashSketches(
       batch.select(col(idCol), col(textCol)), idCol, textCol, numHashes,
       bands, shingleSize))
     val pb = bucketRows(sketches)
     val textsA = sketches.select("id", "sh")
-    val bCounts = pb.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-    val cc = cCounts.getOrElse(cBuckets.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("cnt")))
-    val oversized = bCounts.unionAll(cc)
+    val oversized = bucketCounts(pb).unionAll(cCounts)
       .groupBy("band", "bucket").agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") > maxBucketSize).select("band", "bucket")
-    // the guard filters the batch rows once, as the join's `l` side: a
-    // candidate joins on (band, bucket), so the batch rows of `r` in an
-    // oversized bucket find no partner without a filter of their own
-    // (one more reference to `oversized`, and so one more job). The
-    // corpus rows stay filtered before the join: an oversized corpus
-    // bucket must not reach the join's exchange.
     val l = pb
       .join(broadcast(oversized), Seq("band", "bucket"), "left_anti")
       .select(col("band"), col("bucket"), col("id").as("id_a"))
     val r = pb.withColumn("new", lit(true))
-      .unionByName(cBuckets
-        .join(broadcast(oversized), Seq("band", "bucket"), "left_anti")
-        .withColumn("new", lit(false)))
+      .unionByName(cBounded.withColumn("new", lit(false)))
       .select(col("band"), col("bucket"), col("id").as("id_b"),
         col("new").as("new_b"))
     val cand = l.join(r, Seq("band", "bucket"))
@@ -300,51 +302,63 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       path: String, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): DataFrame =
-    minhashPairsFromLoaded(loadMinhashIndex(spark, path), batch,
-      idCol, textCol, threshold, maxBucketSize, scope)
+    minhashPairsFromLoaded(loadMinhashIndex(spark, path, maxBucketSize),
+      batch, idCol, textCol, threshold, scope)
 
   /** The fixed per-index state [[minhashPairsFromIndex]] re-derives on
     * every call: params sidecar plus the tombstone-reduced corpus
-    * bucket/shingle frames. A continuously probing stream loads this
-    * ONCE at stream construction (the [[graft.streaming.StreamOps]]
-    * kmeans-model discipline) instead of paying the params read + index
-    * frame setup per micro-batch; the index is fixed for the handle's
-    * lifetime — fold the index, reload the handle.
+    * bucket/shingle frames, for probes at skew cap `maxBucketSize`. A
+    * continuously probing stream loads this ONCE at stream construction
+    * (the [[graft.streaming.StreamOps]] kmeans-model discipline) instead
+    * of paying the params read + index frame setup per micro-batch; the
+    * index is fixed for the handle's lifetime — fold the index, reload
+    * the handle. `cBuckets` holds the corpus bucket rows outside the
+    * buckets whose corpus count alone exceeds the cap, and
+    * `cBucketCounts` the per-bucket corpus counts the guard adds batch
+    * counts to (see [[incrementalBucketPairs]]).
     */
   final case class LoadedMinhashIndex(numHashes: Int, bands: Int,
-    shingleSize: Int, cBuckets: DataFrame, cShingles: DataFrame,
-    cBucketCounts: DataFrame)
+    shingleSize: Int, maxBucketSize: Int, cBuckets: DataFrame,
+    cShingles: DataFrame, cBucketCounts: DataFrame)
 
+  /** Load a [[LoadedMinhashIndex]]. The corpus bucket counts are
+    * persisted into `scope` and built here, by the collect of the
+    * buckets over the cap, so no probe's plan builds them; each probe
+    * then drops those buckets' corpus rows with a literal predicate
+    * (none when no bucket is over the cap).
+    */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String,
+      path: String, maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): LoadedMinhashIndex = {
     val sc = CacheScope.resolve(scope, spark)
     val p = spark.read.schema("numHashes LONG, bands LONG, shingleSize LONG")
       .json(s"$path/params").head()
     val cBuckets = dropTombstoned(spark, path,
       SidecarIO.readWithFallback(spark, s"$path/buckets"), "id")
+    val cCounts = sc.persist(bucketCounts(cBuckets))
+    val over = cCounts.filter(col("cnt") > maxBucketSize)
+      .select("band", "bucket").collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (band, rows) =>
+        col("band") === band && col("bucket").isin(rows.map(_.getLong(1)): _*)
+      }
     LoadedMinhashIndex(
       p.getAs[Long]("numHashes").toInt, p.getAs[Long]("bands").toInt,
-      p.getAs[Long]("shingleSize").toInt,
-      cBuckets,
+      p.getAs[Long]("shingleSize").toInt, maxBucketSize,
+      over.reduceOption(_ || _).fold(cBuckets)(o => cBuckets.filter(!o)),
       dropTombstoned(spark, path,
         SidecarIO.readWithFallback(spark, s"$path/shingles"), "id"),
-      // corpus bucket counts, persisted with the handle: the skew guard
-      // adds batch counts to these per fold instead of re-aggregating
-      // the corpus bucket frame every micro-batch
-      sc.persist(cBuckets.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("cnt"))))
+      cCounts)
   }
 
-  /** [[minhashPairsFromIndex]] against a pre-loaded handle — identical
-    * output, no per-call index reads.
+  /** [[minhashPairsFromIndex]] against a pre-loaded handle, at the
+    * handle's skew cap — identical output, no per-call index reads.
     */
   def minhashPairsFromLoaded(ix: LoadedMinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
-      maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): DataFrame =
     incrementalBucketPairs(batch, idCol, textCol, ix.numHashes, ix.bands,
-      ix.shingleSize, ix.cBuckets, ix.cShingles, threshold, maxBucketSize,
-      CacheScope.resolve(scope, batch.sparkSession),
-      cCounts = Some(ix.cBucketCounts))
+      ix.shingleSize, ix.cBuckets, ix.cBucketCounts, ix.cShingles,
+      threshold, ix.maxBucketSize,
+      CacheScope.resolve(scope, batch.sparkSession))
 }

@@ -252,6 +252,14 @@ object Search {
     }
   }
 
+  /** The build-time params row, read with its known schema (no
+    * inference job); `sum_dl` is null in indexes written before it was
+    * recorded.
+    */
+  private def readParams(spark: SparkSession, path: String) =
+    spark.read.schema("n_docs LONG, avgdl DOUBLE, sum_dl LONG")
+      .json(s"$path/params").head()
+
   // Sentinel toks carrying the fold state inside the df sidecar:
   // tokens are split on whitespace, so a LEADING-SPACE tok can never
   // collide with a real term. Folding them into the one atomic df
@@ -298,9 +306,10 @@ object Search {
     * the guard and the compaction floor is used; such folds are not
     * replay-guarded. Pass the returned state (params = the sentinels)
     * back as `carried` to skip the next fold's df read and sentinel
-    * collect ([[SidecarFold]]). A fold runs one exchange (tf and dl on
-    * `doc_id`) and takes the batch's `n` and `Σdl` from an observation
-    * on its tf checkpoint, so it costs no stats job.
+    * collect ([[SidecarFold]]). A fold runs two exchanges: tf and dl on
+    * `doc_id`, written straight to the postings delta with the batch's
+    * `n` and `Σdl` observed on that write (no stats job), then the df
+    * merge on `tok`, which reads the delta back with its known schema.
     */
   def updateIndex(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, batchId: Option[Long] = None,
@@ -318,12 +327,11 @@ object Search {
           sentinels.get(SentSumDl)) match {
         case (Some(n), Some(s)) => (n, s)
         case _ =>
-          val p = spark.read.json(s"$path/params").head()
-          (p.getAs[Long]("n_docs"),
-            if (p.schema.fieldNames.contains("sum_dl"))
-              p.getAs[Long]("sum_dl")
-            else math.round(p.getAs[Double]("avgdl") *
-              p.getAs[Long]("n_docs")))
+          val p = readParams(spark, path)
+          val n = p.getAs[Long]("n_docs")
+          (n, if (p.isNullAt(p.fieldIndex("sum_dl")))
+              math.round(p.getAs[Double]("avgdl") * n)
+            else p.getAs[Long]("sum_dl"))
       }
       // deltas above the guard are orphans of a crashed fold, never
       // served (readIndex serves ids up to the guard only): drop them
@@ -338,10 +346,11 @@ object Search {
       val effId = batchId.getOrElse((st.guard ++ sentinels.get(SentFloor))
         .foldLeft(-1L)(math.max) + 1)
 
-      // tf per (doc, tok) and dl per doc over ONE doc_id exchange (the
-      // groupBy and the window both keep the doc_id partitioning; rows
-      // sharing a doc_id merge into one document), with the batch stats
-      // observed on the checkpoint action instead of a job of their own
+      // 1. idempotent postings delta: tf per (doc, tok) and dl per doc
+      // over ONE doc_id exchange (the groupBy and the window both keep
+      // the doc_id partitioning; rows sharing a doc_id merge into one
+      // document), with the batch stats observed on the write instead
+      // of a job of their own
       val byDoc = Window.partitionBy("doc_id")
       val stats = new Observation()
       val tf = explodedTokens(batch, idCol, textCol)
@@ -355,20 +364,18 @@ object Search {
           sum(when(col("tok") === col("first_tok"), 1L)).as("n"),
           sum(col("tf")).as("sumdl"))
         .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-        .localCheckpoint()
+      val delta = deltaPath(path, effId)
+      tf.sortWithinPartitions("tok", "doc_id")
+        .write.mode("overwrite").parquet(delta.toString)
       val observed = stats.get
       // an empty or all-blank batch observes null: nothing to fold, the
-      // guard stays put
-      Option(observed("n")).map(_.asInstanceOf[Long]).filter(_ > 0).map {
-          batchN =>
-        // 1. idempotent postings delta
-        tf.sortWithinPartitions("tok", "doc_id")
-          .write.mode("overwrite")
-          .parquet(deltaPath(path, effId).toString)
-
+      // guard stays put and its (empty) delta goes
+      Option(observed("n")).map(_.asInstanceOf[Long]).filter(_ > 0)
+        .orElse { fs.delete(delta, true); None }.map { batchN =>
         // 2. the swapped side: merged df + stats + replay guard
         val mergedDf = st.stored.filter(!isSentinel(col("tok")))
-          .unionAll(tf.select(col("tok"), lit(1L).as("df")))
+          .unionAll(spark.read.schema(tf.schema).parquet(delta.toString)
+            .select(col("tok"), lit(1L).as("df")))
           .groupBy("tok").agg(sum(col("df")).cast(LongType).as("df"))
         // rewrite the three fold sentinels, CARRY every other one (the
         // compaction generation/floor must survive subsequent folds)
@@ -438,7 +445,7 @@ object Search {
         sentinels.get(SentSumDl)) match {
       case (Some(nv), Some(sv)) => (nv, sv.toDouble / nv)
       case _ =>
-        val p = spark.read.json(s"$path/params").head()
+        val p = readParams(spark, path)
         (p.getAs[Long]("n_docs"), p.getAs[Double]("avgdl"))
     }
     Bm25Index(postings, dfSide.filter(!isSentinel(col("tok"))),

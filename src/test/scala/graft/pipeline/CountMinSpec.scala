@@ -55,6 +55,20 @@ class CountMinSpec extends AnyFunSuite with SparkTestBase {
     assert(cells(stored) == cells(whole))
   }
 
+  test("job budget: params read with their schema: readSketch 1 job, " +
+      "an uncarried fold 4") {
+    val path = java.nio.file.Files.createTempDirectory("cmsjobs").toString
+    CountMin.writeSketch(corpus.filter(length(col("key")) === 2), "key",
+      4, 128, path)
+    val (_, readJobs) = graft.JobCount.of(spark)(
+      CountMin.readSketch(spark, path))
+    assert(readJobs <= 1, s"readSketch ran $readJobs jobs; budget 1")
+    // the params, the guard collect, then one exchange and the swap
+    val (_, foldJobs) = graft.JobCount.of(spark)(CountMin.updateSketch(
+      spark, path, corpus.filter(length(col("key")) =!= 2), Some(0L)))
+    assert(foldJobs <= 4, s"uncarried fold ran $foldJobs jobs; budget 4")
+  }
+
   test("deterministic under repartitioning") {
     val sk1 = CountMin.sketch(corpus, "key", 4, 256)
     val sk2 = CountMin.sketch(corpus.repartition(13), "key", 4, 256)

@@ -337,4 +337,18 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
       s"expected two exchanges:\n${result.queryExecution.executedPlan}")
     assert(got.nonEmpty)
   }
+
+  test("job budget: a fresh index's params read with their schema: " +
+      "readIndex 2 jobs, the first fold 6") {
+    val path = foldedIndex(docs, Nil)
+    // the sentinel collect finds no fold stats, so the build-time params
+    // are read: one job, where an inferred read costs two
+    val (_, readJobs) = jobsOf(Search.readIndex(spark, path))
+    assert(readJobs <= 2, s"readIndex ran $readJobs jobs; budget 2")
+    // the sentinel collect, the params, then the fold's delta write and
+    // df swap, two jobs each
+    val (_, foldJobs) = jobsOf(Search.updateIndex(spark, path, more,
+      "doc_id", "text", Some(0L)))
+    assert(foldJobs <= 6, s"first fold ran $foldJobs jobs; budget 6")
+  }
 }

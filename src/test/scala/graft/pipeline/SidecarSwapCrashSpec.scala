@@ -53,7 +53,10 @@ object CrashingFileSystem {
   * together), and a recovery fold of the same batch id lands N+1
   * exactly. The double crash crashes the recovery fold too, at each of
   * its steps: a swap that drops `_prev` before its tmp dir is live loses
-  * the sidecar there.
+  * the sidecar there. The bloom and HLL folds are crashed the way a
+  * stream runs them: the crashing fold carries the state of the fold
+  * before it, and the recovery folds start from disk, as a stream's
+  * next fold does once a failure dropped its state.
   */
 class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -81,6 +84,16 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
     * exactly N+1 after a recovery fold.
     */
   private def crashEveryStep[G](template: String, fold: String => Unit,
+      generation: String => G, genN: G, genN1: G): Unit =
+    crashEveryStep(template, p => () => fold(p), fold, generation, genN,
+      genN1)
+
+  /** [[crashEveryStep]] where the crashed fold is `crashing(path)`,
+    * returned after any uncrashed setup on the fresh copy `path` (a
+    * fold whose state it carries); the recovery folds are `fold`.
+    */
+  private def crashEveryStep[G](template: String,
+      crashing: String => (() => Unit), fold: String => Unit,
       generation: String => G, genN: G, genN1: G): Unit = {
     def seesNOrN1(path: String, where: String): Unit = {
       val g = try generation(path) catch {
@@ -95,14 +108,16 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
     var k1 = 1
     while ({
       val path = fresh(template)
-      val crash = crashed(k1)(fold(path))
+      val run = crashing(path)
+      val crash = crashed(k1)(run())
       if (crash) {
         seesNOrN1(path, s"crash at step $k1")
         recovers(path, s"crash at step $k1")
         var k2 = 1
         while ({
           val twice = fresh(template)
-          assert(crashed(k1)(fold(twice)))
+          val first = crashing(twice)
+          assert(crashed(k1)(first()))
           val again = crashed(k2)(fold(twice))
           if (again) {
             val where = s"crash at step $k1, then at recovery step $k2"
@@ -165,5 +180,43 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
       path => Search.updateIndex(spark, path, b, "doc_id", "text",
         Some(1L)),
       path => generation(Search.readIndex(spark, path)), genN, genN1)
+  }
+
+  private def keys(from: Int, to: Int) =
+    (from until to).map(i => s"k$i").toDF("key")
+
+  test("bloom: every single and double crash of a carried fold leaves " +
+      "generation N or N+1; the fold from disk after it lands N+1") {
+    val template = Files.createTempDirectory("bloom_template").toString
+    Bloom.writeFilter(keys(0, 40), "key", 1024, 3, template)
+    crashEveryStep(template,
+      path => {
+        val st = Bloom.updateFilter(spark, path, keys(40, 60), "key")
+        () => Bloom.updateFilter(spark, path, keys(60, 80), "key", Some(st))
+      },
+      path => Bloom.updateFilter(spark, path, keys(60, 80), "key"),
+      path => Bloom.readFilter(spark, path).words.toSeq,
+      Bloom.build(keys(0, 60), "key", 1024, 3).words.toSeq,
+      Bloom.build(keys(0, 80), "key", 1024, 3).words.toSeq)
+  }
+
+  test("HLL: every single and double crash of a carried fold leaves " +
+      "generation N or N+1; the fold from disk after it lands N+1") {
+    import org.apache.spark.sql.functions.{col, hll_sketch_estimate}
+    val template = Files.createTempDirectory("hll_template").toString
+    Sketches.writeSketches(keys(0, 40), Seq("key"), template)
+    def estimates(sketches: DataFrame) = sketches.select(col("col_name"),
+        hll_sketch_estimate(col("sketch"))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    crashEveryStep(template,
+      path => {
+        val st = Sketches.updateSketches(spark, path, keys(40, 60))
+        () => Sketches.updateSketches(spark, path, keys(60, 80), Some(st))
+      },
+      path => Sketches.updateSketches(spark, path, keys(60, 80)),
+      path => estimates(SidecarIO.readWithFallback(spark,
+        s"$path/sketches")),
+      estimates(Sketches.columnSketches(keys(0, 60), Seq("key"))),
+      estimates(Sketches.columnSketches(keys(0, 80), Seq("key"))))
   }
 }

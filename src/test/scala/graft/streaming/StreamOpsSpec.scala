@@ -848,31 +848,108 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("probe job budget: steady-state minhash probe") {
-    import graft.pipeline.{CacheScope, Dedup}
-    val corpus = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select($"doc_id", $"text")
+  /** A fresh minhash index over the sf0.001 corpus; [[probeBatch]] is
+    * near-dups of every 20th corpus document (`mod`) under fresh ids
+    * (`offset`).
+    */
+  private def probeIndex(): String = {
     val path = java.nio.file.Files
       .createTempDirectory("probebudget").toString
-    Dedup.writeMinhashIndex(corpus, "doc_id", "text", path)
-    val ix = Dedup.loadMinhashIndex(spark, path)
-    def batch(mod: Long, offset: Long) = corpus.filter($"doc_id" % 20 === mod)
-      .select(($"doc_id" + offset).as("doc_id"),
-        concat($"text", lit(" zz qq xx")).as("text"))
-    def probe(b: org.apache.spark.sql.DataFrame) = CacheScope.withScope { s =>
-      Dedup.minhashPairsFromLoaded(ix, b, "doc_id", "text", threshold = 0.7,
-        scope = s).collect()
+    graft.pipeline.Dedup.writeMinhashIndex(probeCorpus, "doc_id", "text",
+      path)
+    path
+  }
+  private lazy val probeCorpus = spark.read
+    .parquet("/root/testdata/sf0.001/documents.parquet")
+    .select($"doc_id", $"text")
+  private def probeBatch(mod: Long, offset: Long) = probeCorpus
+    .filter($"doc_id" % 20 === mod)
+    .select(($"doc_id" + offset).as("doc_id"),
+      concat($"text", lit(" zz qq xx")).as("text"))
+  private def probe(ix: graft.pipeline.Dedup.LoadedMinhashIndex,
+      b: org.apache.spark.sql.DataFrame) =
+    graft.pipeline.CacheScope.withScope { s =>
+      graft.pipeline.Dedup.minhashPairsFromLoaded(ix, b, "doc_id", "text",
+        threshold = 0.7, scope = s).collect()
     }
-    // the first batch materializes the handle's persisted corpus counts
-    assert(probe(batch(0L, 20000L)).nonEmpty)
-    val (pairs, jobs) = graft.JobCount.of(spark)(probe(batch(10L, 30000L)))
+
+  test("probe job budget: steady-state minhash probe") {
+    val ix = graft.pipeline.Dedup.loadMinhashIndex(spark, probeIndex())
+    assert(probe(ix, probeBatch(0L, 20000L)).nonEmpty)
+    val (pairs, jobs) = graft.JobCount.of(spark)(
+      probe(ix, probeBatch(10L, 30000L)))
     assert(pairs.nonEmpty)
     // one kernel pass (the checkpoint's spread exchange), then the
     // skew-guard, candidate and verify stages; a persisted batch frame
-    // costs one more job per reference to it in the plan
-    assert(jobs <= 10, s"steady-state minhash probe ran $jobs jobs; budget 10")
+    // costs one more job per reference to it in the plan, and so does
+    // a second reference to the guard
+    assert(jobs <= 8, s"steady-state minhash probe ran $jobs jobs; budget 8")
   }
+
+  test("probe job budget: a fresh handle's first probe runs no more " +
+      "jobs than a steady one") {
+    // an index of its own: a handle over an index another test probed
+    // would find its corpus counts cached already
+    val ix = graft.pipeline.Dedup.loadMinhashIndex(spark, probeIndex())
+    // the handle's load built its corpus bucket counts, so the first
+    // probe's plan does not
+    val (_, first) = graft.JobCount.of(spark)(
+      probe(ix, probeBatch(0L, 20000L)))
+    val (_, steady) = graft.JobCount.of(spark)(
+      probe(ix, probeBatch(10L, 30000L)))
+    assert(first <= steady, s"first probe ran $first jobs, a steady one $steady")
+  }
+
+  test("the minhash probe's plan holds one oversized-bucket aggregate " +
+      "and one broadcast of it") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Sum}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val ix = graft.pipeline.Dedup.loadMinhashIndex(spark, probeIndex())
+    graft.pipeline.CacheScope.withScope { s =>
+      val pairs = graft.pipeline.Dedup.minhashPairsFromLoaded(ix,
+        probeBatch(0L, 20000L), "doc_id", "text", threshold = 0.7,
+        scope = s)
+      assert(pairs.collect().nonEmpty)
+      // the plan as submitted: with no bucket over the cap, adaptive
+      // execution drops each anti-join, and the guard with it, from the
+      // final plan once its broadcast came back empty
+      val plan = pairs.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val keys = Seq("band", "bucket")
+      // the guard: Σ cnt per bucket over batch ∪ corpus counts
+      val guards = plan.collect {
+        case a: BaseAggregateExec
+            if a.groupingExpressions.map(_.references.head.name) == keys &&
+              a.aggregateExpressions.exists(e => e.mode == Final &&
+                e.aggregateFunction.isInstanceOf[Sum]) => a
+      }
+      val broadcasts = plan.collect {
+        case b: BroadcastExchangeExec if b.output.map(_.name) == keys => b
+      }
+      assert(guards.size == 1, s"${guards.size} guard aggregates in\n$plan")
+      assert(broadcasts.size == 1,
+        s"${broadcasts.size} broadcasts of the guard in\n$plan")
+    }
+  }
+
+  /** Jobs of a steady-state carried fold: `fold` one batch from disk,
+    * then count the next batch's fold, which carries its state.
+    */
+  private def carriedFoldJobs[P](first: org.apache.spark.sql.DataFrame,
+      next: org.apache.spark.sql.DataFrame)(
+      fold: (org.apache.spark.sql.DataFrame,
+        Option[graft.pipeline.SidecarFold[P]]) =>
+        graft.pipeline.SidecarFold[P]): Int = {
+    val st = fold(first, None)
+    graft.JobCount.of(spark)(fold(next, Some(st)))._2
+  }
+
+  private def foldKeys(from: Long, to: Long) = spark.range(from, to)
+    .select(concat(lit("k"), $"id").as("key"), ($"id" % 97).as("v"))
 
   test("fold job budget: a steady-state carried count-min fold") {
     import graft.pipeline.CountMin
@@ -883,11 +960,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       depth = 4, width = 256, path)
     val st = CountMin.updateSketch(spark, path,
       toks.slice(100, 400).toDF("tok"), Some(0L))
-    // the budget is what the fold ran when it carried collected rows:
-    // carrying the checkpointed frame the swap wrote must add no job
+    // the raw batch cells and the stored cells summed in one exchange,
+    // written once by the swap
     val (_, jobs) = graft.JobCount.of(spark)(CountMin.updateSketch(spark,
       path, toks.drop(400).toDF("tok"), Some(1L), carried = Some(st)))
-    assert(jobs <= 4, s"carried count-min fold ran $jobs jobs; budget 4")
+    assert(jobs <= 2, s"carried count-min fold ran $jobs jobs; budget 2")
   }
 
   test("fold job budget: a steady-state carried BM25 fold") {
@@ -904,10 +981,54 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val (_, jobs) = graft.JobCount.of(spark)(Search.updateIndex(spark,
       path, corpus.drop(40).toDF("doc_id", "text"), "doc_id", "text",
       Some(1L), carried = Some(st)))
-    // the tf checkpoint (one doc_id exchange, batch stats observed on
-    // it), the postings delta, the merged-df checkpoint (one tok
-    // exchange) and the swap
-    assert(jobs <= 6, s"carried BM25 fold ran $jobs jobs; budget 6")
+    // the postings delta (one doc_id exchange, batch stats observed on
+    // the write) and the df swap (one tok exchange)
+    assert(jobs <= 4, s"carried BM25 fold ran $jobs jobs; budget 4")
+  }
+
+  test("fold job budget: steady-state carried bloom and sharded bloom " +
+      "folds") {
+    import graft.pipeline.{Bloom, ShardedBloom}
+    val flat = java.nio.file.Files.createTempDirectory("bloombudget")
+      .toString
+    Bloom.writeFilter(foldKeys(0, 400), "key", 4096, 5, flat)
+    val flatJobs = carriedFoldJobs(foldKeys(400, 800),
+        foldKeys(800, 1200)) { (b, st) =>
+      Bloom.updateFilter(spark, flat, b, "key", st)
+    }
+    // the batch sketch's and the merge's word_idx exchanges, then the
+    // swap's write
+    assert(flatJobs <= 3, s"carried bloom fold ran $flatJobs jobs; budget 3")
+    val sharded = java.nio.file.Files.createTempDirectory("shbloombudget")
+      .toString
+    ShardedBloom.writeFilter(foldKeys(0, 400), "key", 4, 4096, 3, sharded)
+    val shardedJobs = carriedFoldJobs(foldKeys(400, 800),
+        foldKeys(800, 1200)) { (b, st) =>
+      ShardedBloom.updateFilter(spark, sharded, b, "key", st)
+    }
+    // the batch sketch's and the merge's (shard, word_idx) exchanges,
+    // then the swap's shard exchange and write
+    assert(shardedJobs <= 4,
+      s"carried sharded bloom fold ran $shardedJobs jobs; budget 4")
+  }
+
+  test("fold job budget: steady-state carried HLL and bottom-k folds") {
+    import graft.pipeline.{BottomK, Sketches}
+    val hll = java.nio.file.Files.createTempDirectory("hllbudget").toString
+    Sketches.writeSketches(foldKeys(0, 400), Seq("key", "v"), hll)
+    val hllJobs = carriedFoldJobs(foldKeys(400, 800),
+        foldKeys(800, 1200)) { (b, st) =>
+      Sketches.updateSketches(spark, hll, b, st)
+    }
+    // the batch sketch's global aggregate, the col_name merge, the write
+    assert(hllJobs <= 3, s"carried HLL fold ran $hllJobs jobs; budget 3")
+    val bk = java.nio.file.Files.createTempDirectory("bkbudget").toString
+    BottomK.writeSketch(foldKeys(0, 400), "key", "v", 40, bk)
+    val bkJobs = carriedFoldJobs(foldKeys(400, 800),
+        foldKeys(800, 1200)) { (b, st) =>
+      BottomK.updateSketch(spark, bk, b, st)
+    }
+    assert(bkJobs <= 3, s"carried bottom-k fold ran $bkJobs jobs; budget 3")
   }
 
   test("stream-maintained BM25 index serves scores bit-identical to " +
