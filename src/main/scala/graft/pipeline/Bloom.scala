@@ -146,20 +146,17 @@ object Bloom {
   /** Persist the sidecar: sparse words + operating point. */
   def writeFilter(df: DataFrame, keyCol: String, numBits: Int,
       numHashes: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     SidecarIO.atomicOverwriteDf(sketch(df, keyCol, numBits, numHashes),
       s"$path/words")
-    Seq((numBits, numHashes, keyCol)).toDF("num_bits", "num_hashes",
-        "key_col").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(df.sparkSession, s"$path/params",
+      "num_bits" -> numBits, "num_hashes" -> numHashes, "key_col" -> keyCol)
   }
 
   /** The stored filter, ready to probe ([[SidecarIO.readWithFallback]]:
     * a crashed swap serves the previous generation).
     */
   def readFilter(spark: SparkSession, path: String): BloomFilter = {
-    val p = spark.read.json(s"$path/params").head()
+    val p = SidecarIO.readParams(spark, s"$path/params")
     val numBits = p.getAs[Long]("num_bits").toInt
     densify(SidecarIO.readWithFallback(spark, s"$path/words"), numBits,
       p.getAs[Long]("num_hashes").toInt)
@@ -176,7 +173,7 @@ object Bloom {
       keyCol: String, carried: Option[SidecarFold[Row]] = None)
       : SidecarFold[Row] =
     SidecarFold.fold(s"$path/words", None, carried) {
-      SidecarFold(spark.read.json(s"$path/params").head(),
+      SidecarFold(SidecarIO.readParams(spark, s"$path/params"),
         SidecarIO.readWithFallback(spark, s"$path/words"), None)
     } { st =>
       Some(st.copy(stored = st.stored

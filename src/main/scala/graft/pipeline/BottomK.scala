@@ -81,12 +81,10 @@ object BottomK {
     */
   def writeSketch(df: DataFrame, keyCol: String, valueCol: String,
       k: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     SidecarIO.atomicOverwriteDf(sketch(df, keyCol, valueCol, k),
       s"$path/sample")
-    Seq((k, keyCol, valueCol)).toDF("k", "keyCol", "valueCol").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(df.sparkSession, s"$path/params", "k" -> k,
+      "keyCol" -> keyCol, "valueCol" -> valueCol)
   }
 
   /** Fold a new batch into the stored sketch at batch cost: sketch the
@@ -103,7 +101,7 @@ object BottomK {
   def updateSketch(spark: SparkSession, path: String, batch: DataFrame,
       carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
     SidecarFold.fold(s"$path/sample", None, carried) {
-      SidecarFold(spark.read.json(s"$path/params").head(),
+      SidecarFold(SidecarIO.readParams(spark, s"$path/params"),
         readSketch(spark, path), None)
     } { st =>
       val k = st.params.getAs[Long]("k").toInt

@@ -104,18 +104,11 @@ object CountMin {
   /** Persist the sidecar: sparse cells + operating point. */
   def writeSketch(df: DataFrame, keyCol: String, depth: Int,
       width: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     SidecarIO.atomicOverwriteDf(sketch(df, keyCol, depth, width),
       s"$path/cells")
-    Seq((depth, width, keyCol)).toDF("depth", "width", "key_col")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(df.sparkSession, s"$path/params", "depth" -> depth,
+      "width" -> width, "key_col" -> keyCol)
   }
-
-  /** The params row, read with its known schema (no inference job). */
-  private def readParams(spark: SparkSession, path: String): Row =
-    spark.read.schema("depth LONG, width LONG, key_col STRING")
-      .json(s"$path/params").head()
 
   /** The stored grid + its params, for [[estimate]]/[[updateSketch]]
     * (the replay-guard sentinel row is stripped; a crashed swap serves
@@ -123,7 +116,7 @@ object CountMin {
     */
   def readSketch(spark: SparkSession, path: String)
       : (DataFrame, Int, Int) = {
-    val p = readParams(spark, path)
+    val p = SidecarIO.readParams(spark, s"$path/params")
     (SidecarIO.readWithFallback(spark, s"$path/cells")
         .filter(col("r") >= 0),
       p.getAs[Long]("depth").toInt, p.getAs[Long]("width").toInt)
@@ -148,7 +141,7 @@ object CountMin {
       carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
     SidecarFold.fold(s"$path/cells", batchId, carried) {
       val cells = SidecarIO.readWithFallback(spark, s"$path/cells")
-      SidecarFold(readParams(spark, path), cells,
+      SidecarFold(SidecarIO.readParams(spark, s"$path/params"), cells,
         cells.filter(col("r") === -1).select("cnt").collect()
           .headOption.map(_.getLong(0)))
     } { st =>

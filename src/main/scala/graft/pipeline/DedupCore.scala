@@ -123,20 +123,6 @@ private[pipeline] trait DedupCoreOps extends Serializable { this: Dedup.type =>
           element_at(words, (i + k + 1).cast("int"))): _*))))
   }
 
-  /** MinHash signature: array of `numHashes` minima over the shingle set
-    * (shingle→minhash→band→bucket pipeline). ONE aggregate pass over the
-    * pre-hashed shingles — the shingle subtree is built once per row, not
-    * once per hash function. Hash family = seeded xxhash64 over the base
-    * hash (no modular arithmetic → safe under ANSI overflow checks).
-    */
-  def minhashSignature(text: Column, numHashes: Int = 64,
-      shingleSize: Int = 3): Column =
-    aggregate(shingleHashes(text, shingleSize),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, h) => zip_with(acc,
-        array((0 until numHashes).map(i => xxhash64(lit(i), h)): _*),
-        (a, b) => least(a, b)))
-
   // -------------------------------------------------------------------
   // JVM-side shingle kernels. Catalyst higher-order functions (transform/
   // aggregate lambdas) are NOT whole-stage-codegen'd — they interpret per

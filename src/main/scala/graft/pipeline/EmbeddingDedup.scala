@@ -71,13 +71,11 @@ private[pipeline] trait EmbeddingDedupOps extends Serializable { this: Dedup.typ
     */
   def writeEmbeddingIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, dim: Int, nBits: Int = 12, tables: Int = 4): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     Similarity.hyperplaneBucketsDf(corpus, idCol, vecCol, dim, nBits,
         tables)
       .write.mode("overwrite").parquet(s"$path/buckets")
-    Seq((dim, nBits, tables)).toDF("dim", "nBits", "tables").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(corpus.sparkSession, s"$path/params",
+      "dim" -> dim, "nBits" -> nBits, "tables" -> tables)
   }
 
   /** Incremental embedding near-dup pairs of a NEW batch against a
@@ -90,7 +88,7 @@ private[pipeline] trait EmbeddingDedupOps extends Serializable { this: Dedup.typ
       threshold: Double = 0.95, maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): DataFrame = {
     val sc = CacheScope.resolve(scope, spark)
-    val p = spark.read.json(s"$path/params").head()
+    val p = SidecarIO.readParams(spark, s"$path/params")
     val all0 = Similarity.hyperplaneBucketsDf(batch, idCol, vecCol,
         p.getAs[Long]("dim").toInt, p.getAs[Long]("nBits").toInt,
         p.getAs[Long]("tables").toInt).withColumn("new", lit(true))

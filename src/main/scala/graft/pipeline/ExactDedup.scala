@@ -69,7 +69,6 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
   def writeExactIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, fpp: Double = 0.01): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     require(fpp > 0 && fpp <= 1, s"fpp $fpp outside (0,1]")
     corpus.select(col(idCol).cast("long").as("id"),
         md5(col(textCol)).as("h"))
@@ -77,11 +76,22 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
       .agg(min("id").as("keep_id"), count(lit(1)).as("n_copies"))
       .withColumn("hp", substring(col("h"), 1, 2))
       .write.mode("overwrite").partitionBy("hp").parquet(s"$path/hashes")
-    val idx = spark.read.parquet(s"$path/hashes")
+    // a rebuild replaces the whole index — stale delta batches from a
+    // previous build must not union into the new one
+    IndexDeltas.clearDeltas(spark, s"$path/hashes")
+    writeBloom(spark.read.parquet(s"$path/hashes"), path, fpp)
+  }
+
+  /** The bloom sidecar over the index rows `idx`, and the params that
+    * record its size and `fpp`. fpp = 1 is the documented opt-out: size
+    * the bit array for ONE item and insert all n, saturating it to
+    * always-positive — a bytes-sized blob whose probe prunes nothing (no
+    * false negatives possible).
+    */
+  private def writeBloom(idx: DataFrame, path: String, fpp: Double): Unit = {
+    val spark = idx.sparkSession
+    import spark.implicits._
     val n = math.max(1L, idx.count())
-    // fpp = 1 is the documented opt-out: size the bit array for ONE item
-    // and insert all n, saturating it to always-positive — a bytes-sized
-    // blob whose probe prunes nothing (no false negatives possible)
     val bloom = idx.select(xxhash64(col("h")).as("hx"))
       .stat.bloomFilter("hx", if (fpp >= 1) 1L else n,
         if (fpp >= 1) 0.5 else fpp)
@@ -89,11 +99,8 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
     bloom.writeTo(bos)
     Seq(Tuple1(bos.toByteArray)).toDF("bloom").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/bloom")
-    // a rebuild replaces the whole index — stale delta batches from a
-    // previous build must not union into the new one
-    IndexDeltas.clearDeltas(spark, s"$path/hashes")
-    Seq((n, fpp)).toDF("distinctContents", "fpp").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(spark, s"$path/params", "distinctContents" -> n,
+      "fpp" -> fpp)
   }
 
   /** Per-batch exact-dedup decisions against a persisted
@@ -192,7 +199,6 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
   def appendToExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String,
       textCol: String, batchId: Long = -1L): Unit = {
-    import spark.implicits._
     val id = if (batchId >= 0) batchId
       else IndexDeltas.nextAppendId(spark, s"$path/hashes")
     val existing = IndexDeltas.rows(spark, s"$path/hashes",
@@ -204,18 +210,8 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
       .join(existing, Seq("h"), "left_anti")
       .withColumn("hp", substring(col("h"), 1, 2))
     IndexDeltas.writeDelta(delta, s"$path/hashes", id, Seq("hp"))
-    val idx = IndexDeltas.rows(spark, s"$path/hashes")
-    val fpp = spark.read.json(s"$path/params").head().getAs[Double]("fpp")
-    val n = math.max(1L, idx.count())
-    val bloom = idx.select(xxhash64(col("h")).as("hx"))
-      .stat.bloomFilter("hx", if (fpp >= 1) 1L else n,
-        if (fpp >= 1) 0.5 else fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    Seq(Tuple1(bos.toByteArray)).toDF("bloom").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/bloom")
-    Seq((n, fpp)).toDF("distinctContents", "fpp").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    writeBloom(IndexDeltas.rows(spark, s"$path/hashes"), path,
+      SidecarIO.readParams(spark, s"$path/params").getAs[Double]("fpp"))
   }
 
   /** Fold live exact-index deltas into a fresh base generation

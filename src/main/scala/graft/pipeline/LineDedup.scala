@@ -113,7 +113,6 @@ object LineDedup {
   def writeLineIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, delim: String = "\n"): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     lineStats(corpus, idCol, textCol, delim)
       .select(md5(col("line").cast("binary")).as("h"),
         col("doc_freq"), col("occurrences"))
@@ -126,8 +125,8 @@ object LineDedup {
     // and a second full corpus pass per index build is the kind of cost
     // this module exists to avoid
     val nDocs = corpus.count()
-    Seq((delim, nDocs)).toDF("delim", "corpusDocs").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(spark, s"$path/params", "delim" -> delim,
+      "corpusDocs" -> nDocs)
   }
 
   /** Roll the line-frequency index FORWARD with a batch's line stats —
@@ -143,8 +142,8 @@ object LineDedup {
   def appendToLineIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = -1L): Unit = {
-    val delim = spark.read.json(s"$path/params")
-      .head().getAs[String]("delim")
+    val delim = SidecarIO.readParams(spark, s"$path/params")
+      .getAs[String]("delim")
     val id = if (batchId >= 0) batchId
       else IndexDeltas.nextAppendId(spark, s"$path/hashes")
     val delta = lineStats(batch, idCol, textCol, delim)
@@ -203,7 +202,7 @@ object LineDedup {
   def loadLineIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedLineIndex =
     LoadedLineIndex(
-      spark.read.json(s"$path/params").head().getAs[String]("delim"),
+      SidecarIO.readParams(spark, s"$path/params").getAs[String]("delim"),
       lineIndexRows(spark, path))
 
   /** [[dropBoilerplateFromIndex]] against a pre-loaded handle. */

@@ -19,7 +19,7 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String,
       textCol: String): Unit = {
-    val p = spark.read.json(s"$path/params").head()
+    val p = SidecarIO.readParams(spark, s"$path/params")
     minhashBuckets(docs, idCol, textCol,
         p.getAs[Long]("numHashes").toInt, p.getAs[Long]("bands").toInt,
         p.getAs[Long]("shingleSize").toInt)
@@ -121,26 +121,6 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       }
       acc
     }
-  }
-
-  /** LSH band buckets: split the signature into `bands` bands of
-    * `rows = numHashes / bands` and hash each band. Emits one row per
-    * (band, bucket) — candidates collide on at least one band.
-    */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3): DataFrame = {
-    val rows = numHashes / bands
-    val withSig = df.select(col(idCol),
-      minhashSignature(col(textCol), numHashes, shingleSize).as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          (0 until rows).map(r => element_at(col("sig"),
-            b * rows + r + 1)): _*)).as("bucket"))
-    }
-    withSig.select(col(idCol), explode(array(bandCols: _*)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
   }
 
   /** Near-duplicate candidate pairs via banded MinHash (never all-pairs):
@@ -276,15 +256,12 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 64, bands: Int = 16,
       shingleSize: Int = 3): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     minhashBuckets(corpus, idCol, textCol, numHashes, bands, shingleSize)
       .write.mode("overwrite").parquet(s"$path/buckets")
     shingleSets(corpus, idCol, textCol, shingleSize)
       .write.mode("overwrite").parquet(s"$path/shingles")
-    Seq((numHashes, bands, shingleSize))
-      .toDF("numHashes", "bands", "shingleSize").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(corpus.sparkSession, s"$path/params",
+      "numHashes" -> numHashes, "bands" -> bands, "shingleSize" -> shingleSize)
   }
 
   /** Incremental near-dup pairs of a NEW batch against a PERSISTED
@@ -331,8 +308,7 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
       path: String, maxBucketSize: Int = 1000,
       scope: CacheScope = CacheScope.session): LoadedMinhashIndex = {
     val sc = CacheScope.resolve(scope, spark)
-    val p = spark.read.schema("numHashes LONG, bands LONG, shingleSize LONG")
-      .json(s"$path/params").head()
+    val p = SidecarIO.readParams(spark, s"$path/params")
     val cBuckets = dropTombstoned(spark, path,
       SidecarIO.readWithFallback(spark, s"$path/buckets"), "id")
     val cCounts = sc.persist(bucketCounts(cBuckets))

@@ -1309,16 +1309,14 @@ object Multimodal {
   def writeIndex(blobs: DataFrame, idCol: String, blobCol: String,
       fp: Fingerprint, path: String, blocks: Option[Int] = None,
       probeBits: Option[Int] = None): Unit = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
     val b = blocks.getOrElse(fp.defaultBlocks)
     val p = probeBits.getOrElse(fp.defaultProbeBits)
     Dedup.requireWide(fp.words, b, p)
     fingerprints(blobs, idCol, blobCol, fp)
       .write.mode("overwrite").parquet(s"$path/fingerprints")
-    Seq((fp.words, b, p, fp.name))
-      .toDF("words", "blocks", "probeBits", "fingerprint")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(blobs.sparkSession, s"$path/params",
+      "words" -> fp.words, "blocks" -> b, "probeBits" -> p,
+      "fingerprint" -> fp.name)
   }
 
   /** Fixed per-index state of a fingerprint probe: the fingerprint, the
@@ -1340,15 +1338,14 @@ object Multimodal {
     */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       fp: Fingerprint): LoadedFpIndex = {
-    val params = spark.read
-      .schema("words LONG, blocks LONG, probeBits LONG, fingerprint STRING")
-      .json(s"$path/params").head()
-    val words = if (params.isNullAt(0)) 1 else params.getLong(0).toInt
-    val stored = Option(params.getString(3))
+    val params = SidecarIO.readParams(spark, s"$path/params")
+    val words = SidecarIO.param[Long](params, "words").fold(1)(_.toInt)
+    val stored = SidecarIO.param[String](params, "fingerprint")
     require(words == fp.words && stored.forall(_ == fp.name),
       s"index at $path holds $words-word${stored.fold("")(" " + _)} " +
         s"fingerprints; the handle asks for ${fp.words}-word ${fp.name}")
-    LoadedFpIndex(fp, params.getLong(1).toInt, params.getLong(2).toInt,
+    LoadedFpIndex(fp, params.getAs[Long]("blocks").toInt,
+      params.getAs[Long]("probeBits").toInt,
       Dedup.dropTombstoned(spark, path,
         SidecarIO.readWithFallback(spark, s"$path/fingerprints"), "id"))
   }

@@ -17,7 +17,7 @@ private[pipeline] trait NgramDedupOps extends Serializable { this: Dedup.type =>
   def appendToNgramIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String,
       textCol: String): Unit = {
-    val shingleSize = spark.read.json(s"$path/params").head()
+    val shingleSize = SidecarIO.readParams(spark, s"$path/params")
       .getAs[Long]("shingleSize").toInt
     shingleIndex(docs, idCol, textCol, shingleSize)
       .write.mode("append").parquet(s"$path/shingle_index")
@@ -174,12 +174,10 @@ private[pipeline] trait NgramDedupOps extends Serializable { this: Dedup.type =>
     */
   def writeNgramIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     shingleIndex(corpus, idCol, textCol, shingleSize)
       .write.mode("overwrite").parquet(s"$path/shingle_index")
-    Seq(Tuple1(shingleSize)).toDF("shingleSize").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(corpus.sparkSession, s"$path/params",
+      "shingleSize" -> shingleSize)
   }
 
   /** [[ngramJaccardPairsIncremental]] against a persisted
@@ -191,9 +189,8 @@ private[pipeline] trait NgramDedupOps extends Serializable { this: Dedup.type =>
       threshold: Double = 0.8, maxDocFreq: Int = 1000,
       scope: CacheScope = CacheScope.session): DataFrame = {
     val sc = CacheScope.resolve(scope, spark)
-    val shingleSize =
-      spark.read.json(s"$path/params").head()
-        .getAs[Long]("shingleSize").toInt
+    val shingleSize = SidecarIO.readParams(spark, s"$path/params")
+      .getAs[Long]("shingleSize").toInt
     val all0 = shingleIndex(batch, idCol, textCol, shingleSize)
       .withColumn("new", lit(true))
       .union(dropTombstoned(spark, path,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -313,14 +313,13 @@ object ProductQuant {
       }
       .toDF("id", "codes")
       .write.mode("overwrite").parquet(path)
-    Seq((cb.centroids.map(_.map(_.toSeq).toSeq).toSeq, cb.subDim,
-        cb.numSubspaces, cb.codesPerSubspace, cb.dim, "l2",
-        derived.map(_._1).getOrElse(-1),
-        derived.map(_._2).getOrElse(-1.0), recallK))
-      .toDF("centroids", "subDim", "numSubspaces", "codesPerSubspace",
-        "dim", "metric", "shortlist", "shortlistRecall", "recallK")
-      .coalesce(1)
-      .write.mode("overwrite").json(s"$path.codebook")
+    SidecarIO.writeParams(spark, s"$path.codebook",
+      "centroids" -> cb.centroids, "subDim" -> cb.subDim,
+      "numSubspaces" -> cb.numSubspaces,
+      "codesPerSubspace" -> cb.codesPerSubspace, "dim" -> cb.dim,
+      "metric" -> "l2", "shortlist" -> derived.map(_._1).getOrElse(-1),
+      "shortlistRecall" -> derived.map(_._2).getOrElse(-1.0),
+      "recallK" -> recallK)
   }
 
   /** Fold a batch of NEW vectors into a persisted flat PQ index at
@@ -359,14 +358,13 @@ object ProductQuant {
   /** Reload the codebook sidecar written by [[writePqIndex]]
     * (JSON numbers arrive as doubles; float→double→float is exact).
     */
-  def readPqCodebook(spark: SparkSession, path: String): PqCodebook = {
-    import spark.implicits._
-    val row = spark.read.json(s"$path.codebook")
-      .select(col("centroids"), col("subDim"))
-      .as[(Seq[Seq[Seq[Double]]], Long)].head()
-    PqCodebook(row._2.toInt,
-      row._1.map(_.map(_.map(_.toFloat).toArray).toArray).toArray)
-  }
+  def readPqCodebook(spark: SparkSession, path: String): PqCodebook =
+    codebookOf(SidecarIO.readParams(spark, s"$path.codebook"))
+
+  private def codebookOf(side: Row) = PqCodebook(
+    side.getAs[Long]("subDim").toInt,
+    side.getAs[Seq[Seq[Seq[Double]]]]("centroids")
+      .map(_.map(_.map(_.toFloat).toArray).toArray).toArray)
 
   /** ADC top-`k` against a persisted PQ index: codebook + packed codes
     * reload, byte codes widen back to ints, then the same broadcast-LUT
@@ -652,20 +650,17 @@ object ProductQuant {
     require(coarse.nonEmpty && coarse.forall(_.length == cb.dim),
       "coarse centroids must match the codebook dim")
     val spark = df.sparkSession
-    import spark.implicits._
     // a REBUILD replaces the whole index: stale append deltas from a
     // previous build at this path must not survive into the new one
     IndexDeltas.clearDeltas(spark, path)
     encodedRows(df, idCol, vecCol, coarse, cb, residuals)
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-    Seq((coarse.map(_.toSeq).toSeq,
-        cb.centroids.map(_.map(_.toSeq).toSeq).toSeq, cb.subDim,
-        cb.numSubspaces, cb.codesPerSubspace, cb.dim, coarse.length,
-        "l2", residuals))
-      .toDF("coarse", "centroids", "subDim", "numSubspaces",
-        "codesPerSubspace", "dim", "numCells", "metric", "residuals")
-      .coalesce(1)
-      .write.mode("overwrite").json(s"$path.meta")
+    SidecarIO.writeParams(spark, s"$path.meta", "coarse" -> coarse,
+      "centroids" -> cb.centroids, "subDim" -> cb.subDim,
+      "numSubspaces" -> cb.numSubspaces,
+      "codesPerSubspace" -> cb.codesPerSubspace, "dim" -> cb.dim,
+      "numCells" -> coarse.length, "metric" -> "l2",
+      "residuals" -> residuals)
   }
 
   /** Fold a batch of NEW vectors into a persisted IVF-PQ index at
@@ -723,17 +718,10 @@ object ProductQuant {
     */
   def readIvfPqSidecar(spark: SparkSession, path: String)
       : (Array[Array[Float]], PqCodebook, Boolean) = {
-    import spark.implicits._
-    val meta = spark.read.json(s"$path.meta")
-    val row = meta
-      .select(col("coarse"), col("centroids"), col("subDim"))
-      .as[(Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Long)].head()
-    val residuals = meta.columns.contains("residuals") &&
-      meta.select(col("residuals")).as[Boolean].head()
-    (row._1.map(_.map(_.toFloat).toArray).toArray,
-      PqCodebook(row._3.toInt,
-        row._2.map(_.map(_.map(_.toFloat).toArray).toArray).toArray),
-      residuals)
+    val meta = SidecarIO.readParams(spark, s"$path.meta")
+    (meta.getAs[Seq[Seq[Double]]]("coarse").map(_.map(_.toFloat).toArray)
+        .toArray, codebookOf(meta),
+      SidecarIO.param[Boolean](meta, "residuals").contains(true))
   }
 
   /** ADC top-`k` against a persisted IVF-PQ index: each query probes

@@ -237,7 +237,6 @@ object Search {
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, numFiles: Int = 8): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     CacheScope.withScope { scope =>
       val ix = buildIndex(docs, idCol, textCol, scope = scope)
       ix.postings
@@ -245,20 +244,10 @@ object Search {
         .sortWithinPartitions("tok", "doc_id")
         .write.mode("overwrite").parquet(s"$path/postings")
       SidecarIO.atomicOverwriteDf(ix.docFreq, s"$path/df")
-      val sumDl = math.round(ix.avgDl * ix.nDocs)
-      Seq((ix.nDocs, ix.avgDl, sumDl))
-        .toDF("n_docs", "avgdl", "sum_dl").coalesce(1)
-        .write.mode("overwrite").json(s"$path/params")
+      SidecarIO.writeParams(spark, s"$path/params", "n_docs" -> ix.nDocs,
+        "avgdl" -> ix.avgDl, "sum_dl" -> math.round(ix.avgDl * ix.nDocs))
     }
   }
-
-  /** The build-time params row, read with its known schema (no
-    * inference job); `sum_dl` is null in indexes written before it was
-    * recorded.
-    */
-  private def readParams(spark: SparkSession, path: String) =
-    spark.read.schema("n_docs LONG, avgdl DOUBLE, sum_dl LONG")
-      .json(s"$path/params").head()
 
   // Sentinel toks carrying the fold state inside the df sidecar:
   // tokens are split on whitespace, so a LEADING-SPACE tok can never
@@ -272,6 +261,21 @@ object Search {
   private val SentFloor = " floor"
 
   private def isSentinel(tok: Column): Column = tok.startsWith(" ")
+
+  /** Collection stats (n, Σdl): the sentinels when a fold wrote them,
+    * else the build-time params (indexes written before `sum_dl` was
+    * recorded lack it). Σdl/n is the avgdl a build computes, bit for bit.
+    */
+  private def collectionStats(spark: SparkSession, path: String,
+      sentinels: Map[String, Long]): (Long, Long) =
+    (sentinels.get(SentN), sentinels.get(SentSumDl)) match {
+      case (Some(n), Some(s)) => (n, s)
+      case _ =>
+        val p = SidecarIO.readParams(spark, s"$path/params")
+        val n = p.getAs[Long]("n_docs")
+        (n, SidecarIO.param[Long](p, "sum_dl")
+          .getOrElse(math.round(p.getAs[Double]("avgdl") * n)))
+    }
 
   private def sentinelsOf(dfSide: DataFrame): Map[String, Long] =
     dfSide.filter(isSentinel(col("tok"))).collect()
@@ -321,18 +325,7 @@ object Search {
       SidecarFold(sentinels, dfSide, sentinels.get(SentBatch))
     } { st =>
       val sentinels = st.params
-      // base stats: sentinels when present (a prior fold), else the
-      // build-time params
-      val (curN, curSum) = (sentinels.get(SentN),
-          sentinels.get(SentSumDl)) match {
-        case (Some(n), Some(s)) => (n, s)
-        case _ =>
-          val p = readParams(spark, path)
-          val n = p.getAs[Long]("n_docs")
-          (n, if (p.isNullAt(p.fieldIndex("sum_dl")))
-              math.round(p.getAs[Double]("avgdl") * n)
-            else p.getAs[Long]("sum_dl"))
-      }
+      val (curN, curSum) = collectionStats(spark, path, sentinels)
       // deltas above the guard are orphans of a crashed fold, never
       // served (readIndex serves ids up to the guard only): drop them
       // before this fold writes its own
@@ -441,15 +434,9 @@ object Search {
         .filter(col("batch").isin(live: _*))
         .select(col("tok"), col("doc_id"), col("tf"), col("dl")))
     else base
-    val (n, avgDl) = (sentinels.get(SentN),
-        sentinels.get(SentSumDl)) match {
-      case (Some(nv), Some(sv)) => (nv, sv.toDouble / nv)
-      case _ =>
-        val p = readParams(spark, path)
-        (p.getAs[Long]("n_docs"), p.getAs[Double]("avgdl"))
-    }
+    val (n, sumDl) = collectionStats(spark, path, sentinels)
     Bm25Index(postings, dfSide.filter(!isSentinel(col("tok"))),
-      n, avgDl)
+      n, sumDl.toDouble / n)
   }
 
   /** Fold the accumulated stream deltas back into one range-partitioned

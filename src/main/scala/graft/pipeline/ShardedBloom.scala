@@ -147,19 +147,17 @@ object ShardedBloom {
     */
   def writeFilter(df: DataFrame, keyCol: String, numShards: Int,
       bitsPerShard: Int, numHashes: Int, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     SidecarIO.atomicOverwriteDf(
       sketch(df, keyCol, numShards, bitsPerShard, numHashes),
       s"$path/words", Seq("shard"))
-    Seq((numShards, bitsPerShard, numHashes, keyCol))
-      .toDF("num_shards", "bits_per_shard", "num_hashes", "key_col")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(df.sparkSession, s"$path/params",
+      "num_shards" -> numShards, "bits_per_shard" -> bitsPerShard,
+      "num_hashes" -> numHashes, "key_col" -> keyCol)
   }
 
-  private def readParams(spark: SparkSession,
-      path: String): (Int, Int, Int) = {
-    val p = spark.read.json(s"$path/params").head()
+  /** The stored (numShards, bitsPerShard, numHashes). */
+  private def shapeOf(spark: SparkSession, path: String): (Int, Int, Int) = {
+    val p = SidecarIO.readParams(spark, s"$path/params")
     (p.getAs[Long]("num_shards").toInt,
       p.getAs[Long]("bits_per_shard").toInt,
       p.getAs[Long]("num_hashes").toInt)
@@ -167,7 +165,7 @@ object ShardedBloom {
 
   /** The stored filter as a resident handle (the broadcastable tier). */
   def readFilter(spark: SparkSession, path: String): ShardedBloomFilter = {
-    val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
+    val (numShards, bitsPerShard, numHashes) = shapeOf(spark, path)
     densify(readWords(spark, path), numShards, bitsPerShard, numHashes)
   }
 
@@ -188,7 +186,7 @@ object ShardedBloom {
       carried: Option[SidecarFold[(Int, Int, Int)]] = None)
       : SidecarFold[(Int, Int, Int)] =
     SidecarFold.fold(s"$path/words", None, carried, Seq("shard")) {
-      SidecarFold(readParams(spark, path), readWords(spark, path), None)
+      SidecarFold(shapeOf(spark, path), readWords(spark, path), None)
     } { st =>
       val (numShards, bitsPerShard, numHashes) = st.params
       Some(st.copy(stored = st.stored
@@ -221,7 +219,7 @@ object ShardedBloom {
   private def probeViaSidecar(spark: SparkSession, path: String,
       fact: DataFrame, factKey: String,
       keepMatches: Boolean): DataFrame = {
-    val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
+    val (numShards, bitsPerShard, numHashes) = shapeOf(spark, path)
     val words = readWords(spark, path)
 
     val keyed = fact

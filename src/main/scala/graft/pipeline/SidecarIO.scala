@@ -1,13 +1,18 @@
 package graft.pipeline
 
+import graft.schema.{JArray, JBool, JDouble, JLong, JNull, JObject, JString,
+  JValue, Json}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
-import scala.util.Try
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType,
+  DoubleType, LongType, StringType, StructField, StructType}
+import scala.util.{Try, Using}
 
 /** The one crash-safe replace for persisted sidecars and indexes
   * (bloom words, count-min cells, BM25 df, vector-index bases, …):
@@ -70,6 +75,91 @@ object SidecarIO {
     fs.delete(prev, true)
     ()
   }
+
+  /** Replace the params sidecar `dir` (an index's or sketch's operating
+    * point) with one JSON line of `fields`, in the caller's order, through
+    * [[swap]]: no Spark job, and a crash mid-rewrite leaves the old row
+    * readable. The layout is the one a one-partition `write.json` leaves
+    * (a dir holding one part file), so `spark.read.json` still reads it.
+    * Values: Int/Long, Float/Double, String, Boolean, and arrays or seqs
+    * of those; a float is written as its shortest decimal, as Spark's
+    * writer does.
+    */
+  def writeParams(spark: SparkSession, dir: String,
+      fields: (String, Any)*): Unit = {
+    def json(v: Any): JValue = v match {
+      case n: Int => JLong(n.toLong)
+      case n: Long => JLong(n)
+      case f: Float => JDouble(java.lang.Float.toString(f).toDouble)
+      case d: Double => JDouble(d)
+      case s: String => JString(s)
+      case b: Boolean => JBool(b)
+      case a: Array[_] => json(a.toSeq)
+      case xs: Iterable[_] => JArray(xs.iterator.map(json).toVector)
+    }
+    val line = Json.write(JObject(fields.map { case (k, v) => k -> json(v) }
+      .toVector), canonical = false) + "\n"
+    swap(spark, dir) { tmp =>
+      val out = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(new Path(tmp, "part-00000.json"))
+      try out.write(line.getBytes(UTF_8)) finally out.close()
+    }
+  }
+
+  /** The params row under `dir` (or its `_prev` generation after a
+    * crashed swap), read on the driver with no Spark job: the first
+    * non-blank line of its visible files, in name order. Typed as
+    * Spark's JSON inference types it, so rows written by
+    * `spark.write.json` and by [[writeParams]] read alike: fields sorted
+    * by name, integral numbers `LongType`, fractional `DoubleType`
+    * (an array mixing both: `DoubleType`), strings, booleans, arrays of
+    * those. A field missing from the line is missing from the schema.
+    */
+  def readParams(spark: SparkSession, dir: String): Row = {
+    val path = liveOrPrev(spark, dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing dir fails in the listing, naming it
+    val line = fs.listStatus(path).filter(st => st.isFile && visible(st))
+      .sortBy(_.getPath.getName).iterator.flatMap(st => Using.resource(
+        fs.open(st.getPath))(in => new String(in.readAllBytes(), UTF_8))
+        .linesIterator).find(_.trim.nonEmpty)
+    val fields = line.map(Json.parse).collect {
+      case JObject(kvs) => kvs.sortBy(_._1)
+    }.getOrElse(sys.error(s"no params row under $path: $line"))
+    def typeOf(v: JValue): DataType = v match {
+      case JLong(_) => LongType
+      case JDouble(_) => DoubleType
+      case JBool(_) => BooleanType
+      case JArray(xs) =>
+        ArrayType(xs.map(typeOf).reduceOption(merge).getOrElse(StringType))
+      case _ => StringType
+    }
+    def merge(a: DataType, b: DataType): DataType = (a, b) match {
+      case (ArrayType(x, _), ArrayType(y, _)) => ArrayType(merge(x, y))
+      case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
+      case _ => require(a == b, s"params array under $path mixes $a, $b"); a
+    }
+    // a nested object, which no params writer writes, fails the match
+    def value(v: JValue, t: DataType): Any = (v, t) match {
+      case (JLong(n), DoubleType) => n.toDouble
+      case (JArray(xs), ArrayType(e, _)) => xs.map(value(_, e))
+      case (JLong(x), _) => x
+      case (JDouble(x), _) => x
+      case (JString(x), _) => x
+      case (JBool(x), _) => x
+      case (JNull, _) => null
+    }
+    val schema = StructType(fields.map { case (k, v) =>
+      StructField(k, typeOf(v)) })
+    new GenericRowWithSchema(fields.zip(schema.fields).map {
+      case ((_, v), f) => value(v, f.dataType) }.toArray, schema)
+  }
+
+  /** Field `name` of a [[readParams]] row, if it has one (a row written
+    * by an older build may lack fields that were added since).
+    */
+  def param[A](params: Row, name: String): Option[A] =
+    Option.when(params.schema.fieldNames.contains(name))(params.getAs[A](name))
 
   /** Run `body` (typically a `spark.read.parquet` whose file listing
     * happens eagerly) with DRIVER-SIDE file listing for partitioned
@@ -137,17 +227,18 @@ object SidecarIO {
     if (!fs.exists(destPath) && fs.exists(prev)) prev else destPath
   }
 
+  /** The names Spark's file index skips: `.crc`, `_SUCCESS`, `_tmp`… */
+  private def visible(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith(".") && !(n.startsWith("_") && !n.contains('='))
+  }
+
   /** The Spark row schema stored in the footer of the first data file
     * under `dir` (recursing into partition directories), if any.
     */
   private def footerSchema(dir: Path,
       conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
     val fs = dir.getFileSystem(conf)
-    // the names Spark's file index skips: `.crc`, `_SUCCESS`, `_tmp`…
-    def visible(st: FileStatus) = {
-      val n = st.getPath.getName
-      !n.startsWith(".") && !(n.startsWith("_") && !n.contains('='))
-    }
     // listStatus, not listFiles: the located statuses listFiles builds
     // load each file's permissions, which a local filesystem does by
     // forking a process per file

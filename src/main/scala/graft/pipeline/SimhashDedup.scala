@@ -295,8 +295,6 @@ private[pipeline] trait SimhashDedupOps extends Serializable { this: Dedup.type 
   def writeSimhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3, blocks: Int = -1,
       probeBits: Int = 1, maxBucketSize: Int = 1000): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // validate the operating point BEFORE ANY write: the envelope needs
     // only the corpus row count (one cheap count pass, no kernel), and a
     // refused pinned point must leave the target path UNTOUCHED — an
@@ -314,9 +312,9 @@ private[pipeline] trait SimhashDedupOps extends Serializable { this: Dedup.type 
       .write.mode("overwrite").parquet(s"$path/fingerprints")
     shingleSets(corpus, idCol, textCol, shingleSize)
       .write.mode("overwrite").parquet(s"$path/shingles")
-    Seq((shingleSize, b, probeBits, maxBucketSize, nDocs))
-      .toDF("shingleSize", "blocks", "probeBits", "maxBucketSize", "nDocs")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(corpus.sparkSession, s"$path/params",
+      "shingleSize" -> shingleSize, "blocks" -> b, "probeBits" -> probeBits,
+      "maxBucketSize" -> maxBucketSize, "nDocs" -> nDocs)
   }
 
   /** Incremental SimHash near-dup pairs of a NEW batch against a
@@ -340,11 +338,10 @@ private[pipeline] trait SimhashDedupOps extends Serializable { this: Dedup.type 
       verifyRankCap: Int = 0,
       scope: CacheScope = CacheScope.session): DataFrame = {
     val sc = CacheScope.resolve(scope, spark)
-    val params = spark.read.json(s"$path/params").head()
+    val params = SidecarIO.readParams(spark, s"$path/params")
+    // pre-params-sidecar index layouts lack the legacy fields
     def stored(field: String, legacy: Long): Long =
-      if (params.schema.fieldNames.contains(field))
-        params.getAs[Long](field)
-      else legacy // pre-params-sidecar index layouts
+      SidecarIO.param[Long](params, field).getOrElse(legacy)
     val shingleSize = params.getAs[Long]("shingleSize").toInt
     val b = if (blocks > 0) blocks else stored("blocks", 4L).toInt
     val pb = if (probeBits >= 0) probeBits else stored("probeBits", 1L).toInt

@@ -201,21 +201,6 @@ object Similarity {
     sig
   }
 
-  /** `nBits`-bit random-hyperplane signature as a Column (declarative
-    * reference form of [[signatureJ]]; same planes, same bits).
-    */
-  def hyperplaneBucket(v: Column, dim: Int, nBits: Int,
-      seed: Long = 42L): Column = {
-    val bits = (0 until nBits).map { j =>
-      val plane = planeSign(dim, j, seed).map(s => if (s) 1.0 else -1.0).toSeq
-      val d = aggregate(
-        zip_with(v, typedLit(plane), (x, p) => x.cast("double") * p),
-        lit(0.0), (acc, x) => acc + x)
-      when(d >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Shared per-query ranking tail: rank by (cosine desc, id) — the tie
     * order every oracle contract depends on — and keep the top `k`.
     */
@@ -545,12 +530,12 @@ object Similarity {
     // probe point) ride with the centroids so a reader can VALIDATE a
     // query workload against the index identity instead of silently
     // scoring mismatched vectors
-    Seq((centroids.map(_.toSeq).toSeq, dim, centroids.length, "cosine",
-        quantize, derived.map(_._1).getOrElse(-1),
-        derived.map(_._2).getOrElse(-1.0), recallK))
-      .toDF("centroids", "dim", "k", "metric", "quantized",
-        "nProbe", "nProbeRecall", "recallK").coalesce(1)
-      .write.mode("overwrite").json(s"$path.centroids")
+    SidecarIO.writeParams(spark, s"$path.centroids",
+      "centroids" -> centroids, "dim" -> dim, "k" -> centroids.length,
+      "metric" -> "cosine", "quantized" -> quantize,
+      "nProbe" -> derived.map(_._1).getOrElse(-1),
+      "nProbeRecall" -> derived.map(_._2).getOrElse(-1.0),
+      "recallK" -> recallK)
   }
 
   /** Fold a batch of NEW vectors into a persisted IVF index at batch
@@ -567,10 +552,10 @@ object Similarity {
       path: String, batch: DataFrame, idCol: String, vecCol: String,
       batchId: Option[Long] = None): Unit = {
     import spark.implicits._
-    val sideRow = spark.read.json(s"$path.centroids").head()
-    val quantized = sideRow.schema.fieldNames.contains("quantized") &&
-      sideRow.getAs[Boolean]("quantized")
-    val centroids = readIvfCentroids(spark, path)
+    val sideRow = SidecarIO.readParams(spark, s"$path.centroids")
+    val quantized = SidecarIO.param[Boolean](sideRow, "quantized")
+      .contains(true)
+    val centroids = centroidsOf(sideRow)
     val assigned = ivfAssignDf(batch, idCol, vecCol, centroids)
     val stored =
       if (!quantized) assigned
@@ -592,14 +577,13 @@ object Similarity {
 
   /** Reload the centroid matrix written by [[writeIvfIndex]]. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Float]] = {
-    import spark.implicits._
-    // JSON numbers arrive as doubles; float→double→float is exact
-    spark.read.json(s"$path.centroids")
-      .select(col("centroids"))
-      .as[Seq[Seq[Double]]].head()
+      path: String): Array[Array[Float]] =
+    centroidsOf(SidecarIO.readParams(spark, s"$path.centroids"))
+
+  // JSON numbers arrive as doubles; float→double→float is exact
+  private def centroidsOf(side: org.apache.spark.sql.Row) =
+    side.getAs[Seq[Seq[Double]]]("centroids")
       .map(_.map(_.toFloat).toArray).toArray
-  }
 
   /** Top-k against a persisted IVF index: the `cid` filter prunes to the
     * probed cell directories before any row is read. The index's stored
@@ -632,23 +616,12 @@ object Similarity {
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedIvfIndex = {
-    val side = spark.read.json(s"$path.centroids")
-    // ONE driver job over the sidecar per load: every field probe
-    // reads this row
-    val sideRow = side.head()
-    val nProbeDefault =
-      if (side.schema.fieldNames.contains("nProbe") &&
-          sideRow.getAs[Long]("nProbe") > 0)
-        sideRow.getAs[Long]("nProbe").toInt
-      else 2
-    val storedDim =
-      if (side.schema.fieldNames.contains("dim"))
-        Some(sideRow.getAs[Long]("dim").toInt)
-      else None
-    val quantized = side.schema.fieldNames.contains("quantized") &&
-      sideRow.getAs[Boolean]("quantized")
-    LoadedIvfIndex(path, nProbeDefault, storedDim, quantized,
-      spark.sparkContext.broadcast(readIvfCentroids(spark, path)),
+    val sideRow = SidecarIO.readParams(spark, s"$path.centroids")
+    def stored(name: String) = SidecarIO.param[Long](sideRow, name)
+    LoadedIvfIndex(path, stored("nProbe").filter(_ > 0).fold(2)(_.toInt),
+      stored("dim").map(_.toInt),
+      SidecarIO.param[Boolean](sideRow, "quantized").contains(true),
+      spark.sparkContext.broadcast(centroidsOf(sideRow)),
       IndexDeltas.rows(spark, path))
   }
 

@@ -44,12 +44,10 @@ object Sketches {
     */
   def writeSketches(df: DataFrame, cols: Seq[String], path: String,
       lgK: Int = 12): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     SidecarIO.atomicOverwriteDf(columnSketches(df, cols, lgK),
       s"$path/sketches")
-    Seq((lgK, cols.mkString(","))).toDF("lgK", "cols").coalesce(1)
-      .write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(df.sparkSession, s"$path/params", "lgK" -> lgK,
+      "cols" -> cols.mkString(","))
   }
 
   /** Fold a new batch into the stored sketches — batch-sized cost, no
@@ -61,7 +59,7 @@ object Sketches {
   def updateSketches(spark: SparkSession, path: String, batch: DataFrame,
       carried: Option[SidecarFold[Row]] = None): SidecarFold[Row] =
     SidecarFold.fold(s"$path/sketches", None, carried) {
-      SidecarFold(spark.read.json(s"$path/params").head(),
+      SidecarFold(SidecarIO.readParams(spark, s"$path/params"),
         SidecarIO.readWithFallback(spark, s"$path/sketches"), None)
     } { st =>
       Some(st.copy(stored = st.stored

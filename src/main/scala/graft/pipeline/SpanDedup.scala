@@ -167,7 +167,6 @@ object SpanDedup {
   def writeSpanIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, windowTokens: Int): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     windowHashes(corpus, idCol, textCol, windowTokens)
       .select(col("h")).distinct()
       .withColumn("hp", substring(col("h"), 1, 2))
@@ -177,8 +176,8 @@ object SpanDedup {
     IndexDeltas.clearDeltas(spark, s"$path/hashes")
     // row count, not a distinct-id shuffle (see writeLineIndex)
     val nDocs = corpus.count()
-    Seq((windowTokens, nDocs)).toDF("windowTokens", "corpusDocs")
-      .coalesce(1).write.mode("overwrite").json(s"$path/params")
+    SidecarIO.writeParams(spark, s"$path/params",
+      "windowTokens" -> windowTokens, "corpusDocs" -> nDocs)
   }
 
   /** Roll the span index FORWARD with a batch's window hashes — the
@@ -195,8 +194,8 @@ object SpanDedup {
   def appendToSpanIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = -1L): Unit = {
-    val w0 = spark.read.json(s"$path/params")
-      .head().getAs[Long]("windowTokens").toInt
+    val w0 = SidecarIO.readParams(spark, s"$path/params")
+      .getAs[Long]("windowTokens").toInt
     val id = if (batchId >= 0) batchId
       else IndexDeltas.nextAppendId(spark, s"$path/hashes")
     val fresh = windowHashes(batch, idCol, textCol, w0)
@@ -239,8 +238,8 @@ object SpanDedup {
   def loadSpanIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedSpanIndex =
     LoadedSpanIndex(
-      spark.read.json(s"$path/params")
-        .head().getAs[Long]("windowTokens").toInt,
+      SidecarIO.readParams(spark, s"$path/params")
+        .getAs[Long]("windowTokens").toInt,
       // base + live delta batches (appendToSpanIndex); distinct across
       // generations by the append-time anti-join
       IndexDeltas.rows(spark, s"$path/hashes")

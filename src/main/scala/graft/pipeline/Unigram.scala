@@ -187,9 +187,6 @@ object UnigramKernel {
 
 object Unigram {
 
-  /** Quantize a probability to a micro-nat cost (−ln p, rounded). */
-  def costMicro(p: Double): Long = math.round(-math.log(p) * 1e6)
-
   /** Dense ids in (cost asc, piece asc) order — deterministic, shared
     * by [[train]] and planted fixtures.
     */

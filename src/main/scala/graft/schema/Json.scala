@@ -57,29 +57,37 @@ object Json {
     case t => throw new IllegalArgumentException(s"Unexpected JSON token: $t")
   }
 
-  def write(v: JValue): String = {
+  /** `canonical = false` keeps a whole double's fraction (`1.0`), so a
+    * reader that types numbers by their text (Spark's JSON inference)
+    * reads a double back.
+    */
+  def write(v: JValue, canonical: Boolean = true): String = {
     val sw = new StringWriter()
     val g = factory.createGenerator(sw)
-    writeTo(g, v)
+    writeTo(g, v, canonical)
     g.close()
     sw.toString
   }
 
-  private def writeTo(g: JsonGenerator, v: JValue): Unit = v match {
+  private def writeTo(g: JsonGenerator, v: JValue,
+      canonical: Boolean): Unit = v match {
     case JNull => g.writeNull()
     case JBool(b) => g.writeBoolean(b)
     case JLong(n) => g.writeNumber(n)
     case JDouble(d) =>
       // Canonical form: integral doubles print as integers (matches the
       // reference's Lua number rendering for canonical JSON).
-      if (d.isWhole && math.abs(d) < 1e15) g.writeNumber(d.toLong)
+      if (canonical && d.isWhole && math.abs(d) < 1e15)
+        g.writeNumber(d.toLong)
       else g.writeNumber(d)
     case JString(s) => g.writeString(s)
     case JArray(items) =>
-      g.writeStartArray(); items.foreach(writeTo(g, _)); g.writeEndArray()
+      g.writeStartArray(); items.foreach(writeTo(g, _, canonical))
+      g.writeEndArray()
     case JObject(fields) =>
       g.writeStartObject()
-      fields.foreach { case (k, fv) => g.writeFieldName(k); writeTo(g, fv) }
+      fields.foreach { case (k, fv) =>
+        g.writeFieldName(k); writeTo(g, fv, canonical) }
       g.writeEndObject()
   }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.schema.{AvroSchema}
-import graft.ops.{Compiled, Validate}
-import graft.functions.AvroBinary
+import graft.ops.Compiled
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
@@ -23,21 +21,6 @@ object StreamOps {
   def flattenStream(c: Compiled, stream: DataFrame): DataFrame =
     stream.select(c.flattenColumns(name => stream(name)): _*)
 
-  /** Route a stream into (valid, quarantine) by schema validation. Returns
-    * the annotated stream; split with `.filter($"_valid")` /
-    * `.filter(!$"_valid")` into separate sinks.
-    */
-  def validateStream(schema: AvroSchema, stream: DataFrame): DataFrame =
-    Validate(schema, stream)
-
-  /** Decode an Avro-binary column on a stream with reader-schema evolution
-    * (the streaming ingest shape: bytes from a log/bus → typed columns).
-    */
-  def decodeStream(stream: DataFrame, binCol: String, writer: AvroSchema,
-      reader: AvroSchema): DataFrame =
-    stream.select(AvroBinary.fromAvroBinary(col(binCol), writer, reader)
-      .as("r")).select("r.*")
-
   /** Token-window document chunking on a stream
     * ([[graft.pipeline.Chunking.chunkDocuments]] — the RAG-ingestion
     * prep step running continuously): the operator is stateless per row
@@ -50,15 +33,6 @@ object StreamOps {
   def chunkStream(stream: DataFrame, idCol: String, textCol: String,
       size: Int, overlap: Int = 0): DataFrame =
     graft.pipeline.Chunking.chunkDocuments(stream, idCol, textCol,
-      size, overlap)
-
-  /** [[chunkStream]]'s sentence-boundary sibling
-    * ([[graft.pipeline.Chunking.chunkBySentences]]) — the same
-    * stateless-per-row argument applies verbatim.
-    */
-  def chunkSentencesStream(stream: DataFrame, idCol: String,
-      textCol: String, size: Int, overlap: Int = 0): DataFrame =
-    graft.pipeline.Chunking.chunkBySentences(stream, idCol, textCol,
       size, overlap)
 
   /** [[probeIndexPerBatch]] against a persisted BM25 index

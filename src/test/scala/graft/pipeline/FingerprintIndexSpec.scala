@@ -34,19 +34,21 @@ class FingerprintIndexSpec extends AnyFunSuite with SparkTestBase {
     df.select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
       .toSet
 
-  test("index write runs 2 Spark jobs and a handle load 1, at both " +
+  test("index write runs 1 Spark job and a handle load none, at both " +
       "widths") {
     for ((fp, grid) <- Seq(Fingerprint.image64 -> 8,
         Fingerprint.imageWide -> 16)) {
       val path = tmp("graft_fpjobs")
       val (_, writeJobs) = graft.JobCount.of(spark)(Multimodal.writeIndex(
         gridBlobs(grid, 0L until 40L), "doc_id", "blob", fp, path))
-      // the fingerprint parquet and the params row; nothing re-reads
-      assert(writeJobs == 2, s"${fp.name} index write ran $writeJobs jobs")
+      // the fingerprint parquet; the params row is written on the
+      // driver and nothing re-reads
+      assert(writeJobs == 1, s"${fp.name} index write ran $writeJobs jobs")
       val (ix, loadJobs) = graft.JobCount.of(spark)(
         Multimodal.loadIndex(spark, path, fp))
-      // the params row only: the fingerprint schema is a footer read
-      assert(loadJobs == 1, s"${fp.name} handle load ran $loadJobs jobs")
+      // the params row and the fingerprint schema (a footer) are driver
+      // reads
+      assert(loadJobs == 0, s"${fp.name} handle load ran $loadJobs jobs")
       assert(ix.corpus.count() == 40)
     }
   }

@@ -338,17 +338,17 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
     assert(got.nonEmpty)
   }
 
-  test("job budget: a fresh index's params read with their schema: " +
-      "readIndex 2 jobs, the first fold 6") {
+  test("job budget: a fresh index's params read with no job: " +
+      "readIndex 1 job, the first fold 5") {
     val path = foldedIndex(docs, Nil)
     // the sentinel collect finds no fold stats, so the build-time params
-    // are read: one job, where an inferred read costs two
+    // are read, on the driver
     val (_, readJobs) = jobsOf(Search.readIndex(spark, path))
-    assert(readJobs <= 2, s"readIndex ran $readJobs jobs; budget 2")
-    // the sentinel collect, the params, then the fold's delta write and
-    // df swap, two jobs each
+    assert(readJobs <= 1, s"readIndex ran $readJobs jobs; budget 1")
+    // the sentinel collect, then the fold's delta write and df swap, two
+    // jobs each
     val (_, foldJobs) = jobsOf(Search.updateIndex(spark, path, more,
       "doc_id", "text", Some(0L)))
-    assert(foldJobs <= 6, s"first fold ran $foldJobs jobs; budget 6")
+    assert(foldJobs <= 5, s"first fold ran $foldJobs jobs; budget 5")
   }
 }

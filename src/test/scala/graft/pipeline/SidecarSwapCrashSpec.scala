@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[CrashingFileSystem.arm]]ed. Steps inside the parquet commit
   * protocol's scratch dirs (`_temporary`, `.spark-staging-*`) are not
   * counted: a crash there only leaves garbage inside a `_tmp` dir, the
-  * case the crash before that dir's rename already covers.
+  * case the crash before that dir's rename already covers. Armed with a
+  * scope, it counts every step on a path containing the scope, commit
+  * protocol steps included: a write straight into the live dir has no
+  * `_tmp` dir to hold that garbage.
   */
 class CrashingFileSystem extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = URI.create("crashfs:///")
@@ -34,12 +37,20 @@ object CrashingFileSystem {
 
   private var crashAt = 0
   private var steps = 0
+  private var scope = ""
 
-  /** Crash at the `k`-th counted step from now; 0 never crashes. */
-  def arm(k: Int): Unit = synchronized { crashAt = k; steps = 0 }
+  /** Crash at the `k`-th counted step from now (with a `scope`: the
+    * k-th step on a path containing it); 0 never crashes.
+    */
+  def arm(k: Int, scope: String = ""): Unit = synchronized {
+    crashAt = k; steps = 0; this.scope = scope
+  }
 
   private def step(what: String): Unit = synchronized {
-    if (!what.contains("_temporary") && !what.contains(".spark-staging")) {
+    val counted =
+      if (scope.nonEmpty) what.contains(scope)
+      else !what.contains("_temporary") && !what.contains(".spark-staging")
+    if (counted) {
       steps += 1
       if (steps == crashAt) { crashAt = 0; throw new Crash(what) }
     }
@@ -56,7 +67,9 @@ object CrashingFileSystem {
   * the sidecar there. The bloom and HLL folds are crashed the way a
   * stream runs them: the crashing fold carries the state of the fold
   * before it, and the recovery folds start from disk, as a stream's
-  * next fold does once a failure dropped its state.
+  * next fold does once a failure dropped its state. An exact-index
+  * append rewrites the index's params in place; every step of that
+  * rewrite is crashed too.
   */
 class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -64,11 +77,16 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
   spark.sparkContext.hadoopConfiguration
     .set("fs.crashfs.impl", classOf[CrashingFileSystem].getName)
 
-  /** Runs `fold` with a crash at step `k`: true when it crashed. */
-  private def crashed(k: Int)(fold: => Unit): Boolean = {
-    CrashingFileSystem.arm(k)
+  /** Runs `fold` with a crash at step `k` of `scope`: true when it
+    * crashed (a crash in a Spark task arrives as the cause of a task
+    * failure).
+    */
+  private def crashed(k: Int, scope: String)(fold: => Unit): Boolean = {
+    CrashingFileSystem.arm(k, scope)
     try { fold; false }
-    catch { case _: CrashingFileSystem.Crash => true }
+    catch { case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).exists(_.isInstanceOf[CrashingFileSystem.Crash])
+      => true }
     finally CrashingFileSystem.arm(0)
   }
 
@@ -90,11 +108,13 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
 
   /** [[crashEveryStep]] where the crashed fold is `crashing(path)`,
     * returned after any uncrashed setup on the fresh copy `path` (a
-    * fold whose state it carries); the recovery folds are `fold`.
+    * fold whose state it carries); the recovery folds are `fold`. Only
+    * the steps on paths containing `scope` are crashed.
     */
   private def crashEveryStep[G](template: String,
       crashing: String => (() => Unit), fold: String => Unit,
-      generation: String => G, genN: G, genN1: G): Unit = {
+      generation: String => G, genN: G, genN1: G,
+      scope: String = ""): Unit = {
     def seesNOrN1(path: String, where: String): Unit = {
       val g = try generation(path) catch {
         case e: Exception => fail(s"nothing readable after $where", e)
@@ -109,7 +129,7 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
     while ({
       val path = fresh(template)
       val run = crashing(path)
-      val crash = crashed(k1)(run())
+      val crash = crashed(k1, scope)(run())
       if (crash) {
         seesNOrN1(path, s"crash at step $k1")
         recovers(path, s"crash at step $k1")
@@ -117,8 +137,8 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
         while ({
           val twice = fresh(template)
           val first = crashing(twice)
-          assert(crashed(k1)(first()))
-          val again = crashed(k2)(fold(twice))
+          assert(crashed(k1, scope)(first()))
+          val again = crashed(k2, scope)(fold(twice))
           if (again) {
             val where = s"crash at step $k1, then at recovery step $k2"
             seesNOrN1(twice, where)
@@ -218,5 +238,24 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
         s"$path/sketches")),
       estimates(Sketches.columnSketches(keys(0, 60), Seq("key"))),
       estimates(Sketches.columnSketches(keys(0, 80), Seq("key"))))
+  }
+
+  test("exact index: every single and double crash of the params " +
+      "rewrite in an append leaves generation N or N+1 readable") {
+    // 20 base contents, 10 new in a, 10 new in b (31-39 and 0)
+    val docs = (from: Long, to: Long) => (from to to).map(i =>
+      (i, s"content ${i % 40}")).toDF("doc_id", "text")
+    val (base, a, b) = (docs(1, 20), docs(21, 30), docs(31, 60))
+    val template = Files.createTempDirectory("exact_template").toString
+    Dedup.writeExactIndex(base, "doc_id", "text", template)
+    Dedup.appendToExactIndex(spark, template, a, "doc_id", "text", 0L)
+    def params(path: String) = {
+      val p = SidecarIO.readParams(spark, s"$path/params")
+      (p.getAs[Long]("distinctContents"), p.getAs[Double]("fpp"))
+    }
+    val append = (path: String) => Dedup.appendToExactIndex(spark,
+      path, b, "doc_id", "text", 1L)
+    crashEveryStep(template, path => () => append(path), append, params,
+      (30L, 0.01), (40L, 0.01), scope = "/params")
   }
 }

@@ -670,13 +670,19 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       grid(BottomK.sketch(docs, "doc_id", "n_chars", k = 50)))
   }
 
-  test("stream-maintained ivf-pq index serves bit-identical to a " +
-      "build-at-once index") {
-    import graft.pipeline.ProductQuant
+  /** Writes a vector index over the first 20 of 60 rows, appends the
+    * rest through `stream` in two micro-batches, and checks that it
+    * serves what an index written at once over all 60 rows serves.
+    */
+  private def appendStreamServesBuildAtOnce(family: String,
+      write: (org.apache.spark.sql.DataFrame, String) => Unit,
+      stream: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row],
+      serve: (String, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame): Unit = {
     val dirBase = java.nio.file.Files
-      .createTempDirectory("ivfpqstream").toString
-    val coarse = ProductQuant.plantedCoarse(4, 8)
-    val cb = ProductQuant.plantedCodebook(2, 4, 8)
+      .createTempDirectory("appendstream").toString
     val rows = (0 until 60).map { i =>
       (i.toLong, Seq.tabulate(8)(j =>
         (((i * 13 + j * 7) % 32) - 16).toFloat))
@@ -685,27 +691,52 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       .select($"id", $"v".cast("array<float>").as("v"))
     val queries = corpus.filter($"id" < 3)
       .select($"id".as("qid"), $"v".as("qv"))
-    def serve(path: String) =
-      ProductQuant.ivfPqTopKFromIndex(spark, path, queries, "qid", "qv",
-        k = 5, nProbe = 4)
-        .collect().map(_.toSeq.toList).sortBy(_.toString).toList
+    def served(path: String) = serve(path, queries)
+      .collect().map(_.toSeq.toList).sortBy(_.toString).toList
 
     val once = dirBase + "/once"
-    ProductQuant.writeIvfPqIndex(corpus, "id", "v", coarse, cb, once,
-      residuals = true)
-
+    write(corpus, once)
     val maintained = dirBase + "/maintained"
-    ProductQuant.writeIvfPqIndex(corpus.filter($"id" < 20), "id", "v",
-      coarse, cb, maintained, residuals = true)
+    write(corpus.filter($"id" < 20), maintained)
     val input = MemoryStream[(Long, Seq[Float])](spark)
-    val q = StreamOps.ivfPqAppendStream(
-      input.toDF().toDF("id", "v"), maintained, "id", "v").start()
+    val q = stream(input.toDF().toDF("id", "v"), maintained).start()
     Seq(rows.slice(20, 40), rows.drop(40)).foreach { w =>
       input.addData(w); q.processAllAvailable()
     }
     q.stop()
-    assert(serve(maintained) == serve(once),
-      "stream-maintained index diverges from build-at-once")
+    assert(served(maintained) == served(once),
+      s"stream-maintained $family index diverges from build-at-once")
+  }
+
+  test("stream-maintained ivf-pq index serves bit-identical to a " +
+      "build-at-once index") {
+    import graft.pipeline.ProductQuant
+    val coarse = ProductQuant.plantedCoarse(4, 8)
+    val cb = ProductQuant.plantedCodebook(2, 4, 8)
+    appendStreamServesBuildAtOnce("ivf-pq",
+      (df, path) => ProductQuant.writeIvfPqIndex(df, "id", "v", coarse, cb,
+        path, residuals = true),
+      StreamOps.ivfPqAppendStream(_, _, "id", "v"),
+      ProductQuant.ivfPqTopKFromIndex(spark, _, _, "qid", "qv", k = 5,
+        nProbe = 4))
+  }
+
+  test("stream-maintained ivf and pq indexes serve bit-identical to " +
+      "build-at-once indexes") {
+    import graft.pipeline.{ProductQuant, Similarity}
+    val centroids = ProductQuant.plantedCoarse(4, 8)
+    appendStreamServesBuildAtOnce("quantized ivf",
+      (df, path) => Similarity.writeIvfIndex(df, "id", "v", centroids,
+        path, quantize = true, recallSampleN = 0),
+      StreamOps.ivfAppendStream(_, _, "id", "v"),
+      Similarity.ivfTopKFromIndex(spark, _, _, "qid", "qv", k = 5,
+        nProbe = 4))
+    val cb = ProductQuant.plantedCodebook(2, 4, 8)
+    appendStreamServesBuildAtOnce("pq",
+      (df, path) => ProductQuant.writePqIndex(df, "id", "v", cb, path,
+        recallSampleN = 0),
+      StreamOps.pqAppendStream(_, _, "id", "v"),
+      ProductQuant.adcTopKFromIndex(spark, _, _, "qid", "qv", k = 5))
   }
 
   test("stream-maintained hll sidecar == direct fold; replay no-op; " +
@@ -846,6 +877,42 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     (1 to 40).foreach { i =>
       assert(est("t" + i) >= i.toLong, s"t$i underestimated")
     }
+  }
+
+  test("count-min restart replay: a batch re-run from a real checkpoint " +
+      "after its commit was lost is counted once") {
+    import graft.pipeline.CountMin
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("cmsrestart")
+    val (feed, ckpt, path) = (dir.resolve("feed"), dir.resolve("ckpt"),
+      dir.resolve("cms").toString)
+    Files.createDirectories(feed)
+    CountMin.writeSketch(Seq.empty[String].toDF("tok"), "tok",
+      depth = 4, width = 256, path)
+    val toks = for { i <- 1 to 40; _ <- 1 to i } yield "t" + i
+    val files = toks.grouped(205).toSeq
+    def land(i: Int): Unit = Files.write(feed.resolve(s"part-$i.txt"),
+      files(i).mkString("", "\n", "\n").getBytes("UTF-8"))
+    def run(landing: Seq[Int]): Unit = {
+      val q = StreamOps.cmsUpdateStream(
+        spark.readStream.text(feed.toString).toDF("tok"), path)
+        .option("checkpointLocation", ckpt.toString).start()
+      try landing.foreach { i => land(i); q.processAllAvailable() }
+      finally q.stop()
+    }
+    // batches 0 and 1, then lose batch 1's commit: the restarted stream
+    // re-runs batch 1 under its id before it takes new files
+    run(Seq(0, 1))
+    val commits = ckpt.resolve("commits")
+    Seq("1", ".1.crc").foreach(f => Files.delete(commits.resolve(f)))
+    run(Seq(2, 3))
+    assert(files.size == 4)
+    assert(Files.exists(commits.resolve("1")), "batch 1 was not re-run")
+    val grid = (df: org.apache.spark.sql.DataFrame) => df
+      .select("r", "c", "cnt").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toList
+    assert(grid(CountMin.readSketch(spark, path)._1) ==
+      grid(CountMin.sketch(toks.toDF("tok"), "tok", 4, 256)))
   }
 
   /** A fresh minhash index over the sf0.001 corpus; [[probeBatch]] is
