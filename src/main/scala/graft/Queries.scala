@@ -2040,13 +2040,6 @@ object Queries {
         path
     })
 
-  /** Start the foreachBatch streaming writer `mk(outDir)` (whose sink
-    * must APPEND each micro-batch's result to `outDir` as parquet),
-    * drain ALL available input, stop, and read back the accumulated
-    * result. Output/checkpoint dirs are fresh per call: the bench
-    * re-evaluates query bodies, and a streaming query resuming a prior
-    * run's checkpoint would skip every batch and time an empty stream.
-    */
   /** A FRESH sidecar path per call: maintenance queries fold batches
     * into persisted state, and additive sidecars (count-min) would
     * double-count if a re-evaluated bench body reused the previous
@@ -2072,6 +2065,13 @@ object Queries {
     try q.processAllAvailable() finally q.stop()
   }
 
+  /** Start the foreachBatch streaming writer `mk(outDir)` (whose sink
+    * must APPEND each micro-batch's result to `outDir` as parquet),
+    * drain ALL available input, stop, and read back the accumulated
+    * result. Output/checkpoint dirs are fresh per call: the bench
+    * re-evaluates query bodies, and a streaming query resuming a prior
+    * run's checkpoint would skip every batch and time an empty stream.
+    */
   def collectStream(s: SparkSession)(
       mk: String => org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row]): DataFrame = {
@@ -6025,7 +6025,7 @@ object Queries {
     // ---- STREAMING exact-dedup against the persisted content-hash
     // index, oracle-checked end to end: a 4-file parquet directory
     // replayed as FOUR micro-batches (maxFilesPerTrigger=1), each
-    // probing the index through StreamOps.dedupStreamAgainstExactIndex
+    // probing the loaded index through StreamOps.probeStream
     // and appending its decision frame to the sink. The planted batch
     // makes every row's decision BATCHING-INDEPENDENT so the batch
     // oracle stays exact under any micro-batch split: corpus copies
@@ -6047,10 +6047,10 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.dedupStreamAgainstExactIndex(
-          stream, idxPath, "doc_id", "text") { (res, _) =>
-            res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            Dedup.loadExactIndex(_, idxPath)) { (ix, batch, _) =>
+          Dedup.exactKeepFromLoaded(ix, batch, "doc_id", "text")
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("doc_id")
     }): Q, Some("""
       WITH batch AS (
@@ -6075,7 +6075,7 @@ object Queries {
     // curation fixture arrives as ONE micro-batch (no
     // maxFilesPerTrigger — the file source puts all available files in
     // the first batch), runs the composed curate audit inside
-    // foreachBatch (StreamOps.curateStream — per-batch CacheScope,
+    // foreachBatch (StreamOps.probeStream — per-batch CacheScope,
     // released after the sink), and the accumulated sink frame must
     // equal the BATCH operator's oracle row for row. Dedup scope is
     // batch-internal by the streaming contract, so whole-corpus batch
@@ -6087,19 +6087,19 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.curateStream(stream, "doc_id", "text",
-          graft.pipeline.Curation.Config(nearDup =
-            graft.pipeline.Curation.NearDupStrategy.Ngram(
-              maxDocFreq = 0))) { (res, _) =>
-            res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream, _ => ()) {
+          (_, batch, scope) => graft.pipeline.Curation.curate(batch,
+            "doc_id", "text", graft.pipeline.Curation.Config(nearDup =
+              graft.pipeline.Curation.NearDupStrategy.Ngram(
+                maxDocFreq = 0)), scope)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("doc_id")
     }): Q, Some(curationOracleSql("en", 40, 0.8))),
 
     // ---- STREAMING ANN retrieval against the persisted IVF index,
     // oracle-checked: 3 micro-batches of query vectors (one per input
     // file) each probe the partition-pruned index through
-    // StreamOps.annStreamAgainstIvfIndex; per-query top-1 is row-local
+    // StreamOps.probeStream; per-query top-1 is row-local
     // (fixed index, fixed query → same answer in any batch), so the
     // exact brute-force oracle holds under any batch split. Scaled-self
     // queries keep the rank-level contract exact (self cosine 1.0 vs
@@ -6116,10 +6116,11 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.annStreamAgainstIvfIndex(stream,
-          idxPath, "qid", "qv", k = 1, nProbe = 1) { (res, _) =>
-            res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            Similarity.loadIvfIndex(_, idxPath)) { (ix, batch, _) =>
+          Similarity.ivfTopKFromLoaded(ix, batch, "qid", "qv", k = 1,
+            nProbe = 1)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.select("query_id", "id", "rank").orderBy("query_id", "rank")
     }): Q, Some("""
       WITH q AS (SELECT vec_id AS query_id,
@@ -6142,7 +6143,7 @@ object Queries {
     // ---- STREAMING duplicated-SPAN detection against the persisted
     // window index, oracle-checked: the prefix-tagged corpus copies of
     // span_index_documents arrive as THREE micro-batches, each running
-    // its own window pass through StreamOps.spanStreamAgainstIndex.
+    // its own window pass through StreamOps.probeStream.
     // BATCHING-INDEPENDENT by construction, so the whole-batch oracle
     // is exact under any micro-batch split: every batch window either
     // contains the doc's unique 'bq<id>' lead token (occurs once per
@@ -6164,10 +6165,11 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.spanStreamAgainstIndex(
-          stream, idxPath, "doc_id", "text") { (res, _) =>
-            res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.SpanDedup.loadSpanIndex(_, idxPath)) {
+          (ix, batch, scope) => graft.pipeline.SpanDedup
+            .duplicateSpansFromLoaded(ix, batch, "doc_id", "text", scope)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.withColumnRenamed("id", "doc_id")
         .orderBy("doc_id", "span_start")
     }): Q, Some("""
@@ -6219,7 +6221,7 @@ object Queries {
     // index, oracle-checked: the re-encoded (+50000) and perturbed
     // (+60000) copies arrive as ONE micro-batch (the curate_stream
     // convention) probing the index through
-    // StreamOps.fingerprintDedupStreamAgainstIndex, so the streaming
+    // StreamOps.probeStream, so the streaming
     // contract equals the batch loaded-index contract exactly and the
     // image_dedup_index_pairs oracle applies verbatim. One batch on
     // purpose: the synthetic low-entropy fingerprints make ~17k
@@ -6236,11 +6238,13 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
-          stream, idxPath, graft.pipeline.Multimodal.Fingerprint.image64,
-          "doc_id", "blob", maxHamming = 8) {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.Multimodal.loadIndex(_, idxPath,
+              graft.pipeline.Multimodal.Fingerprint.image64)) {
+          (ix, batch, scope) => graft.pipeline.Multimodal
+            .dedupPairsFromLoaded(ix, batch, "doc_id", "blob",
+              maxHamming = 8, scope = scope)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -6279,8 +6283,8 @@ object Queries {
       ORDER BY id_a, id_b""")),
 
     // ---- STREAMING WIDE image near-dup: image_stream_pairs at the
-    // 256-bit operating point (fingerprintDedupStreamAgainstIndex over
-    // the wide index) — the stream tier that stays selective where the
+    // 256-bit operating point (the same probeStream over the wide
+    // index) — the stream tier that stays selective where the
     // 64-bit bands saturate (image_stream_pairs timed out at sf1; this
     // is its scale replacement). One micro-batch, same rationale. ----
     ("image_stream_pairs_wide", ((s: SparkSession, dir: String) => {
@@ -6292,11 +6296,13 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
-          stream, idxPath, graft.pipeline.Multimodal.Fingerprint.imageWide,
-          "doc_id", "blob", maxHamming = 8) {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.Multimodal.loadIndex(_, idxPath,
+              graft.pipeline.Multimodal.Fingerprint.imageWide)) {
+          (ix, batch, scope) => graft.pipeline.Multimodal
+            .dedupPairsFromLoaded(ix, batch, "doc_id", "blob",
+              maxHamming = 8, scope = scope)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -6367,7 +6373,7 @@ object Queries {
     // ---- STREAMING boilerplate line removal against the persisted
     // line-frequency index, oracle-checked: the multi-line fixture
     // arrives as THREE micro-batches, each rewritten through
-    // StreamOps.lineDedupStreamAgainstIndex at read-time
+    // StreamOps.probeStream at read-time
     // maxDocFreq=10. Row-local given the index — the boilerplate set
     // is fixed at probe time and reassembly is per-document — so the
     // whole-corpus oracle (identical to line_index_documents) is exact
@@ -6380,10 +6386,11 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.lineDedupStreamAgainstIndex(
-          stream, idxPath, "doc_id", "text", maxDocFreq = 10) {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            LineDedup.loadLineIndex(_, idxPath)) { (ix, batch, _) =>
+          LineDedup.dropBoilerplateFromLoaded(ix, batch, "doc_id", "text",
+            maxDocFreq = 10)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("doc_id")
     }): Q, Some(s"""
       WITH lined AS ($linedDocsSql),
@@ -6448,7 +6455,7 @@ object Queries {
 
     // ---- STREAMING as-of join: the same clicks arrive as THREE
     // micro-batches and join per batch against the STATIC deduped
-    // purchase series (StreamOps.asofStreamAgainstStatic). Every match
+    // purchase series (StreamOps.probeStream). Every match
     // is row-local given the fixed right side, so the whole-batch
     // oracle (identical to asof_join_events) is exact under any
     // micro-batch split — batching independence by construction, no
@@ -6469,10 +6476,10 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.asofStreamAgainstStatic(
-          stream, purchases, Seq("user_id"), "c_ts", "p_ts") {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream, _ => purchases) {
+          (right, batch, _) => graft.pipeline.Temporal.asofJoin(batch,
+            right, Seq("user_id"), "c_ts", "p_ts")
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.select(col("c_id"), col("user_id"),
           unix_micros(col("c_ts").cast("timestamp")).as("c_us"),
           col("p_id"), col("p_value"),
@@ -6761,7 +6768,7 @@ object Queries {
 
     // ---- STREAMING LM scoring against the persisted model sidecar:
     // the documents arrive as THREE micro-batches, each scored through
-    // StreamOps.lmScoreStreamAgainstModel. Row-local given the fixed
+    // StreamOps.probeStream. Row-local given the fixed
     // model, so the whole-corpus oracle (identical to
     // lm_score_documents) is exact under any split. ----
     ("lm_stream_documents", ((s: SparkSession, dir: String) => {
@@ -6772,10 +6779,11 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.lmScoreStreamAgainstModel(
-          stream, modelPath, "doc_id", "text") {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.LanguageModel.readLm(_, modelPath)) {
+          (m, batch, scope) => graft.pipeline.LanguageModel.score(batch,
+            "doc_id", "text", m, scope = scope)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("doc_id")
     }): Q, Some(lmScoreSql)),
 
@@ -7272,7 +7280,7 @@ object Queries {
 
     // ---- STREAMING BM25 serving: the same query workload arrives as
     // THREE micro-batches, each probing the persisted sidecar
-    // (StreamOps.bm25SearchStream). Each query's top-k depends on that
+    // (StreamOps.probeStream). Each query's top-k depends on that
     // query + the fixed index alone, so the accumulated sink equals
     // the one-shot batch search — the whole-workload oracle is exact
     // under any micro-batch split. ----
@@ -7285,10 +7293,10 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.bm25SearchStream(stream, idxPath,
-          "qid", "qtext", k = 5) { (res, _) =>
-            res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.Search.readIndex(_, idxPath)) { (ix, batch, _) =>
+          graft.pipeline.Search.search(ix, batch, "qid", "qtext", k = 5)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("query_id", "rank")
     }): Q, Some(bm25TopkSql)),
 
@@ -7328,7 +7336,7 @@ object Queries {
     // hybrid_search_documents arrives as THREE micro-batches of
     // (qtext, qvec) queries, each probing the persisted BM25 sidecar +
     // the vector corpus and fusing via RRF
-    // (StreamOps.hybridSearchStream). Each query's fused top-k depends
+    // (StreamOps.probeStream). Each query's fused top-k depends
     // on that query + the two fixed corpora alone, so the accumulated
     // sink equals the one-shot batch fusion under any micro-batch
     // split — the oracle is the batch hybrid oracle verbatim (the
@@ -7345,11 +7353,14 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.hybridSearchStream(stream, idxPath,
-          s"$dir/embeddings.parquet", "vec_id", "embedding",
-          "qid", "qtext", "qv", kEach = 20, k0 = 60, topK = 5) {
-            (res, _) => res.write.mode("append").parquet(outDir)
-          }
+        graft.streaming.StreamOps.probeStream(stream, ss =>
+            (graft.pipeline.Search.readIndex(ss, idxPath),
+              ss.read.parquet(s"$dir/embeddings.parquet"))) {
+          case ((ix, vecs), batch, _) =>
+            graft.pipeline.Hybrid.hybridSearchFromLoaded(ix, vecs,
+              "vec_id", "embedding", batch, "qid", "qtext", "qv",
+              kEach = 20, k0 = 60, topK = 5)
+        } { (res, _) => res.write.mode("append").parquet(outDir) }
       }.orderBy("query_id", "rank")
     }): Q, Some(hybridTopkSql)),
 
@@ -7581,10 +7592,12 @@ object Queries {
         dimKeys.filter(col("c_custkey") % 100 === 0), "c_custkey",
         numShards = 8, bitsPerShard = 8192, numHashes = 5, path)
       drainStream(s) {
-        graft.streaming.StreamOps.shardedBloomUpdateStream(
-          s.readStream.schema(s.read.parquet(inDir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(inDir),
-          path, "c_custkey")
+        graft.streaming.StreamOps.foldStream[(Int, Int, Int)](
+            s.readStream.schema(s.read.parquet(inDir).schema)
+              .option("maxFilesPerTrigger", 1).parquet(inDir)) {
+          (batch, _, st) => ShardedBloom.updateFilter(batch.sparkSession,
+            path, batch, "c_custkey", st)
+        }
       }
       ShardedBloom.prunedJoinViaSidecar(s, path,
           rd(s, dir, "orders"), dimKeys, "o_custkey", "c_custkey")
@@ -7634,10 +7647,12 @@ object Queries {
       Bloom.writeFilter(dimKeys.limit(0), "c_custkey",
         numBits = 1 << 16, numHashes = 7, path)
       drainStream(s) {
-        graft.streaming.StreamOps.bloomUpdateStream(
-          s.readStream.schema(s.read.parquet(inDir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(inDir),
-          path, "c_custkey")
+        graft.streaming.StreamOps.foldStream[org.apache.spark.sql.Row](
+            s.readStream.schema(s.read.parquet(inDir).schema)
+              .option("maxFilesPerTrigger", 1).parquet(inDir)) {
+          (batch, _, st) => Bloom.updateFilter(batch.sparkSession, path,
+            batch, "c_custkey", st)
+        }
       }
       Bloom.prunedJoinWith(Bloom.readFilter(s, path),
           rd(s, dir, "orders"), dimKeys, "o_custkey", "c_custkey")
@@ -7915,8 +7930,11 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.kmeansAssignStream(stream, modelPath,
-            "embedding") { (res, _) =>
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.KMeans.readModel(_, modelPath)) {
+          (model, batch, _) =>
+            graft.pipeline.KMeans.assign(batch, "embedding", model)
+        } { (res, _) =>
           res.select(col("vec_id"), col("cid"))
             .write.mode("append").parquet(outDir)
         }
@@ -8013,9 +8031,13 @@ object Queries {
       val stream = s.readStream.schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       collectStream(s) { outDir =>
-        graft.streaming.StreamOps.driftStream(stream, refPath,
-            driftSpecs) { (res, _) =>
-          res.write.mode("append").parquet(outDir)
+        graft.streaming.StreamOps.probeStream(stream,
+            graft.pipeline.Drift.loadReference(_, refPath)) {
+          (ref, batch, _) =>
+            graft.pipeline.Drift.reportAgainstLoaded(batch, driftSpecs, ref)
+        } { (res, batchId) =>
+          res.select(lit(batchId).as("batch_id"), col("*"))
+            .write.mode("append").parquet(outDir)
         }
       }.select(col("batch_id"), col("column"), col("ref_rows"),
           col("cur_rows"), col("tvd_num"), col("tvd_den"))

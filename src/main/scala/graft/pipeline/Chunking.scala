@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * row per chunk. MAP-ONLY at any scale: no shuffle, no window, no
   * state; output partitioning inherits the input's, so a downstream
   * embedding pass or ANN index build sees the same layout. Because it
-  * is stateless per row it runs UNCHANGED on a micro-batch stream —
-  * [[graft.streaming.StreamOps.chunkStream]] is that member, and
-  * StreamOpsSpec pins stream-vs-batch parity.
+  * is stateless per row, [[chunkDocuments]] applies UNCHANGED to a
+  * micro-batch stream frame, and StreamOpsSpec pins stream-vs-batch
+  * parity.
   */
 object Chunking {
 

@@ -86,7 +86,9 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
     * record its size and `fpp`. fpp = 1 is the documented opt-out: size
     * the bit array for ONE item and insert all n, saturating it to
     * always-positive — a bytes-sized blob whose probe prunes nothing (no
-    * false negatives possible).
+    * false negatives possible). Both are replaced through
+    * [[SidecarIO.swap]], so an append that crashes mid-rewrite leaves
+    * the previous bloom and params readable.
     */
   private def writeBloom(idx: DataFrame, path: String, fpp: Double): Unit = {
     val spark = idx.sparkSession
@@ -97,8 +99,8 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
         if (fpp >= 1) 0.5 else fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    Seq(Tuple1(bos.toByteArray)).toDF("bloom").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/bloom")
+    SidecarIO.atomicOverwriteDf(Seq(Tuple1(bos.toByteArray)).toDF("bloom"),
+      s"$path/bloom")
     SidecarIO.writeParams(spark, s"$path/params", "distinctContents" -> n,
       "fpp" -> fpp)
   }
@@ -134,7 +136,7 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
   def loadExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedExactIndex =
     LoadedExactIndex(path,
-      spark.read.parquet(s"$path/bloom")
+      SidecarIO.readWithFallback(spark, s"$path/bloom")
         .head().getAs[Array[Byte]]("bloom"),
       dropTombstoned(spark, path,
         IndexDeltas.rows(spark, s"$path/hashes"), "h"))

@@ -95,4 +95,25 @@ object Hybrid {
       .select(col("query_id"), col("id"), col("rank"))
     rrfFuse(Seq(bm, ann), "query_id", "id", "rank", k0, topK)
   }
+
+  /** [[hybridSearch]] of one query batch against fixed corpora: the
+    * BM25 leg probes the persisted index `ix` ([[Search.readIndex]]),
+    * the ANN leg is exact cosine over `vecs(vecIdCol, vecCol)`. Each
+    * query's fused list depends on that query and the two corpora alone,
+    * so a stream of query batches
+    * ([[graft.streaming.StreamOps.probeStream]]) accumulates to the
+    * one-shot fusion over the same query set under any micro-batch
+    * placement.
+    */
+  def hybridSearchFromLoaded(ix: Search.Bm25Index, vecs: DataFrame,
+      vecIdCol: String, vecCol: String, queries: DataFrame,
+      qIdCol: String, qTextCol: String, qVecCol: String, kEach: Int,
+      k0: Int = 60, topK: Int = 10): DataFrame = {
+    val bm = Search.search(ix, queries, qIdCol, qTextCol, kEach)
+      .select(col("query_id"), col("doc_id").as("id"), col("rank"))
+    val ann = Similarity.bruteForceTopK(vecs, vecIdCol, vecCol,
+        queries.select(col(qIdCol), col(qVecCol)), qIdCol, qVecCol, kEach)
+      .select(col("query_id"), col("id"), col("rank"))
+    rrfFuse(Seq(bm, ann), "query_id", "id", "rank", k0, topK)
+  }
 }

@@ -285,11 +285,11 @@ private[pipeline] trait MinhashDedupOps extends Serializable { this: Dedup.type 
   /** The fixed per-index state [[minhashPairsFromIndex]] re-derives on
     * every call: params sidecar plus the tombstone-reduced corpus
     * bucket/shingle frames, for probes at skew cap `maxBucketSize`. A
-    * continuously probing stream loads this ONCE at stream construction
-    * (the [[graft.streaming.StreamOps]] kmeans-model discipline) instead
-    * of paying the params read + index frame setup per micro-batch; the
-    * index is fixed for the handle's lifetime — fold the index, reload
-    * the handle. `cBuckets` holds the corpus bucket rows outside the
+    * continuously probing stream loads this ONCE, at its first batch
+    * ([[graft.streaming.StreamOps.probeStream]]), instead of paying the
+    * params read + index frame setup per micro-batch; the index is
+    * fixed for the handle's lifetime — fold the index, reload the
+    * handle. `cBuckets` holds the corpus bucket rows outside the
     * buckets whose corpus count alone exceeds the cap, and
     * `cBucketCounts` the per-bucket corpus counts the guard adds batch
     * counts to (see [[incrementalBucketPairs]]).

@@ -1321,10 +1321,10 @@ object Multimodal {
 
   /** Fixed per-index state of a fingerprint probe: the fingerprint, the
     * stored banding point and the tombstone-reduced corpus fingerprint
-    * frame. A serving stream loads this ONCE at stream construction
-    * instead of paying the params read + index frame setup per
-    * micro-batch (the kmeans-model discipline); fold/rebuild the index
-    * → reload.
+    * frame. A serving stream loads this ONCE, at its first batch
+    * ([[graft.streaming.StreamOps.probeStream]]), instead of paying the
+    * params read + index frame setup per micro-batch; fold/rebuild the
+    * index → reload.
     */
   final case class LoadedFpIndex(fp: Fingerprint, blocks: Int,
     probeBits: Int, corpus: DataFrame)

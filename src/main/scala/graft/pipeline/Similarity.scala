@@ -604,10 +604,10 @@ object Similarity {
 
   /** Fixed per-index state of the IVF probe: sidecar fields, the
     * broadcast coarse centroids, and the base∪delta row frame. A
-    * streaming ANN server loads this ONCE at stream construction (the
-    * kmeans-model discipline) instead of re-reading the centroid
-    * sidecar and re-listing deltas every micro-batch; append to the
-    * index → reload the handle.
+    * streaming ANN server loads this ONCE, at its first batch
+    * ([[graft.streaming.StreamOps.probeStream]]), instead of re-reading
+    * the centroid sidecar and re-listing deltas every micro-batch;
+    * append to the index → reload the handle.
     */
   final case class LoadedIvfIndex(path: String, nProbeDefault: Int,
     storedDim: Option[Int], quantized: Boolean,

@@ -36,8 +36,8 @@ object Quarantine {
   def quarantinePath(basePath: String): String = s"$basePath/_valid=false"
 
   /** Streaming variant — same single-pass partitioned routing on a
-    * `writeStream` (validate upstream with
-    * [[graft.streaming.StreamOps]]).
+    * `writeStream` (validate upstream: the batch validation Columns
+    * apply to a stream frame unchanged).
     */
   def writeStreamPartitioned(validated: DataFrame, basePath: String,
       checkpointDir: String): StreamingQuery =

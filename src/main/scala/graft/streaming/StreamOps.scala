@@ -1,104 +1,108 @@
 package graft.streaming
 
-import graft.ops.Compiled
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.pipeline.{CacheScope, CountMin, Dedup, Search, SidecarFold}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface: the same schema operators applied to
-  * unbounded data (`readStream` → transform → `writeStream`), plus the
-  * stateful building blocks a streaming ingest pipeline needs. The
-  * reference is batch-only (SURVEY §2.4) — this is net-new Spark-native
-  * capability, built on watermarks + windowed aggregation +
+/** Structured Streaming surface. The reference is batch-only (SURVEY
+  * §2.4) and compiles a schema pair once to apply it many times; the
+  * stream tier's form of that idea is "load a handle once, apply it per
+  * micro-batch" ([[probeStream]]) and "fold each micro-batch into a
+  * persisted sidecar" ([[foldStream]]). Stateless batch operators
+  * (flatten, chunking) apply to a stream frame as they are. Beside the
+  * two combinators sit the stateful streaming aggregations a streaming
+  * ingest pipeline needs: watermarks, windowed and session aggregation,
   * `flatMapGroupsWithState`.
   */
 object StreamOps {
 
-  /** Flatten a stream through a compiled (writer, reader) pair — identical
-    * Column tree to the batch path; Catalyst treats it the same.
+  /** Apply `probe` to every micro-batch against a fixed handle `load`
+    * builds: a persisted index, model or reference sidecar, or any fixed
+    * input. The handle loads ONCE, lazily at the first batch, so building
+    * the writer runs no Spark job and needs no sidecar on disk yet; a
+    * failed load fails that batch, naming what it read. The handle is
+    * fixed for the stream's lifetime: fold the sidecar offline and
+    * restart the stream to serve the new generation.
+    *
+    * Each micro-batch runs in its own [[CacheScope]], released after
+    * `sink` returns, so an unbounded stream holds at most one batch of
+    * intermediates; `sink` must take its terminal action (write or
+    * collect) before returning. A probe whose rows depend on the batch
+    * row and the handle alone (search, ANN, scoring, an as-of join
+    * against a static right side) accumulates to the one-shot batch
+    * result under any micro-batch placement. Dedup probes compare each
+    * batch with the index and with itself; pairs BETWEEN micro-batches
+    * are not compared, so append each batch to the index offline if
+    * cross-batch dedup matters.
     */
-  def flattenStream(c: Compiled, stream: DataFrame): DataFrame =
-    stream.select(c.flattenColumns(name => stream(name)): _*)
-
-  /** Token-window document chunking on a stream
-    * ([[graft.pipeline.Chunking.chunkDocuments]] — the RAG-ingestion
-    * prep step running continuously): the operator is stateless per row
-    * (map-only split → sequence → posexplode, no shuffle, no state), so
-    * the IDENTICAL Column tree applies to a micro-batch stream and the
-    * accumulated output is independent of micro-batch placement BY
-    * CONSTRUCTION — each document's chunks depend on that document
-    * alone.
-    */
-  def chunkStream(stream: DataFrame, idCol: String, textCol: String,
-      size: Int, overlap: Int = 0): DataFrame =
-    graft.pipeline.Chunking.chunkDocuments(stream, idCol, textCol,
-      size, overlap)
-
-  /** [[probeIndexPerBatch]] against a persisted BM25 index
-    * ([[graft.pipeline.Search.writeIndex]]) — the serving loop of the
-    * sparse-retrieval family: every micro-batch of QUERIES probes the
-    * sidecar and `sink` receives that batch's top-k rows. Each query's
-    * result depends on that query and the fixed index alone, so the
-    * accumulated output equals the one-shot batch search over the same
-    * query set regardless of micro-batch placement (StreamOpsSpec and
-    * `bm25_stream_queries` pin it).
-    */
-  def bm25SearchStream(stream: DataFrame, indexPath: String,
-      queryIdCol: String, queryTextCol: String, k: Int)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // index handle loads ONCE, lazily at the first batch (the
-    // kmeans-model / drift-reference discipline): the sidecar stats
-    // collect + file listing otherwise repeat every micro-batch. The
-    // index is fixed for the stream's lifetime — fold it offline and
-    // restart the stream to serve the new generation.
-    lazy val ix = graft.pipeline.Search.readIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.Search.search(ix, batch, queryIdCol,
-        queryTextCol, k)
+  def probeStream[H](stream: DataFrame, load: SparkSession => H)(
+      probe: (H, DataFrame, CacheScope) => DataFrame)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    lazy val handle = load(stream.sparkSession)
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      CacheScope.withScope { scope =>
+        sink(probe(handle, batch, scope), batchId)
+      }
     }
   }
 
-  /** HYBRID serving loop: every micro-batch of queries (text + vector
-    * per query id) probes the persisted BM25 sidecar AND the vector
-    * corpus at `vecPath` (exact-cosine brute force — swap in an IVF
-    * index probe upstream of [[graft.pipeline.Hybrid.rrfFuse]] when
-    * approximate is acceptable), and `sink` receives that batch's
-    * RRF-fused top-k. Each query's fused list depends on that query +
-    * the two fixed corpora alone, so the accumulated output equals the
-    * one-shot batch fusion over the same query set under any
-    * micro-batch placement — the property `hybrid_stream_queries` pins
-    * against the batch oracle.
+  /** Drive a mergeable-sidecar fold ([[SidecarFold]]) from a stream:
+    * each micro-batch folds with the state the previous fold returned,
+    * so the params, the stored side and the replay guard ride in memory
+    * instead of being re-read per micro-batch. A failed fold drops the
+    * state, and the next fold re-reads disk.
+    *
+    * `foreachBatch` is at-least-once under checkpoint recovery, and the
+    * batch id passed to `fold` is what makes a replay safe. Idempotent
+    * merges (bloom OR, bottom-k union, HLL register max) need no guard:
+    * a replayed batch adds nothing. Additive merges (count-min cells,
+    * BM25 df and collection stats) persist the last folded id inside
+    * the same atomic swap and skip any batch at or below it.
     */
-  def hybridSearchStream(stream: DataFrame, bm25IndexPath: String,
-      vecPath: String, vecIdCol: String, vecCol: String,
-      queryIdCol: String, queryTextCol: String, queryVecCol: String,
-      kEach: Int, k0: Int = 60, topK: Int = 10)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    // both fixed corpora load once per stream (see bm25SearchStream):
-    // the BM25 sidecar handle and the vector frame's schema/file
-    // listing otherwise repeat every micro-batch
-    lazy val ix = graft.pipeline.Search.readIndex(
-      stream.sparkSession, bm25IndexPath)
-    lazy val vecs = stream.sparkSession.read.parquet(vecPath)
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      val bm = graft.pipeline.Search.search(ix, batch, queryIdCol,
-          queryTextCol, kEach)
-        .select(col("query_id"), col("doc_id").as("id"), col("rank"))
-      val ann = graft.pipeline.Similarity.bruteForceTopK(
-          vecs, vecIdCol, vecCol,
-          batch.select(col(queryIdCol), col(queryVecCol)),
-          queryIdCol, queryVecCol, kEach)
-        .select(col("query_id"), col("id"), col("rank"))
-      graft.pipeline.Hybrid.rrfFuse(Seq(bm, ann), "query_id", "id",
-        "rank", k0, topK)
+  def foldStream[P](stream: DataFrame)(
+      fold: (DataFrame, Long, Option[SidecarFold[P]]) => SidecarFold[P])
+      : DataStreamWriter[Row] = {
+    var st: Option[SidecarFold[P]] = None
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      try st = Some(fold(batch, batchId, st))
+      catch { case e: Throwable => st = None; throw e }
     }
+  }
+
+  /** [[probeStream]] against a persisted MINHASH text index
+    * ([[graft.pipeline.Dedup.writeMinhashIndex]]): `sink` receives each
+    * micro-batch's near-dup pairs (batch id first).
+    */
+  def dedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
+      idCol: String, textCol: String, threshold: Double = 0.8)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    probeStream(stream, Dedup.loadMinhashIndex(_, indexPath)) {
+      (ix, batch, scope) => Dedup.minhashPairsFromLoaded(ix, batch, idCol,
+        textCol, threshold, scope)
+    }(sink)
+
+  /** [[foldStream]] of new documents into a persisted BM25 index
+    * ([[graft.pipeline.Search.updateIndex]]); the maintained index
+    * serves scores bit-identical to a build-at-once index.
+    */
+  def bm25UpdateStream(stream: DataFrame, path: String,
+      idCol: String, textCol: String): DataStreamWriter[Row] =
+    foldStream[Map[String, Long]](stream) { (batch, batchId, st) =>
+      Search.updateIndex(batch.sparkSession, path, batch,
+        idCol, textCol, batchId = Some(batchId), carried = st)
+    }
+
+  /** [[foldStream]] into a persisted count-min grid
+    * ([[graft.pipeline.CountMin.updateSketch]]); the maintained grid
+    * equals the build-at-once sketch bit-for-bit.
+    */
+  def cmsUpdateStream(stream: DataFrame, path: String)
+      : DataStreamWriter[Row] =
+    foldStream[Row](stream) { (batch, batchId, st) =>
+      CountMin.updateSketch(batch.sparkSession, path, batch,
+        batchId = Some(batchId), carried = st)
     }
 
   /** Windowed per-key event counts + value sums with a watermark — the
@@ -112,521 +116,6 @@ object StreamOps {
       .groupBy(window(col(tsCol), windowLen), col(keyCol))
       .agg(count(lit(1)).as("n_events"),
         sum(col(valueCol)).as("sum_value"))
-
-  /** The daily-driver streaming dedup shape, shared across the four
-    * persisted-index families: every micro-batch probes the index and
-    * `sink` receives that batch's near-dup pairs — the `*PairsFromIndex`
-    * contract per micro-batch (batch-vs-corpus + batch-internal pairs,
-    * batch id first; pairs BETWEEN different micro-batches are not
-    * compared — append each batch to the index offline if cross-batch
-    * dedup matters). Each micro-batch runs in its own [[graft.pipeline
-    * .CacheScope]], released after `sink` returns, so an unbounded
-    * stream holds at most one batch of dedup intermediates; `sink` must
-    * take its terminal action (write/collect) before returning.
-    */
-  private def probeIndexPerBatch(stream: DataFrame)(
-      sink: (DataFrame, Long) => Unit)(
-      probe: (DataFrame, graft.pipeline.CacheScope) => DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.pipeline.CacheScope.withScope { scope =>
-        sink(probe(batch, scope), batchId)
-      }
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted MINHASH text index
-    * ([[graft.pipeline.Dedup.writeMinhashIndex]]); signature params come
-    * from the index sidecar.
-    */
-  def dedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String, threshold: Double = 0.8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    // handle loads once per stream (see bm25SearchStream)
-    lazy val ix = graft.pipeline.Dedup.loadMinhashIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Dedup.minhashPairsFromLoaded(ix, batch, idCol,
-        textCol, threshold, scope = scope)
-    }
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted SIMHASH index
-    * ([[graft.pipeline.Dedup.writeSimhashIndex]]); each batch probes at
-    * the operating point the index derived and stored at build time
-    * (blocks/probeBits/cap), so a stream can never freeze a saturated
-    * point past its envelope.
-    */
-  def dedupStreamAgainstSimhashIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String, threshold: Double = 0.8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Dedup.simhashPairsFromIndex(batch.sparkSession,
-        indexPath, batch, idCol, textCol, threshold, scope = scope)
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted N-GRAM shingle index
-    * ([[graft.pipeline.Dedup.writeNgramIndex]]); the stop-shingle skew
-    * guard stays at its scale-safe default (`maxDocFreq`).
-    */
-  def dedupStreamAgainstNgramIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String, threshold: Double = 0.8,
-      maxDocFreq: Int = 1000)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Dedup.ngramJaccardPairsFromIndex(batch.sparkSession,
-        indexPath, batch, idCol, textCol, threshold, maxDocFreq,
-        scope = scope)
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted EMBEDDING hyperplane-LSH
-    * index ([[graft.pipeline.Dedup.writeEmbeddingIndex]]); dim/nBits/
-    * tables come from the index sidecar.
-    */
-  def dedupStreamAgainstEmbeddingIndex(stream: DataFrame, indexPath: String,
-      idCol: String, vecCol: String, threshold: Double = 0.95)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Dedup.embeddingPairsFromIndex(batch.sparkSession,
-        indexPath, batch, idCol, vecCol, threshold, scope = scope)
-    }
-
-  /** [[probeIndexPerBatch]] for ANN retrieval: each micro-batch of query
-    * vectors probes a persisted IVF index ([[graft.pipeline.Similarity
-    * .writeIvfIndex]]) and `sink` receives that batch's exact-cosine
-    * top-k — the streaming retrieval shape (queries arrive continuously,
-    * the corpus index is fixed; partition pruning still reads only the
-    * probed cell directories per batch). The index's stored `dim` is
-    * validated against every batch, same as the batch contract.
-    */
-  def annStreamAgainstIvfIndex(stream: DataFrame, indexPath: String,
-      qIdCol: String, qVecCol: String, k: Int, nProbe: Int = -1)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    // handle (sidecar fields + broadcast centroids + delta listing)
-    // loads once per stream (see bm25SearchStream)
-    lazy val ix = graft.pipeline.Similarity.loadIvfIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.Similarity.ivfTopKFromLoaded(ix, batch, qIdCol,
-        qVecCol, k, nProbe)
-    }
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted fingerprint index
-    * ([[graft.pipeline.Multimodal.writeIndex]]): each micro-batch of
-    * blobs decodes, fingerprints with `fp`, and probes the corpus
-    * fingerprint scan at the index's stored banding point; `sink`
-    * receives that batch's `(id_a, id_b, hamming)` near-dup pairs. The
-    * handle loads once per stream, at the first batch; an index of
-    * another width or fingerprint fails that batch.
-    */
-  def fingerprintDedupStreamAgainstIndex(stream: DataFrame,
-      indexPath: String, fp: graft.pipeline.Multimodal.Fingerprint,
-      idCol: String, blobCol: String, maxHamming: Int = 8)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.Multimodal.loadIndex(
-      stream.sparkSession, indexPath, fp)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Multimodal.dedupPairsFromLoaded(ix, batch,
-        idCol, blobCol, maxHamming, scope = scope)
-    }
-    }
-
-  /** Per-micro-batch corpus CURATION — the composed daily-driver on a
-    * stream: each arriving batch runs the full `Curation.curate` audit
-    * (language → quality → exact dedup → near-dup → split) WITHIN the
-    * batch, and `sink` receives the per-document audit frame. Dedup
-    * scope is batch-internal (the streaming analog of the batch
-    * operator's corpus = the batch); to also dedup against a persisted
-    * corpus, compose with [[dedupStreamAgainstIndex]] on the curated
-    * output. Each batch runs in its own released CacheScope.
-    */
-  def curateStream(stream: DataFrame, idCol: String, textCol: String,
-      cfg: graft.pipeline.Curation.Config =
-        graft.pipeline.Curation.Config())(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.Curation.curate(batch, idCol, textCol, cfg, scope)
-    }
-
-  /** [[probeIndexPerBatch]] against a persisted EXACT content-hash index
-    * ([[graft.pipeline.Dedup.writeExactIndex]]): `sink` receives each
-    * micro-batch's `(id, status, keep_id)` decision frame; the bloom
-    * sidecar makes the clean-batch case a map-only pass.
-    */
-  def dedupStreamAgainstExactIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    // bloom bytes + tombstone-reduced hash frame load once per stream
-    lazy val ix = graft.pipeline.Dedup.loadExactIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.Dedup.exactKeepFromLoaded(ix, batch, idCol,
-        textCol)
-    }
-    }
-
-  /** Per-micro-batch BOILERPLATE LINE REMOVAL against a persisted
-    * [[graft.pipeline.LineDedup.writeLineIndex]] corpus: each arriving
-    * batch is rewritten with corpus-frequent lines stripped
-    * (the CCNet/RefinedWeb cleaning stage as a continuously ingesting
-    * pipeline) — per-batch cost is the batch's own explode + the join
-    * against the index scan; the corpus is never re-counted. `sink`
-    * receives the rewritten batch frame (id, text, n_lines, n_dropped).
-    */
-  def lineDedupStreamAgainstIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String, maxDocFreq: Int)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.LineDedup.loadLineIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.LineDedup.dropBoilerplateFromLoaded(ix, batch,
-        idCol, textCol, maxDocFreq)
-    }
-    }
-
-  /** Per-micro-batch duplicated-SPAN detection against a persisted
-    * [[graft.pipeline.SpanDedup.writeSpanIndex]] corpus: each arriving
-    * batch runs its own window pass, corpus-known windows flag
-    * unconditionally and batch-only repeats keep-first within the
-    * batch; `sink` receives that batch's merged span frame
-    * (id, span_start, span_end).
-    */
-  def spanStreamAgainstIndex(stream: DataFrame, indexPath: String,
-      idCol: String, textCol: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    lazy val ix = graft.pipeline.SpanDedup.loadSpanIndex(
-      stream.sparkSession, indexPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.SpanDedup.duplicateSpansFromLoaded(ix, batch,
-        idCol, textCol, scope)
-    }
-    }
-
-  /** Per-micro-batch benchmark DECONTAMINATION: each arriving batch is
-    * n-gram-overlapped against a FIXED benchmark set
-    * ([[graft.pipeline.Curation.contamination]]) and `sink` receives
-    * that batch's contamination report — the shape of a continuously
-    * ingesting pipeline screening against frozen eval suites. The
-    * benchmark DataFrame is a static (batch) frame captured once; its
-    * broadcast shingle set is re-broadcast per micro-batch, which at
-    * benchmark scale (MBs) is noise.
-    */
-  def contaminationStream(stream: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, benchTextCol: String,
-      shingleSize: Int = 3)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.Curation.contamination(batch, benchmark,
-        idCol, textCol, benchTextCol, shingleSize)
-    }
-
-  /** Drive a mergeable-sidecar fold ([[graft.pipeline.SidecarFold]])
-    * from a stream: each micro-batch folds with the state the previous
-    * fold returned, so the params, the stored side and the replay guard
-    * ride in memory instead of being re-read per micro-batch. A failed
-    * fold drops the state, and the next fold re-reads disk.
-    */
-  private def foldPerBatch[P](stream: DataFrame)(
-      fold: (DataFrame, Long, Option[graft.pipeline.SidecarFold[P]]) =>
-        graft.pipeline.SidecarFold[P])
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    var st: Option[graft.pipeline.SidecarFold[P]] = None
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      try st = Some(fold(batch, batchId, st))
-      catch { case e: Throwable => st = None; throw e }
-    }
-  }
-
-  /** Sidecar MAINTENANCE from a stream — the ingest side of the
-    * [[graft.pipeline.Bloom]] membership family: each micro-batch of
-    * keys folds into the persisted filter at `path` (which must
-    * already exist — [[graft.pipeline.Bloom.writeFilter]], possibly
-    * over zero rows). Bloom merge is bitwise OR — IDEMPOTENT — so a
-    * checkpoint-replayed batch is exactly a no-op and the maintained
-    * sidecar equals the build-at-once filter over the whole stream
-    * bit-for-bit, regardless of micro-batch placement (StreamOpsSpec
-    * pins word-array equality).
-    */
-  def bloomUpdateStream(stream: DataFrame, path: String,
-      keyCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
-      graft.pipeline.Bloom.updateFilter(batch.sparkSession, path, batch,
-        keyCol, st)
-    }
-
-  /** [[bloomUpdateStream]] for the prefix-SHARDED tier
-    * ([[graft.pipeline.ShardedBloom]]) — the daily-ingest stream of
-    * the 10^10–10^11-key filter: each micro-batch folds through the
-    * fully-distributed per-(shard, word) `bit_or` merge and the
-    * partitioned atomic swap (nothing driver-resident at any size).
-    * Same idempotent-OR replay argument as the flat tier: a
-    * checkpoint-replayed batch is a bit-level no-op, and the
-    * maintained sidecar equals the build-at-once filter over the
-    * whole stream regardless of micro-batch placement.
-    */
-  def shardedBloomUpdateStream(stream: DataFrame, path: String,
-      keyCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[(Int, Int, Int)](stream) { (batch, _, st) =>
-      graft.pipeline.ShardedBloom.updateFilter(batch.sparkSession, path,
-        batch, keyCol, st)
-    }
-
-  /** Sidecar maintenance for the [[graft.pipeline.Search]] BM25
-    * inverted index — the one persisted retrieval sidecar that
-    * previously had a serving stream but no update stream: each
-    * micro-batch of NEW documents folds in via
-    * [[graft.pipeline.Search.updateIndex]] (idempotent batch-stamped
-    * postings delta + one atomic df/stats/guard swap), so the
-    * maintained index serves scores BIT-IDENTICAL to a build-at-once
-    * index over the same corpus (postings disjoint by doc, df and
-    * collection stats counts-additive, avgdl the same IEEE divide).
-    * The foreachBatch batch id rides into the fold as the replay
-    * guard: checkpoint-recovered batches are skipped, not re-added.
-    */
-  def bm25UpdateStream(stream: DataFrame, path: String,
-      idCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[Map[String, Long]](stream) { (batch, batchId, st) =>
-      graft.pipeline.Search.updateIndex(batch.sparkSession, path, batch,
-        idCol, textCol, batchId = Some(batchId), carried = st)
-    }
-
-  /** Index maintenance for a persisted [[graft.pipeline.ProductQuant]]
-    * IVF-PQ index — the daily-ingest stream of the vector-serving
-    * tier: each micro-batch of NEW vectors routes + encodes with the
-    * STORED sidecar (coarse, codebook, residual flag) and lands as a
-    * cid-partitioned delta ([[graft.pipeline.ProductQuant
-    * .appendToIvfPqIndex]]), so the maintained index serves ADC
-    * results BIT-IDENTICAL to a full rebuild over the same corpus
-    * (appended codes use the exact build-time quantizers; readers
-    * union base + deltas under the same partition pruning). The
-    * foreachBatch batch id stamps the delta directory: a
-    * checkpoint-replayed batch OVERWRITES its own delta — exactly-once
-    * with no guard, because the delta dir is the fold's only state.
-    */
-  def ivfPqAppendStream(stream: DataFrame, path: String,
-      idCol: String, vecCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.pipeline.ProductQuant.appendToIvfPqIndex(
-          batch.sparkSession, path, batch, idCol, vecCol,
-          batchId = Some(batchId))
-    }
-
-  /** [[ivfPqAppendStream]] for the cosine IVF index
-    * ([[graft.pipeline.Similarity.appendToIvfIndex]] — raw or
-    * quantized per the stored sidecar); same exactly-once argument.
-    */
-  def ivfAppendStream(stream: DataFrame, path: String,
-      idCol: String, vecCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.pipeline.Similarity.appendToIvfIndex(
-          batch.sparkSession, path, batch, idCol, vecCol,
-          batchId = Some(batchId))
-    }
-
-  /** [[ivfPqAppendStream]] for the flat PQ index
-    * ([[graft.pipeline.ProductQuant.appendToPqIndex]]); same
-    * exactly-once argument.
-    */
-  def pqAppendStream(stream: DataFrame, path: String,
-      idCol: String, vecCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.pipeline.ProductQuant.appendToPqIndex(
-          batch.sparkSession, path, batch, idCol, vecCol,
-          batchId = Some(batchId))
-    }
-
-  /** Sidecar maintenance for the [[graft.pipeline.CountMin]] frequency
-    * grid: each micro-batch folds in by cellwise ADDITION, so the
-    * maintained grid equals the build-at-once sketch over the whole
-    * stream bit-for-bit (counts-additivity). Unlike the bloom's
-    * idempotent OR, additive folds must apply EXACTLY ONCE — and
-    * `foreachBatch` is at-least-once under checkpoint recovery — so
-    * the foreachBatch BATCH ID is threaded into the fold: the sidecar
-    * persists the last-folded id inside the same atomic cells swap and
-    * [[graft.pipeline.CountMin.updateSketch]] skips any batch at or
-    * below it, making a replayed batch a no-op instead of a
-    * double-count.
-    */
-  def cmsUpdateStream(stream: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, batchId, st) =>
-      graft.pipeline.CountMin.updateSketch(batch.sparkSession, path,
-        batch, batchId = Some(batchId), carried = st)
-    }
-
-  /** Per micro-batch drift probe against a persisted reference
-    * histogram ([[graft.pipeline.Drift.writeReference]]): each batch's
-    * tracked-column distributions compare against the FIXED reference
-    * sidecar and `sink` receives one report frame per batch (rows =
-    * specs, prefixed with `batch_id`) — the live data-quality monitor
-    * shape: a feed whose language mix or length profile lurches away
-    * from the reference trips a threshold within one micro-batch.
-    * The sidecar is KBs and the probe is one map-only bucketing pass
-    * over the batch plus arithmetic on `columns × buckets` rows, so
-    * the per-batch cost is the minimum any monitor could pay. Batch
-    * reports are INDEPENDENT (nothing folds), so checkpoint replay
-    * merely rewrites an identical report — idempotent by construction.
-    * The KB-sized reference sidecar loads ONCE, lazily at the FIRST
-    * batch (histogram cached, bounds collected) — constructing the
-    * writer runs no Spark jobs and requires no sidecar to exist yet, and
-    * nothing is cached for a stream that never starts; after first touch
-    * the [[kmeansAssignStream]] discipline holds: per-batch driver work
-    * stays flat no matter the trigger rate.
-    */
-  def driftStream(stream: DataFrame, refPath: String,
-      specs: Seq[graft.pipeline.Drift.Spec])(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    lazy val ref = graft.pipeline.Drift
-      .loadReference(stream.sparkSession, refPath)
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.pipeline.Drift.reportAgainstLoaded(batch, specs, ref)
-        .select(lit(batchId).as("batch_id"), col("*")), batchId)
-    }
-  }
-
-  /** Per micro-batch k-means assignment against a PERSISTED model
-    * ([[graft.pipeline.KMeans.writeModel]]): each batch's vectors take
-    * their argmax-cosine cluster via the map-only fixed-point kernel
-    * and `sink` receives the batch plus its `cid` column — the live
-    * corpus-routing shape (route incoming documents to topical shards,
-    * tag them for mixture accounting). Assignment is row-local given
-    * the fixed model, so the accumulated result is independent of
-    * micro-batch placement BY CONSTRUCTION — the one-shot batch
-    * assignment over the union is the exact contract. The KB-sized
-    * model loads once at stream construction, not per batch.
-    */
-  def kmeansAssignStream(stream: DataFrame, modelPath: String,
-      vecCol: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    val model = graft.pipeline.KMeans
-      .readModel(stream.sparkSession, modelPath)
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.pipeline.KMeans.assign(batch, vecCol, model), batchId)
-    }
-  }
-
-  /** Sidecar maintenance for the [[graft.pipeline.Sketches]] HLL
-    * distinct-count columns: per-register MAX union — SET-stable, so a
-    * checkpoint-replayed batch introduces no new items. Estimates are
-    * tolerance-stable, not bit-stable: sparse-mode promotion depends
-    * on batch partitioning and on extra unions, so any two fold
-    * histories over the same item set can differ by a few counts
-    * within the sketch's error bound. StreamOpsSpec pins stream-vs-
-    * direct-fold agreement and replay drift under 2%, and both within
-    * 5% of exact distinct counts.
-    */
-  def hllUpdateStream(stream: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
-      graft.pipeline.Sketches.updateSketches(batch.sparkSession, path,
-        batch, st)
-    }
-
-  /** Sidecar maintenance for the [[graft.pipeline.BottomK]] quantile
-    * sample: set-union on `(h, v)` then re-trim to k — IDEMPOTENT
-    * (re-folding any batch is a no-op), so the maintained sidecar
-    * equals the build-at-once sketch row-for-row regardless of
-    * micro-batch placement.
-    */
-  def bottomKUpdateStream(stream: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    foldPerBatch[org.apache.spark.sql.Row](stream) { (batch, _, st) =>
-      graft.pipeline.BottomK.updateSketch(batch.sparkSession, path, batch,
-        st)
-    }
-
-  /** Per micro-batch AS-OF join against a STATIC right side (the
-    * reference series — quotes, sensor calibrations, exchange rates —
-    * loaded once): each batch's left rows take the latest at-or-before
-    * (or forward/nearest) right row per key via
-    * [[graft.pipeline.Temporal.asofJoin]]. Every match is row-local
-    * given the fixed right frame, so the accumulated result is
-    * independent of micro-batch placement BY CONSTRUCTION — the
-    * one-shot batch join over the union is the exact contract.
-    */
-  def asofStreamAgainstStatic(stream: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTsCol: String, rightTsCol: String,
-      direction: String = "backward",
-      toleranceMicros: Option[Long] = None)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    probeIndexPerBatch(stream)(sink) { (batch, _) =>
-      graft.pipeline.Temporal.asofJoin(batch, right, keys, leftTsCol,
-        rightTsCol, direction, toleranceMicros)
-    }
-
-  /** Per micro-batch LM quality scoring against a PERSISTED bigram
-    * model ([[graft.pipeline.LanguageModel.writeLm]] sidecar — the
-    * train-once-score-daily shape): each batch's documents score
-    * row-locally against the fixed model, so the accumulated result is
-    * independent of micro-batch placement by construction.
-    */
-  def lmScoreStreamAgainstModel(stream: DataFrame, modelPath: String,
-      idCol: String, textCol: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    {
-    // model loads once per stream (the kmeans-model discipline)
-    lazy val m = graft.pipeline.LanguageModel.readLm(
-      stream.sparkSession, modelPath)
-    probeIndexPerBatch(stream)(sink) { (batch, scope) =>
-      graft.pipeline.LanguageModel.score(batch, idCol, textCol, m,
-        scope = scope)
-    }
-    }
 
   /** Native gap-session aggregation over an event-time stream:
     * watermark + `session_window` + count, Spark's built-in streaming

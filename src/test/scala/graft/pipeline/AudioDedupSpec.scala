@@ -122,12 +122,14 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestBase {
     val waves = Seq(batch.take(6), batch.drop(6))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
-      input.toDF().toDF("doc_id", "wav")
-        .select($"doc_id", Multimodal.asBlob($"wav", "unknown")
-          .as("blob")),
-      p, Fingerprint.audio64, "doc_id", "blob",
-      maxHamming = 8) { (pairs, _) =>
+    val q = graft.streaming.StreamOps.probeStream(
+        input.toDF().toDF("doc_id", "wav")
+          .select($"doc_id", Multimodal.asBlob($"wav", "unknown")
+            .as("blob")),
+        Multimodal.loadIndex(_, p, Fingerprint.audio64)) { (ix, batch, scope) =>
+      Multimodal.dedupPairsFromLoaded(ix, batch, "doc_id", "blob",
+        maxHamming = 8, scope = scope)
+    } { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()

@@ -117,8 +117,12 @@ class DriftSpec extends AnyFunSuite with SparkTestBase {
       .createTempDirectory("drift_out").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("drift_ckpt").toString
-    val q = graft.streaming.StreamOps.driftStream(stream, path, specs) {
-      (res, _) => res.write.mode("append").parquet(outDir)
+    val q = graft.streaming.StreamOps.probeStream(stream,
+        Drift.loadReference(_, path)) { (ref, batch, _) =>
+      Drift.reportAgainstLoaded(batch, specs, ref)
+    } { (res, batchId) =>
+      res.select(lit(batchId).as("batch_id"), col("*"))
+        .write.mode("append").parquet(outDir)
     }.option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.read.parquet(outDir)

@@ -158,12 +158,14 @@ class ImageDedupWideSpec extends AnyFunSuite with SparkTestBase {
     val (w1, w2) = (wave(50000L), wave(70000L))
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.StreamOps.fingerprintDedupStreamAgainstIndex(
-      input.toDF().toDF("doc_id", "img")
-        .select($"doc_id", Multimodal.asBlob($"img", "unknown")
-          .as("blob")),
-      path, Fingerprint.imageWide, "doc_id", "blob",
-      maxHamming = 8) { (pairs, _) =>
+    val q = graft.streaming.StreamOps.probeStream(
+        input.toDF().toDF("doc_id", "img")
+          .select($"doc_id", Multimodal.asBlob($"img", "unknown")
+            .as("blob")),
+        Multimodal.loadIndex(_, path, Fingerprint.imageWide)) { (ix, batch, scope) =>
+      Multimodal.dedupPairsFromLoaded(ix, batch, "doc_id", "blob",
+        maxHamming = 8, scope = scope)
+    } { (pairs, _) =>
         found ++= pairs.select("id_a", "id_b").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         ()

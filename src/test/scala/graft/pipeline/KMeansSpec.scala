@@ -222,8 +222,10 @@ class KMeansSpec extends AnyFunSuite with SparkTestBase {
       .createTempDirectory("kmeans_out").toString
     val ckpt = java.nio.file.Files
       .createTempDirectory("kmeans_ckpt").toString
-    val q = graft.streaming.StreamOps.kmeansAssignStream(stream,
-        modelPath, "vec") { (res, _) =>
+    val q = graft.streaming.StreamOps.probeStream(stream,
+        KMeans.readModel(_, modelPath)) { (m, batch, _) =>
+      KMeans.assign(batch, "vec", m)
+    } { (res, _) =>
       res.select("id", "cid").write.mode("append").parquet(outDir)
     }.option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()

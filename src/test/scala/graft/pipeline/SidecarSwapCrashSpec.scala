@@ -68,7 +68,7 @@ object CrashingFileSystem {
   * stream runs them: the crashing fold carries the state of the fold
   * before it, and the recovery folds start from disk, as a stream's
   * next fold does once a failure dropped its state. An exact-index
-  * append rewrites the index's params in place; every step of that
+  * append rewrites the index's params and its bloom; every step of each
   * rewrite is crashed too.
   */
 class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
@@ -240,22 +240,39 @@ class SidecarSwapCrashSpec extends AnyFunSuite with SparkTestBase {
       estimates(Sketches.columnSketches(keys(0, 80), Seq("key"))))
   }
 
-  test("exact index: every single and double crash of the params " +
-      "rewrite in an append leaves generation N or N+1 readable") {
-    // 20 base contents, 10 new in a, 10 new in b (31-39 and 0)
+  /** An exact index at generation N (20 base contents, 10 appended)
+    * and the append that makes N+1 (10 more: 31-39 and 0).
+    */
+  private def exactIndexAndAppend(): (String, String => Unit) = {
     val docs = (from: Long, to: Long) => (from to to).map(i =>
       (i, s"content ${i % 40}")).toDF("doc_id", "text")
     val (base, a, b) = (docs(1, 20), docs(21, 30), docs(31, 60))
     val template = Files.createTempDirectory("exact_template").toString
     Dedup.writeExactIndex(base, "doc_id", "text", template)
     Dedup.appendToExactIndex(spark, template, a, "doc_id", "text", 0L)
+    (template, path => Dedup.appendToExactIndex(spark, path, b, "doc_id",
+      "text", 1L))
+  }
+
+  test("exact index: every single and double crash of the params " +
+      "rewrite in an append leaves generation N or N+1 readable") {
+    val (template, append) = exactIndexAndAppend()
     def params(path: String) = {
       val p = SidecarIO.readParams(spark, s"$path/params")
       (p.getAs[Long]("distinctContents"), p.getAs[Double]("fpp"))
     }
-    val append = (path: String) => Dedup.appendToExactIndex(spark,
-      path, b, "doc_id", "text", 1L)
     crashEveryStep(template, path => () => append(path), append, params,
       (30L, 0.01), (40L, 0.01), scope = "/params")
+  }
+
+  test("exact index: every single and double crash of the bloom " +
+      "rewrite in an append leaves generation N or N+1 loadable") {
+    val (template, append) = exactIndexAndAppend()
+    def bloom(path: String) =
+      Dedup.loadExactIndex(spark, path).bloomBytes.toSeq
+    val appended = fresh(template)
+    append(appended)
+    crashEveryStep(template, path => () => append(path), append, bloom,
+      bloom(template), bloom(appended), scope = "/bloom")
   }
 }

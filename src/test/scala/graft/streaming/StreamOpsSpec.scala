@@ -118,8 +118,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       .createTempDirectory("graft_stream_shidx").toString
     Dedup.writeSimhashIndex(corpus, "doc_id", "text", path)
     val found = accumulate(w1, w2, Seq("doc_id", "text")) { stream => sink =>
-      StreamOps.dedupStreamAgainstSimhashIndex(stream, path,
-        "doc_id", "text", threshold = 0.7)(sink)
+      StreamOps.probeStream(stream, _ => ()) { (_, batch, scope) =>
+        Dedup.simhashPairsFromIndex(batch.sparkSession, path, batch,
+          "doc_id", "text", threshold = 0.7, scope = scope)
+      }(sink)
     }
     val expected = Seq(w1, w2).map { w =>
       pairSet(Dedup.simhashPairsFromIndex(spark, path,
@@ -137,8 +139,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       .createTempDirectory("graft_stream_ngidx").toString
     Dedup.writeNgramIndex(corpus, "doc_id", "text", path)
     val found = accumulate(w1, w2, Seq("doc_id", "text")) { stream => sink =>
-      StreamOps.dedupStreamAgainstNgramIndex(stream, path,
-        "doc_id", "text", threshold = 0.7)(sink)
+      StreamOps.probeStream(stream, _ => ()) { (_, batch, scope) =>
+        Dedup.ngramJaccardPairsFromIndex(batch.sparkSession, path, batch,
+          "doc_id", "text", threshold = 0.7, scope = scope)
+      }(sink)
     }
     val expected = Seq(w1, w2).map { w =>
       pairSet(Dedup.ngramJaccardPairsFromIndex(spark, path,
@@ -164,8 +168,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     Dedup.writeEmbeddingIndex(corpus, "vec_id", "embedding", path, dim = 64)
     val found = accumulate(w1, w2, Seq("vec_id", "embedding")) {
       stream => sink =>
-        StreamOps.dedupStreamAgainstEmbeddingIndex(stream, path,
-          "vec_id", "embedding", threshold = 0.999)(sink)
+        StreamOps.probeStream(stream, _ => ()) { (_, batch, scope) =>
+          Dedup.embeddingPairsFromIndex(batch.sparkSession, path, batch,
+            "vec_id", "embedding", threshold = 0.999, scope = scope)
+        }(sink)
     }
     val expected = Seq(w1, w2).map { w =>
       pairSet(Dedup.embeddingPairsFromIndex(spark, path,
@@ -195,9 +201,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, Seq[Float])](spark)
     val found = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Int)]
-    val q = StreamOps.annStreamAgainstIvfIndex(
-      input.toDF().toDF("qid", "qv"), path, "qid", "qv",
-      k = 3, nProbe = 2) { (topk, _) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("qid", "qv"),
+        Similarity.loadIvfIndex(_, path)) { (ix, batch, _) =>
+      Similarity.ivfTopKFromLoaded(ix, batch, "qid", "qv", k = 3,
+        nProbe = 2)
+    } { (topk, _) =>
         found ++= topk.select("query_id", "id", "rank").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         ()
@@ -234,9 +242,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, Seq[Float])](spark)
     val found = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Int)]
-    val q = StreamOps.annStreamAgainstIvfIndex(
-      input.toDF().toDF("qid", "qv"), path, "qid", "qv",
-      k = 2, nProbe = 2) { (topk, _) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("qid", "qv"),
+        Similarity.loadIvfIndex(_, path)) { (ix, batch, _) =>
+      Similarity.ivfTopKFromLoaded(ix, batch, "qid", "qv", k = 2,
+        nProbe = 2)
+    } { (topk, _) =>
         found ++= topk.select("query_id", "id", "rank").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         ()
@@ -269,7 +279,9 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, String)](spark)
     input.addData((1L, "click"), (2L, "view"))
     val stream = input.toDF().toDF("event_id", "event_type")
-    val out = processAll(StreamOps.flattenStream(c, stream), "flat_stream")
+    val out = processAll(
+      stream.select(c.flattenColumns(name => stream(name)): _*),
+      "flat_stream")
     assert(out.columns.toSeq == Seq("etype", "event_id", "chan"))
     assert(out.orderBy("event_id").collect().map(_.toSeq.toList).toList ==
       List(List("click", 1L, "s"), List("view", 2L, "s")))
@@ -289,8 +301,9 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     input.addData(rows.filter(_._1 % 2 == 0))
     input.addData(rows.filter(_._1 % 2 != 0))
     val out = processAll(
-      StreamOps.chunkStream(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", size = 16, overlap = 4), "chunk_stream")
+      graft.pipeline.Chunking.chunkDocuments(
+        input.toDF().toDF("doc_id", "text"), "doc_id", "text", size = 16,
+        overlap = 4), "chunk_stream")
     assert(out.orderBy("doc_id", "chunk_id").collect()
       .map(_.toSeq.toList).toList == batch)
     assert(batch.nonEmpty)
@@ -311,9 +324,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val found = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Long, Long)]
     val input = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.bm25SearchStream(
-      input.toDF().toDF("qid", "qtext"), path, "qid", "qtext",
-      k = 3) { (res, _) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("qid", "qtext"),
+        graft.pipeline.Search.readIndex(_, path)) { (ix, batch, _) =>
+      graft.pipeline.Search.search(ix, batch, "qid", "qtext", k = 3)
+    } { (res, _) =>
         found ++= res.collect().map(r =>
           (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
         ()
@@ -349,10 +363,13 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val found = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Int)]
     val input = MemoryStream[(Long, String, Seq[Float])](spark)
-    val q = StreamOps.hybridSearchStream(
-      input.toDF().toDF("qid", "qtext", "qv"), path, vecPath,
-      "vec_id", "embedding", "qid", "qtext", "qv",
-      kEach = 5, topK = 3) { (res, _) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("qid", "qtext", "qv"),
+        s => (graft.pipeline.Search.readIndex(s, path),
+          s.read.parquet(vecPath))) {
+      case ((ix, vecs), batch, _) =>
+        graft.pipeline.Hybrid.hybridSearchFromLoaded(ix, vecs, "vec_id",
+          "embedding", batch, "qid", "qtext", "qv", kEach = 5, topK = 3)
+    } { (res, _) =>
         found ++= res.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
         ()
@@ -432,9 +449,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, String)](spark)
     val got = scala.collection.mutable.Map.empty[Long,
       Set[(Long, String, String)]]
-    val q = StreamOps.curateStream(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text", cfg) {
-      (audit, batchId) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("doc_id", "text"),
+        _ => ()) { (_, batch, scope) =>
+      Curation.curate(batch, "doc_id", "text", cfg, scope)
+    } { (audit, batchId) =>
         got(batchId) = audit.collect()
           .map(r => (r.getLong(0), r.getString(1),
             if (r.isNullAt(2)) null else r.getString(2))).toSet
@@ -468,9 +486,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, String)](spark)
     val got = scala.collection.mutable.Map
       .empty[Long, Set[(Long, String, Long)]]
-    val q = StreamOps.dedupStreamAgainstExactIndex(
-        input.toDF().toDF("doc_id", "text"), path, "doc_id", "text") {
-      (decisions, batchId) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("doc_id", "text"),
+        Dedup.loadExactIndex(_, path)) { (ix, batch, _) =>
+      Dedup.exactKeepFromLoaded(ix, batch, "doc_id", "text")
+    } { (decisions, batchId) =>
         got(batchId) = decisions.collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
         ()
@@ -496,9 +515,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, String)](spark)
     val got = scala.collection.mutable.Map
       .empty[Long, Set[(Long, String, Long, Long)]]
-    val q = StreamOps.lineDedupStreamAgainstIndex(
-        input.toDF().toDF("doc_id", "text"), path, "doc_id", "text",
-        maxDocFreq = 2) { (rewritten, batchId) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("doc_id", "text"),
+        LineDedup.loadLineIndex(_, path)) { (ix, batch, _) =>
+      LineDedup.dropBoilerplateFromLoaded(ix, batch, "doc_id", "text",
+        maxDocFreq = 2)
+    } { (rewritten, batchId) =>
       got(batchId) = rewritten.collect().map(r =>
         (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
       ()
@@ -529,9 +550,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(Long, String)](spark)
     val got = scala.collection.mutable.Map
       .empty[Long, Set[(Long, Int, Int)]]
-    val q = StreamOps.spanStreamAgainstIndex(
-        input.toDF().toDF("doc_id", "text"), path, "doc_id", "text") {
-      (spans, batchId) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("doc_id", "text"),
+        SpanDedup.loadSpanIndex(_, path)) { (ix, batch, scope) =>
+      SpanDedup.duplicateSpansFromLoaded(ix, batch, "doc_id", "text", scope)
+    } { (spans, batchId) =>
         got(batchId) = spans.collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
         ()
@@ -552,9 +574,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val w2 = Seq((3L, "alpha beta gamma delta epsilon zeta"))
     val input = MemoryStream[(Long, String)](spark)
     val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Int, Int)]]
-    val q = StreamOps.contaminationStream(
-        input.toDF().toDF("doc_id", "text"), bench,
-        "doc_id", "text", "text") { (report, batchId) =>
+    val q = StreamOps.probeStream(input.toDF().toDF("doc_id", "text"),
+        _ => bench) { (b, batch, _) =>
+      Curation.contamination(batch, b, "doc_id", "text", "text")
+    } { (report, batchId) =>
       got(batchId) = report.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
       ()
@@ -584,9 +607,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[(String, Long, Long)](spark)
     val found = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Option[Double])]
-    val q = StreamOps.asofStreamAgainstStatic(
-        input.toDF().toDF("sym", "t_ts", "trade_id"), quotes,
-        Seq("sym"), "t_ts", "q_ts") { (res, _) =>
+    val q = StreamOps.probeStream(
+        input.toDF().toDF("sym", "t_ts", "trade_id"), _ => quotes) {
+      (right, batch, _) =>
+        Temporal.asofJoin(batch, right, Seq("sym"), "t_ts", "q_ts")
+    } { (res, _) =>
       found ++= res.select("trade_id", "px").collect()
         .map(r => (r.getLong(0),
           if (r.isNullAt(1)) None else Some(r.getDouble(1))))
@@ -655,8 +680,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
       path)
     val rows = docs.as[(Long, Long)].collect().toSeq
     val input = MemoryStream[(Long, Long)](spark)
-    val q = StreamOps.bottomKUpdateStream(
-      input.toDF().toDF("doc_id", "n_chars"), path).start()
+    val q = StreamOps.foldStream[org.apache.spark.sql.Row](
+        input.toDF().toDF("doc_id", "n_chars")) { (batch, _, st) =>
+      BottomK.updateSketch(batch.sparkSession, path, batch, st)
+    }.start()
     Seq(rows.take(30), rows.slice(30, 60), rows.drop(60)).foreach { w =>
       input.addData(w); q.processAllAvailable()
     }
@@ -669,6 +696,25 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(grid(BottomK.readSketch(spark, path)) ==
       grid(BottomK.sketch(docs, "doc_id", "n_chars", k = 50)))
   }
+
+  /** A writer that appends each micro-batch to the vector index at
+    * `path` under its `foreachBatch` id (`append(spark, path, batch,
+    * id)`), so a batch re-run from a checkpoint overwrites its own delta.
+    */
+  private def appendStream(append: (org.apache.spark.sql.SparkSession,
+      String, org.apache.spark.sql.DataFrame, Option[Long]) => Unit)(
+      stream: org.apache.spark.sql.DataFrame, path: String) =
+    stream.writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        append(batch.sparkSession, path, batch, Some(batchId))
+    }
+
+  /** The 60 8-dim vectors the append tests index. */
+  private lazy val appendRows = (0 until 60).map { i =>
+    (i.toLong, Seq.tabulate(8)(j => (((i * 13 + j * 7) % 32) - 16).toFloat))
+  }
+  private lazy val appendCorpus = appendRows.toDF("id", "v")
+    .select($"id", $"v".cast("array<float>").as("v"))
 
   /** Writes a vector index over the first 20 of 60 rows, appends the
     * rest through `stream` in two micro-batches, and checks that it
@@ -683,12 +729,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
         org.apache.spark.sql.DataFrame): Unit = {
     val dirBase = java.nio.file.Files
       .createTempDirectory("appendstream").toString
-    val rows = (0 until 60).map { i =>
-      (i.toLong, Seq.tabulate(8)(j =>
-        (((i * 13 + j * 7) % 32) - 16).toFloat))
-    }
-    val corpus = rows.toDF("id", "v")
-      .select($"id", $"v".cast("array<float>").as("v"))
+    val (rows, corpus) = (appendRows, appendCorpus)
     val queries = corpus.filter($"id" < 3)
       .select($"id".as("qid"), $"v".as("qv"))
     def served(path: String) = serve(path, queries)
@@ -716,7 +757,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     appendStreamServesBuildAtOnce("ivf-pq",
       (df, path) => ProductQuant.writeIvfPqIndex(df, "id", "v", coarse, cb,
         path, residuals = true),
-      StreamOps.ivfPqAppendStream(_, _, "id", "v"),
+      appendStream(ProductQuant.appendToIvfPqIndex(_, _, _, "id", "v", _)),
       ProductQuant.ivfPqTopKFromIndex(spark, _, _, "qid", "qv", k = 5,
         nProbe = 4))
   }
@@ -728,14 +769,14 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     appendStreamServesBuildAtOnce("quantized ivf",
       (df, path) => Similarity.writeIvfIndex(df, "id", "v", centroids,
         path, quantize = true, recallSampleN = 0),
-      StreamOps.ivfAppendStream(_, _, "id", "v"),
+      appendStream(Similarity.appendToIvfIndex(_, _, _, "id", "v", _)),
       Similarity.ivfTopKFromIndex(spark, _, _, "qid", "qv", k = 5,
         nProbe = 4))
     val cb = ProductQuant.plantedCodebook(2, 4, 8)
     appendStreamServesBuildAtOnce("pq",
       (df, path) => ProductQuant.writePqIndex(df, "id", "v", cb, path,
         recallSampleN = 0),
-      StreamOps.pqAppendStream(_, _, "id", "v"),
+      appendStream(ProductQuant.appendToPqIndex(_, _, _, "id", "v", _)),
       ProductQuant.adcTopKFromIndex(spark, _, _, "qid", "qv", k = 5))
   }
 
@@ -756,8 +797,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     Sketches.writeSketches(docs.limit(0), Seq("doc_id", "text"),
       s"$base/stream")
     val input = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.hllUpdateStream(
-      input.toDF().toDF("doc_id", "text"), s"$base/stream").start()
+    val q = StreamOps.foldStream[org.apache.spark.sql.Row](
+        input.toDF().toDF("doc_id", "text")) { (batch, _, st) =>
+      Sketches.updateSketches(batch.sparkSession, s"$base/stream", batch, st)
+    }.start()
     waves.foreach { w => input.addData(w); q.processAllAvailable() }
 
     // the stream fold agrees with the SAME waves folded directly to
@@ -804,8 +847,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     Bloom.writeFilter(Seq.empty[String].toDF("key"), "key",
       numBits = 4096, numHashes = 5, path)
     val input = MemoryStream[String](spark)
-    val q = StreamOps.bloomUpdateStream(
-      input.toDF().toDF("key"), path, "key").start()
+    val q = StreamOps.foldStream[org.apache.spark.sql.Row](
+        input.toDF().toDF("key")) { (batch, _, st) =>
+      Bloom.updateFilter(batch.sparkSession, path, batch, "key", st)
+    }.start()
     input.addData(all.take(200)); q.processAllAvailable()
     input.addData(all.slice(200, 400)); q.processAllAvailable()
     input.addData(all.drop(400)); q.processAllAvailable()
@@ -830,8 +875,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     ShardedBloom.writeFilter(all.take(50).toDF("key"), "key",
       numShards = 7, bitsPerShard = 4096, numHashes = 5, path)
     val input = MemoryStream[String](spark)
-    val q = StreamOps.shardedBloomUpdateStream(
-      input.toDF().toDF("key"), path, "key").start()
+    val q = StreamOps.foldStream[(Int, Int, Int)](
+        input.toDF().toDF("key")) { (batch, _, st) =>
+      ShardedBloom.updateFilter(batch.sparkSession, path, batch, "key", st)
+    }.start()
     input.addData(all.take(200)); q.processAllAvailable()
     input.addData(all.slice(200, 400)); q.processAllAvailable()
     input.addData(all.drop(400)); q.processAllAvailable()
@@ -879,40 +926,148 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("count-min restart replay: a batch re-run from a real checkpoint " +
-      "after its commit was lost is counted once") {
-    import graft.pipeline.CountMin
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("cmsrestart")
-    val (feed, ckpt, path) = (dir.resolve("feed"), dir.resolve("ckpt"),
-      dir.resolve("cms").toString)
-    Files.createDirectories(feed)
-    CountMin.writeSketch(Seq.empty[String].toDF("tok"), "tok",
-      depth = 4, width = 256, path)
-    val toks = for { i <- 1 to 40; _ <- 1 to i } yield "t" + i
-    val files = toks.grouped(205).toSeq
-    def land(i: Int): Unit = Files.write(feed.resolve(s"part-$i.txt"),
+  /** Runs `writer` over a file feed with a real checkpoint in `dir`,
+    * landing the four `files` (one record per line) a batch at a time:
+    * batches 0 and 1, then batch 1's commit is lost and the restarted
+    * stream re-runs batch 1 under its id before it takes files 2 and 3.
+    */
+  private def restartReplay(dir: java.nio.file.Path, files: Seq[Seq[String]],
+      feed: String => org.apache.spark.sql.DataFrame)(
+      writer: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.DataStreamWriter[
+          org.apache.spark.sql.Row]): Unit = {
+    import java.nio.file.Files
+    assert(files.size == 4)
+    val (feedDir, ckpt) = (dir.resolve("feed"), dir.resolve("ckpt"))
+    Files.createDirectories(feedDir)
+    def land(i: Int): Unit = Files.write(feedDir.resolve(s"part-$i.txt"),
       files(i).mkString("", "\n", "\n").getBytes("UTF-8"))
     def run(landing: Seq[Int]): Unit = {
-      val q = StreamOps.cmsUpdateStream(
-        spark.readStream.text(feed.toString).toDF("tok"), path)
+      val q = writer(feed(feedDir.toString))
         .option("checkpointLocation", ckpt.toString).start()
       try landing.foreach { i => land(i); q.processAllAvailable() }
       finally q.stop()
     }
-    // batches 0 and 1, then lose batch 1's commit: the restarted stream
-    // re-runs batch 1 under its id before it takes new files
     run(Seq(0, 1))
     val commits = ckpt.resolve("commits")
     Seq("1", ".1.crc").foreach(f => Files.delete(commits.resolve(f)))
     run(Seq(2, 3))
-    assert(files.size == 4)
     assert(Files.exists(commits.resolve("1")), "batch 1 was not re-run")
+  }
+
+  test("count-min restart replay: a batch re-run from a real checkpoint " +
+      "after its commit was lost is counted once") {
+    import graft.pipeline.CountMin
+    val dir = java.nio.file.Files.createTempDirectory("cmsrestart")
+    val path = dir.resolve("cms").toString
+    CountMin.writeSketch(Seq.empty[String].toDF("tok"), "tok",
+      depth = 4, width = 256, path)
+    val toks = for { i <- 1 to 40; _ <- 1 to i } yield "t" + i
+    restartReplay(dir, toks.grouped(205).toSeq,
+        spark.readStream.text(_).toDF("tok")) {
+      StreamOps.cmsUpdateStream(_, path)
+    }
     val grid = (df: org.apache.spark.sql.DataFrame) => df
       .select("r", "c", "cnt").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toList
     assert(grid(CountMin.readSketch(spark, path)._1) ==
       grid(CountMin.sketch(toks.toDF("tok"), "tok", 4, 256)))
+  }
+
+  test("BM25 restart replay: a batch re-run from a real checkpoint after " +
+      "its commit was lost is folded once") {
+    import graft.pipeline.Search
+    val dir = java.nio.file.Files.createTempDirectory("bm25restart")
+    val path = dir.resolve("idx").toString
+    val corpus = (1L to 60L).map(i =>
+      (i, s"term${i % 7} term${i % 5} term${i % 3} filler$i"))
+    Search.writeIndex(corpus.take(20).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    val json = corpus.drop(20).map { case (id, t) =>
+      s"""{"doc_id":$id,"text":"$t"}""" }
+    restartReplay(dir, json.grouped(10).toSeq,
+        spark.readStream.schema("doc_id long, text string").json(_)) {
+      StreamOps.bm25UpdateStream(_, path, "doc_id", "text")
+    }
+    val once = dir.resolve("once").toString
+    Search.writeIndex(corpus.toDF("doc_id", "text"), "doc_id", "text", once)
+    val queries = Seq((1L, "term0 term2"), (2L, "term4 filler10"),
+      (3L, "filler45 term6")).toDF("qid", "qtext")
+    def topK(p: String) = Search.searchFromIndex(spark, p, queries,
+        "qid", "qtext", k = 5)
+      .select("query_id", "rank", "doc_id", "score_q").collect()
+      .map(_.toSeq.toList).sortBy(_.toString).toList
+    assert(topK(path).nonEmpty && topK(path) == topK(once))
+  }
+
+  test("IVF-PQ restart replay: a batch re-run from a real checkpoint " +
+      "overwrites its own delta; the index serves bit-identical to " +
+      "build-at-once") {
+    import graft.pipeline.ProductQuant
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqrestart")
+    val coarse = ProductQuant.plantedCoarse(4, 8)
+    val cb = ProductQuant.plantedCodebook(2, 4, 8)
+    def write(df: org.apache.spark.sql.DataFrame, p: String): Unit =
+      ProductQuant.writeIvfPqIndex(df, "id", "v", coarse, cb, p,
+        residuals = true)
+    val path = dir.resolve("idx").toString
+    write(appendCorpus.filter($"id" < 20), path)
+    val json = appendRows.drop(20).map { case (id, v) =>
+      s"""{"id":$id,"v":[${v.mkString(",")}]}""" }
+    restartReplay(dir, json.grouped(10).toSeq,
+        spark.readStream.schema("id long, v array<float>").json(_)) {
+      appendStream(ProductQuant.appendToIvfPqIndex(_, _, _, "id", "v", _))(
+        _, path)
+    }
+    val deltas = new java.io.File(s"$path.delta").list()
+      .filter(_.startsWith("batch=")).sorted.toSeq
+    assert(deltas == (0 to 3).map(i => s"batch=$i"), deltas.toString)
+    val once = dir.resolve("once").toString
+    write(appendCorpus, once)
+    def served(p: String) = ProductQuant.ivfPqTopKFromIndex(spark, p,
+        appendCorpus.filter($"id" < 3).select($"id".as("qid"),
+          $"v".as("qv")), "qid", "qv", k = 5, nProbe = 4)
+      .collect().map(_.toSeq.toList).sortBy(_.toString).toList
+    assert(served(path).nonEmpty && served(path) == served(once))
+  }
+
+  test("probeStream loads its handle at the first batch: building the " +
+      "writer runs no job and needs no sidecar; the first batch then " +
+      "fails naming the missing path") {
+    import graft.pipeline.KMeans
+    val dir = java.nio.file.Files.createTempDirectory("lazyload").toString
+    val model = KMeans.train(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))
+      .toDF("id", "vec"), "id", "vec", k = 2, iters = 1)
+    KMeans.writeModel(spark, model, s"$dir/model")
+    def assignStream(modelPath: String,
+        input: MemoryStream[(Long, Seq[Float])]) =
+      StreamOps.probeStream(input.toDF().toDF("id", "vec"),
+          KMeans.readModel(_, modelPath)) { (m, batch, _) =>
+        KMeans.assign(batch, "vec", m)
+      } { (res, _) => res.collect(); () }
+    // the model is read when the first batch runs, not when the writer
+    // is built, for an existing and a missing sidecar alike
+    val (_, present) = graft.JobCount.of(spark)(
+      assignStream(s"$dir/model", MemoryStream[(Long, Seq[Float])](spark)))
+    assert(present == 0, s"building over a model ran $present jobs")
+    val missing = s"$dir/no_model"
+    val input = MemoryStream[(Long, Seq[Float])](spark)
+    val (writer, jobs) = graft.JobCount.of(spark)(
+      assignStream(missing, input))
+    assert(jobs == 0, s"building over a missing model ran $jobs jobs")
+    val (minhash, minhashJobs) = graft.JobCount.of(spark)(
+      StreamOps.dedupStreamAgainstIndex(
+        MemoryStream[(Long, String)](spark).toDF().toDF("doc_id", "text"),
+        s"$dir/no_index", "doc_id", "text") { (_, _) => () })
+    assert(minhashJobs == 0 && minhash != null)
+    val q = writer.start()
+    input.addData((1L, Seq(1f, 0f)))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.processAllAvailable())
+    q.stop()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(missing))),
+      s"the failure does not name $missing: $e")
   }
 
   /** A fresh minhash index over the sf0.001 corpus; [[probeBatch]] is

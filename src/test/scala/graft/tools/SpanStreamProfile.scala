@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Queries
+import graft.pipeline.SpanDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -48,8 +49,11 @@ object SpanStreamProfile {
         .schema(spark.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       var batchTimes = List.empty[Double]
-      val writer = graft.streaming.StreamOps.spanStreamAgainstIndex(
-        stream, idxPath, "doc_id", "text") { (res, bid) =>
+      val writer = graft.streaming.StreamOps.probeStream(stream,
+          SpanDedup.loadSpanIndex(_, idxPath)) { (ix, batch, scope) =>
+        SpanDedup.duplicateSpansFromLoaded(ix, batch, "doc_id", "text",
+          scope)
+      } { (res, bid) =>
           val b0 = System.nanoTime()
           res.write.mode("append").parquet(outDir)
           batchTimes ::= (System.nanoTime() - b0) / 1e9
